@@ -57,7 +57,7 @@ if [ "${SKIP_BENCH:-0}" != "1" ]; then
     rm -rf target/verify_out target/verify_out_sf01 /tmp/null_corpus
   fi
   sync
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     sbt -batch "runMain graft.Bench" | grep '"metric"' || rc=1
   if [ -f BENCH_LOCAL_LATEST.json ]; then
     cp BENCH_LOCAL_LATEST.json "BENCH_LOCAL_r${ROUND}.json"

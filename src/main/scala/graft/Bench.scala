@@ -121,33 +121,65 @@ object BenchShared {
     } finally graft.queries.LlmQueries.release(spark, sfDir, tag)
   }
 
-  /** Drain the listener bus so queued task-end events settle before a
-    * metric snapshot. A timeout (the bus's internal 10 s bound) is a
-    * bookkeeping lag, never a failure — log and continue.
+  /** One sweep step: measure `name`, log its progress line, then
+    * release the caches [[releaseAfter]] schedules after it. The live
+    * line matters: a multi-hour scale sweep that dies mid-run (OOM,
+    * disk, wall-clock) must still leave per-query evidence in the
+    * console log, not lose everything to the end-of-run record.
     */
-  def drainQuiet(spark: SparkSession): Unit =
-    try org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        System.err.println("[bench] listener-bus drain timed out; cpu/gc attribution may lag")
+  def sweepStep(
+      meter: QueryMeter, name: String,
+      build: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      bucketStats: scala.collection.mutable.Map[String, Long]): QueryReading = {
+    val r = meter.measure(name, build)
+    val label = meter.label
+    System.err.println(f"[$label] $name%-24s wall ${r.wallSec}%9.2f s  " +
+      f"user ${r.procUserSec}%9.1f  sys ${r.procSysSec}%8.1f  gc ${r.gcSec}%7.1f")
+    if (r.cacheBuilds.nonEmpty)
+      System.err.println(s"[$label] $name paid cache builds: ${r.cacheBuilds.mkString(", ")}")
+    releaseAfter.getOrElse(name, Nil).foreach(tag =>
+      guardAndRelease(meter.spark, meter.sfDir, tag, bucketStats, label))
+    r
+  }
+
+  /** The dedup pair-mass probe block (`{...}`) for a sweep record, or
+    * None when SPARK_GRAFT_NO_PROBE is set or the probe fails. Probe
+    * to guard (VERDICT r14 item 4): every full-sweep record carries the
+    * candidate-pair count, degree p50/p99/max, unbudgeted expansion
+    * rows and capped-bucket count that found the round-14 quadratic
+    * term, so a future super-linear drift shows up IN the record it
+    * distorts. Runs outside every timed region; it rebuilds the
+    * shingle/band/pair chain once and releases it after. Like the
+    * bucket guard it must never abort a sweep (NonFatal only).
+    */
+  def probeOrSkip(spark: SparkSession, dir: String, label: String): Option[String] =
+    if (sys.env.contains("SPARK_GRAFT_NO_PROBE")) None
+    else try {
+      val p = "{" + graft.tools.DedupScaleProbe.probeJson(spark, dir) + "}"
+      graft.queries.LlmQueries.clearCaches(Some(spark))
+      System.err.println(s"[$label] dedup scale probe: $p")
+      Some(p)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[$label] dedup scale probe failed: ${e.getMessage}")
+        None
     }
 }
 
-/** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line (driver contract → BENCH_r{N}.json).
-  *
-  * Each query is forced with a `noop`-format write, not `count()`:
-  * under count(), ColumnPruning deletes every projection expression
-  * (regexps, UDFs, vector math) and EliminateSorts drops ORDER BYs, so
-  * scalar-heavy queries would measure only a parquet row count. The
-  * noop sink evaluates every output column of every row and discards
-  * them — the closest local analog to writing results out. AQE stays
-  * on (default) so skewed shuffles re-plan as they would on a cluster.
+/** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR
+  * through the shared [[QueryMeter]] and prints one JSON line (driver
+  * contract → BENCH_r{N}.json). AQE stays on (default) so skewed
+  * shuffles re-plan as they would on a cluster.
   */
 object Bench {
+
+  /** First-pass wall time (s) at or above which a query is re-run once
+    * after the sweep (the GATE-2 recheck).
+    */
+  val RecheckSec = 10.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", BenchRecord.GateSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Subset runs (SPARK_GRAFT_ONLY) record no gate numbers, so the
     // startup mitigations below — which exist to keep the GATE wall
     // numbers clean — are skipped for them (ADVICE r13: the
@@ -234,24 +266,11 @@ object Bench {
         }
         (System.nanoTime() - t0) / 1e9
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events may ship TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftSparkExtensions) // vec_dot + optimizer rules
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.operators.BoundedWindow.muteNoPartitionWarning()
+    val spark = GraftSession.local()
     // Warm the JVM (codegen, parquet reader paths) so the first
     // measured query doesn't absorb session startup.
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10).collect()
-    // A failed query records -1 (sentinel) instead of its partial
-    // elapsed time, and lands in a "failed" list — a crash must not
-    // silently understate the total or hide from the recorded JSON.
-    //
     // Run order isolates the memoized-table family: the dedup/corpus
     // queries share the persisted tables (shingles, signatures,
     // bands, terms, cluster labels — see LlmQueries.memoized), and in
@@ -285,183 +304,49 @@ object Bench {
         corpusFamily.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))
         .filter(q => only.forall(_.contains(q._1)))
     // Cache lifecycle + band-bucket guard: shared with ScaleSweep via
-    // BenchShared (storage pressure taxes every later query with GC;
-    // on a loaded machine that tax measured 3-6× on family members in
-    // round 4).
-    val releaseAfter = BenchShared.releaseAfter
+    // BenchShared.sweepStep (storage pressure taxes every later query
+    // with GC; on a loaded machine that tax measured 3-6× on family
+    // members in round 4).
     val bucketStats = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // Attribution: which query paid each one-time memoized build. The
-    // family keeps shifting build costs between members across code
-    // changes; without this, per-query deltas are unreadable.
-    val cacheBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    // Contention-immune companion metrics: executor task CPU time and
-    // task JVM GC time per query, summed by a listener and snapshotted
-    // around each run (the bus is drained between queries so events
-    // land on the query that produced them). Wall time alone cannot
-    // distinguish "this query got slower" from "the machine was busy":
-    // real work moves BOTH wall and cpu; external contention moves
-    // wall while cpu stays flat; GC pressure shows up in gc. Round 5's
-    // unexplained same-code wall-time spikes motivated recording all
-    // three.
-    val cpuNsTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcMsTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          cpuNsTotal.addAndGet(m.executorCpuTime)
-          gcMsTotal.addAndGet(m.jvmGCTime)
-        }
-      }
-    })
-    val cpuSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val gcSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Process-state instrumentation (round-12, VERDICT r11 item 1b):
-    // the r11 bench of record measured bpe_apply at 168 s driver-side
-    // vs 3.5 s locally — single-threaded cpu with zero gc, i.e. a
-    // process-state pathology (codegen/JIT degradation in a long-lived
-    // session) the wall/cpu/gc record could not attribute. Record, per
-    // query: Catalyst codegen compilations (count delta of the public
-    // CodegenMetrics histogram) and JIT compiler time (CompilationMXBean
-    // delta, ms — rises when the JVM is still compiling, collapses to 0
-    // when CodeCache is full and the JIT has shut off); at end of run:
-    // CodeCache pool occupancy, so "generated code ran interpreted
-    // because the cache filled" is visible in the record.
-    val cgHist = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    val jitSupported = jitBean != null && jitBean.isCompilationTimeMonitoringSupported
-    val cgCompiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val jitMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // user/sys CPU split for the WHOLE process (round-12): the gate
-    // bench reproduced the r11 driver pathology locally — the same
-    // queries burned 12-130× more cpu_sec post-churn with gc = 0 and
-    // a healthy CodeCache, and the affected set (xml_scan's scratch
-    // write, the persisted-cache dedup family, knn_rerank's codebook
-    // read) all touch DISK. executorCpuTime conflates user+sys, so
-    // kernel time (page-cache writeback/reclaim under a dirty cache)
-    // is indistinguishable from recompute. /proc/self/stat utime/
-    // stime (Linux USER_HZ=100) splits them: a post-churn run whose
-    // inflation sits in sys_sec is an OS-state story, not a plan
-    // regression. (-1, -1) on non-Linux.
-    def procTimes(): (Long, Long) = try {
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")))
-      val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      (rest(11).toLong, rest(12).toLong)
-    } catch { case _: Throwable => (-1L, -1L) }
-    val procUserSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val procSysSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = ordered.map { case (name, fn) =>
-      val tagsBefore = graft.queries.LlmQueries.memoizedTags(spark)
-      // drain BEFORE the snapshot, not just after the query body:
-      // straggler events from the previous query's bucket-guard jobs
-      // (which run after its cpu read) or from a failed query (whose
-      // in-flight drain never ran) must settle into the baseline, not
-      // get charged to this query. A drain timeout is a bookkeeping
-      // lag, never a query failure — it only blurs attribution.
-      BenchShared.drainQuiet(spark)
-      val cpu0 = cpuNsTotal.get()
-      val gc0 = gcMsTotal.get()
-      val cg0 = cgHist.getCount
-      val jit0 = if (jitSupported) jitBean.getTotalCompilationTime else 0L
-      val (pu0, ps0) = procTimes()
-      val t0 = System.nanoTime()
-      val res = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        name -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          name -> -1.0
-      }
-      // flush this query's events (success OR failure) before reading
-      // its deltas; runs outside the timed region so the wall number
-      // stays pure query time
-      BenchShared.drainQuiet(spark)
-      cpuSec(name) = (cpuNsTotal.get() - cpu0) / 1e9
-      gcSec(name) = (gcMsTotal.get() - gc0) / 1e3
-      cgCompiles(name) = cgHist.getCount - cg0
-      jitMs(name) = if (jitSupported) jitBean.getTotalCompilationTime - jit0 else -1L
-      val (pu1, ps1) = procTimes()
-      procUserSec(name) = if (pu0 < 0 || pu1 < 0) -1.0 else (pu1 - pu0) / 100.0
-      procSysSec(name) = if (ps0 < 0 || ps1 < 0) -1.0 else (ps1 - ps0) / 100.0
-      // live progress line: a multi-hour scale sweep that dies mid-run
-      // (OOM, disk, wall-clock) must still leave per-query evidence in
-      // the console log, not lose everything to the end-of-run record
-      System.err.println(f"[bench] ${res._1}%-24s wall ${res._2}%9.2f s  " +
-        f"user ${procUserSec(name)}%9.1f  sys ${procSysSec(name)}%8.1f  " +
-        f"gc ${gcSec(name)}%7.1f")
-      val built = graft.queries.LlmQueries.memoizedTags(spark).diff(tagsBefore)
-      if (built.nonEmpty) {
-        cacheBuilds(name) = built.toSeq.sorted
-        System.err.println(s"[bench] $name paid cache builds: ${built.toSeq.sorted.mkString(", ")}")
-      }
-      releaseAfter.getOrElse(name, Nil).foreach(tag =>
-        BenchShared.guardAndRelease(spark, sfDir, tag, bucketStats, "bench"))
-      res
+    val meter = new QueryMeter(spark, sfDir, "bench")
+    val readings = ordered.map { case (name, fn) =>
+      BenchShared.sweepStep(meter, name, fn, bucketStats)
     }
+    val results = readings.map(r => r.name -> r.wallSec)
     graft.queries.LlmQueries.clearCaches(Some(spark))
     // GATE-2 self-evidencing recheck (VERDICT r14 item 1): twice
     // running, the driver record carried >15 s readings that a clean
     // same-code side run exonerated as machine contention — but the
     // attribution lived in round narrative, not in the record. So any
-    // query whose first-pass wall exceeded the threshold is re-run
+    // query whose first-pass wall exceeded RecheckSec is re-run
     // ONCE after the sweep (same JVM, caches released) and the record
     // carries BOTH readings: a contention spike rechecks fast and the
     // record self-clears; a real regression rechecks slow and stays
     // flagged. Memoized-family members may pay cache rebuilds here —
     // recorded per query so a slow recheck is attributable to builds
     // rather than misread as a regression.
-    val recheckThr = sys.env.get("SPARK_GRAFT_RECHECK_SEC")
-      .map(_.toDouble).getOrElse(10.0)
-    val recheckSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val recheckBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    if (!sys.env.contains("SPARK_GRAFT_NO_RECHECK")) {
-      results.filter(_._2 >= recheckThr).foreach { case (name, first) =>
-        val tags0 = graft.queries.LlmQueries.memoizedTags(spark)
-        val t0 = System.nanoTime()
-        val sec = try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] recheck of $name failed: ${e.getMessage}")
-            -1.0
+    val rechecks =
+      if (sys.env.contains("SPARK_GRAFT_NO_RECHECK")) Nil
+      else {
+        val rs = results.filter(_._2 >= RecheckSec).map { case (name, first) =>
+          val r = meter.measure(name, SparkEntry.queries(name))
+          System.err.println(f"[bench] recheck ${name}%-24s first ${first}%8.2f s" +
+            f" -> ${r.wallSec}%8.2f s" +
+            (if (r.cacheBuilds.nonEmpty) s"  (paid builds: ${r.cacheBuilds.mkString(", ")})"
+             else ""))
+          r
         }
-        recheckSec(name) = sec
-        val built = graft.queries.LlmQueries.memoizedTags(spark).diff(tags0)
-        if (built.nonEmpty) recheckBuilds(name) = built.toSeq.sorted
-        System.err.println(f"[bench] recheck ${name}%-24s first ${first}%8.2f s" +
-          f" -> ${sec}%8.2f s" +
-          (if (built.nonEmpty) s"  (paid builds: ${built.toSeq.sorted.mkString(", ")})" else ""))
-      }
-      // release anything the rechecks rebuilt
-      graft.queries.LlmQueries.clearCaches(Some(spark))
-    }
-    // Probe-to-guard promotion (VERDICT r14 item 4): every full-sweep
-    // record — gate AND 10×/100× scale snapshots — carries the dedup
-    // pair-mass attribution (candidate-pair count, degree p50/p99/max,
-    // unbudgeted expansion rows, capped-bucket count) that found the
-    // round-14 quadratic term, so a future super-linear drift shows up
-    // IN the record it distorts. Runs outside the timed region; cost
-    // is one rebuild of the shingle/band/pair chain, released after.
-    // runs for gate sweeps and for snapshot-routed scale runs (which
-    // are SPARK_GRAFT_ONLY subsets — exactly the records item 4 wants
-    // the attribution in); plain dev subset iterations skip it
-    val probeJson: Option[String] =
-      if (sys.env.contains("SPARK_GRAFT_NO_PROBE") ||
-          (only.isDefined && !sys.env.contains("SPARK_GRAFT_SNAPSHOT"))) None
-      else try {
-        val p = graft.tools.DedupScaleProbe.probeJson(spark, sfDir)
+        // release anything the rechecks rebuilt
         graft.queries.LlmQueries.clearCaches(Some(spark))
-        System.err.println(s"[bench] dedup scale probe: {$p}")
-        Some("{" + p + "}")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] dedup scale probe failed: ${e.getMessage}")
-          None
+        rs
       }
+    // the dedup probe runs for gate sweeps and for snapshot-routed
+    // scale runs (which are SPARK_GRAFT_ONLY subsets — exactly the
+    // records that want the attribution); plain dev subset iterations
+    // skip it
+    val probeJson: Option[String] =
+      if (only.isDefined && !sys.env.contains("SPARK_GRAFT_SNAPSHOT")) None
+      else BenchShared.probeOrSkip(spark, sfDir, "bench")
     bucketStats.foreach { case (k, v) =>
       System.err.println(s"[bench] bucket guard: $k = $v")
     }
@@ -470,29 +355,18 @@ object Bench {
     def secMapJson(m: Iterable[(String, Double)]): String = m.map { case (k, v) =>
       "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     }.mkString("{", ",", "}")
-    val qs = secMapJson(results)
-    val cpuJson = secMapJson(cpuSec)
-    val gcJson = secMapJson(gcSec)
+    def longMapJson(m: Iterable[(String, Long)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def tagsJson(rs: Seq[QueryReading]): String = rs.filter(_.cacheBuilds.nonEmpty)
+      .map(r => "\"" + r.name + "\":[" + r.cacheBuilds.map("\"" + _ + "\"").mkString(",") + "]")
+      .mkString("{", ",", "}")
+    def secCol(f: QueryReading => Double) = secMapJson(readings.map(r => r.name -> f(r)))
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val totalStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(total))
-    val buildsJson = cacheBuilds.map { case (q, tags) =>
-      "\"" + q + "\":[" + tags.map("\"" + _ + "\"").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val bucketsJson = bucketStats.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // "total_full" (not "total"): exactly ONE metric:"total" line is
-    // printed per run — the compact summary below, the one that fits
-    // whole inside the recorder's ~2000-char stdout tail window — so a
-    // consumer grepping for it can never double-count or pick the
-    // truncated head of this long line.
-    val cpuTotalStr = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(cpuSec.values.sum))
-    val gcTotalStr = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(gcSec.values.sum))
-    def longMapJson(m: Iterable[(String, Long)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val cpuTotal = readings.map(_.cpuSec).sum
+    val gcTotal = readings.map(_.gcSec).sum
+    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // End-of-run JIT CodeCache occupancy (segmented pools on JDK 17):
     // a full pool (used ≈ max on the non-profiled segment) means the
     // JIT stopped compiling and hot loops run interpreted — the
@@ -507,16 +381,16 @@ object Bench {
             (u.getUsed >> 20) + ",\"max_mb\":" + (u.getMax >> 20) + "}"
         }.mkString("{", ",", "}")
     }
-    val cgJson = longMapJson(cgCompiles)
-    val jitJson = longMapJson(jitMs)
     val syncFullStr = String.format(java.util.Locale.ROOT, "%.1f", Double.box(syncSec))
-    val recheckJson = secMapJson(recheckSec)
-    val recheckBuildsJson = recheckBuilds.map { case (q, tags) =>
-      "\"" + q + "\":[" + tags.map("\"" + _ + "\"").mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val recheckSec = rechecks.map(r => r.name -> r.wallSec)
     val probeField = probeJson.map(p => s""","probe":$p""").getOrElse("")
+    // "total_full" (not "total"): exactly ONE metric:"total" line is
+    // printed per run — the compact summary below, the one that fits
+    // whole inside the recorder's ~2000-char stdout tail window — so a
+    // consumer grepping for it can never double-count or pick the
+    // truncated head of this long line.
     val full =
-      s"""{"metric":"total_full","value":$totalStr,"unit":"sec","queries":$qs,"cpu_sec":$cpuJson,"gc_sec":$gcJson,"cpu_total":$cpuTotalStr,"gc_total":$gcTotalStr,"proc_user_sec":${secMapJson(procUserSec)},"proc_sys_sec":${secMapJson(procSysSec)},"sync_sec":$syncFullStr,"failed":$failed,"cache_builds":$buildsJson,"bucket_stats":$bucketsJson,"recheck_sec":$recheckJson,"recheck_builds":$recheckBuildsJson,"codegen_compiles":$cgJson,"jit_ms":$jitJson,"code_cache":$codeCacheJson$probeField,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":${f3(total)},"unit":"sec","queries":${secMapJson(results)},"cpu_sec":${secCol(_.cpuSec)},"gc_sec":${secCol(_.gcSec)},"cpu_total":${f3(cpuTotal)},"gc_total":${f3(gcTotal)},"proc_user_sec":${secCol(_.procUserSec)},"proc_sys_sec":${secCol(_.procSysSec)},"sync_sec":$syncFullStr,"failed":$failed,"cache_builds":${tagsJson(readings)},"bucket_stats":${longMapJson(bucketStats)},"recheck_sec":${secMapJson(recheckSec)},"recheck_builds":${tagsJson(rechecks)},"codegen_compiles":${longMapJson(readings.map(r => r.name -> r.codegenCompiles))},"jit_ms":${longMapJson(readings.map(r => r.name -> r.jitMs))},"code_cache":$codeCacheJson$probeField,"sf":"$sfDir"}"""
     // The harness that records this output keeps a ~2000-char tail of
     // the COMBINED console stream and parses the last JSON line it
     // finds there. Every round through r12 recorded `parsed: null`,
@@ -541,9 +415,8 @@ object Bench {
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not persist full results: ${e.getMessage}") }
     System.err.println(s"[bench] full per-query record -> $snapshotFile")
-    val compact = BenchRecord.compactLine(results, cpuSec.values.sum,
-      gcSec.values.sum, syncSec, bucketStats.toSeq, snapshotFile, sfDir,
-      recheckSec.toSeq)
+    val compact = BenchRecord.compactLine(results, cpuTotal, gcTotal, syncSec,
+      bucketStats.toSeq, snapshotFile, sfDir, recheckSec)
     // Belt-and-braces for the recorder (VERDICT r13 item 1): besides
     // printing the compact line (raw, now that build.sbt passes forked
     // stdout through unprefixed), publish the SAME line to a fixed

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{DriftReport, SchemaDiff}
 import graft.sources.Cricsheet
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Runnable end-to-end demo of the domain flow: cricsheet ingest →
@@ -12,14 +11,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/src/test/resources/fixtures")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events may ship TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val matches = Cricsheet.readMatches(spark, dir)
     val dels = Cricsheet.deliveries(matches)

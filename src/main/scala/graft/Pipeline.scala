@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * file_key, so re-processing a file replaces its own partition
   * instead of appending a duplicate. A crash between the staging write
   * and the ledger update therefore costs a re-run, never a
-  * double-count; losing the state dir mid-swap degrades to
-  * at-least-once processing over idempotent writes.
+  * double-count; a crash between the two moves of the ledger swap is
+  * finished by the next run's `loadState`.
   */
 object Pipeline {
 
@@ -50,8 +50,15 @@ object Pipeline {
   private[graft] def globEscape(name: String): String =
     name.replaceAll("([\\\\\\[\\]{}*?])", "\\\\$1")
 
+  /** The ledger, finishing a swap a crash interrupted first: `state`
+    * missing while `state.old` exists means the run died between its
+    * two moves, after `state.tmp` was fully written — move it into
+    * place instead of treating all history as new.
+    */
   private def loadState(spark: SparkSession, statePath: String): DataFrame = {
     val p = new java.io.File(statePath)
+    if (!p.exists() && new java.io.File(s"$statePath.old").exists())
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$statePath.tmp"), p.toPath)
     if (p.exists() && p.listFiles() != null && p.listFiles().nonEmpty)
       spark.read.parquet(statePath)
     else {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,17 +12,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"no such queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events may ship TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftSparkExtensions) // vec_dot + optimizer rules
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.operators.BoundedWindow.muteNoPartitionWarning()
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // A query that fails here silently vanishes from the driver's
     // correctness record (its row simply never appears) — round 7 lost

@@ -57,8 +57,6 @@ object TextFunctions {
       (length(c) - length(regexp_replace(c, pattern, ""))).cast("double") / length(c))
 
   def punctRatio(c: Column): Column = charRatio(c, "[^A-Za-z0-9\\s]")
-  def upperRatio(c: Column): Column = charRatio(c, "[A-Z]")
-  def digitRatio(c: Column): Column = charRatio(c, "[0-9]")
 
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-sweep harness for the heavy dedup/ANN family: generates a
@@ -34,17 +33,7 @@ object ScaleSweep {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse("target/scale_corpus")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events may ship TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.operators.BoundedWindow.muteNoPartitionWarning()
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     // ---- corpus generation ------------------------------------------
@@ -393,39 +382,14 @@ object ScaleSweep {
     require(drifted.isEmpty,
       s"family names no longer in SparkEntry.queries: ${drifted.mkString(", ")}")
     val bucketStats = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val meter = new graft.QueryMeter(spark, outDir, "scale")
     val results = family.map { name =>
-      val t0 = System.nanoTime()
-      val sec = try {
-        graft.SparkEntry.queries(name)(spark, outDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[scale] $name failed: ${e.getMessage}")
-          -1.0
-      }
-      System.err.println(f"[scale] $name%-22s ${sec}%8.2f s")
-      graft.BenchShared.releaseAfter.getOrElse(name, Nil).foreach(tag =>
-        graft.BenchShared.guardAndRelease(spark, outDir, tag, bucketStats, "scale"))
-      name -> sec
+      val r = graft.BenchShared.sweepStep(meter, name, graft.SparkEntry.queries(name), bucketStats)
+      name -> r.wallSec
     }
     graft.queries.LlmQueries.clearCaches(Some(spark))
-    // Probe-to-guard promotion (VERDICT r14 item 4): the sweep record
-    // carries the dedup pair-mass attribution at the swept factor, so
-    // a future super-linear term is visible in the same JSON as the
-    // timings it would distort. Outside the timed region; rebuilds the
-    // shingle/band/pair chain once, released after.
-    val probeField =
-      if (sys.env.contains("SPARK_GRAFT_NO_PROBE")) ""
-      else try {
-        val p = DedupScaleProbe.probeJson(spark, outDir)
-        graft.queries.LlmQueries.clearCaches(Some(spark))
-        s""","probe":{$p}"""
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] dedup scale probe failed: ${e.getMessage}")
-          ""
-      }
+    val probeField = graft.BenchShared.probeOrSkip(spark, outDir, "scale")
+      .map(p => s""","probe":$p""").getOrElse("")
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }

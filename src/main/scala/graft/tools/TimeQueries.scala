@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** A/B measurement loop for individual queries: runs each named query
-  * REPS times in one JVM against the noop sink and prints per-rep wall
-  * plus the executor-task cpu/gc deltas. Rep 1 carries
+  * REPS times in one JVM through the shared [[graft.QueryMeter]] and
+  * prints per-rep wall (-1 for a failed rep) plus the executor-task
+  * cpu/gc deltas. Rep 1 carries
   * planning+codegen+JIT warmup; later reps isolate the data-path cost,
   * so a code change's effect is readable without the ordering /
   * ambient-writeback noise a single cold pass carries (the r15 gate
@@ -25,39 +24,16 @@ object TimeQueries {
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"no such queries: ${unknown.mkString(", ")}")
     val coldCache = sys.env.contains("SPARK_GRAFT_COLD_CACHE")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.operators.BoundedWindow.muteNoPartitionWarning()
+    val spark = graft.GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect()
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) { cpuNs.addAndGet(m.executorCpuTime); gcMs.addAndGet(m.jvmGCTime) }
-      }
-    })
+    val meter = new graft.QueryMeter(spark, sfDir, "time")
     names.foreach { n =>
       graft.queries.LlmQueries.clearCaches(Some(spark))
       (1 to reps).foreach { r =>
         if (coldCache && r > 1) graft.queries.LlmQueries.clearCaches(Some(spark))
-        graft.BenchShared.drainQuiet(spark)
-        val c0 = cpuNs.get(); val g0 = gcMs.get()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        graft.BenchShared.drainQuiet(spark)
-        println(f"[time] $n%-24s rep $r%2d  wall $wall%8.3f s  " +
-          f"cpu ${(cpuNs.get() - c0) / 1e9}%8.3f  gc ${(gcMs.get() - g0) / 1e3}%6.2f")
+        val m = meter.measure(n, graft.SparkEntry.queries(n))
+        println(f"[time] $n%-24s rep $r%2d  wall ${m.wallSec}%8.3f s  " +
+          f"cpu ${m.cpuSec}%8.3f  gc ${m.gcSec}%6.2f")
       }
     }
     spark.stop()

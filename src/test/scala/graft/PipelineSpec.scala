@@ -95,6 +95,29 @@ class PipelineSpec extends SparkSpecBase {
     assert(r9.stagedRows == before) // overwrote their partitions, not appended
   }
 
+  test("a crash between the two ledger-swap moves is finished, not reprocessed") {
+    val landing = tmpDir("pipe_swap_landing")
+    val work = tmpDir("pipe_swap_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "batch1.zip", Map("m1.json" -> tiny, "m2.json" -> tiny))
+    assert(Pipeline.runOnce(spark, landing, work).newFiles == 2)
+    import spark.implicits._
+    def ledger(): Seq[String] =
+      spark.read.parquet(s"$work/state").select($"file_key").as[String].collect().toSeq.sorted
+    val before = ledger()
+
+    // the crash: state already moved to state.old, the fully written
+    // state.tmp not yet moved into place
+    val state = Paths.get(s"$work/state")
+    Files.move(state, Paths.get(s"$work/state.old"))
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$work/state.old"), new java.io.File(s"$work/state.tmp"))
+
+    val r = Pipeline.runOnce(spark, landing, work)
+    assert(r.newFiles == 0)
+    assert(ledger() == before)
+  }
+
   test("drift notifier fires exactly when drift is detected, and a failing one cannot fail the run") {
     val landing = tmpDir("pipe_notify_landing")
     val work = tmpDir("pipe_notify_work")

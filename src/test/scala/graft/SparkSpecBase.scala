@@ -3,25 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM, built by
+  * the production [[GraftSession]] (so the engine's Catalyst extensions
+  * are wired the way every harness wires them — SqlSurfaceSpec asserts
+  * the injected functions resolve from bare SQL). Pinned at 4 cores so
+  * partition counts in plan assertions do not vary with the machine.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events may ship TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false")
-      // the production wiring for the engine's Catalyst extensions —
-      // the whole suite runs through it (SqlSurfaceSpec asserts the
-      // injected functions resolve from bare SQL)
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.operators.BoundedWindow.muteNoPartitionWarning()
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {
