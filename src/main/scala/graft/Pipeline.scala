@@ -2,7 +2,12 @@ package graft
 
 import graft.operators.{ColumnMeta, DriftReport, Flatten, SchemaDiff, StateMerge}
 import graft.sources.{Cricsheet, Sinks, ZipIngest}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,6 +33,14 @@ import org.apache.spark.sql.functions._
   * and the ledger update therefore costs a re-run, never a
   * double-count; a crash between the two moves of the ledger swap is
   * finished by the next run's `loadState`.
+  *
+  * The ledger (`workDir/state`) holds one [[LedgerRow]] per processed
+  * file_key: the reference's four flags plus `staged_rows`, the rows
+  * that key's staging partition held when the run that processed it
+  * wrote it (0 for a corrupt file). `RunResult.stagedRows` is their
+  * sum, so a run never re-reads staged history: every bookkeeping step
+  * costs O(new files). A ledger written before `staged_rows` existed is
+  * migrated once, from one count per key over staging.
   */
 object Pipeline {
 
@@ -50,21 +63,100 @@ object Pipeline {
   private[graft] def globEscape(name: String): String =
     name.replaceAll("([\\\\\\[\\]{}*?])", "\\\\$1")
 
-  /** The ledger, finishing a swap a crash interrupted first: `state`
-    * missing while `state.old` exists means the run died between its
-    * two moves, after `state.tmp` was fully written — move it into
-    * place instead of treating all history as new.
+  /** One ledger row: the reference's per-file flags (the shape of
+    * [[operators.FileState]]) plus the rows the file left in staging.
     */
-  private def loadState(spark: SparkSession, statePath: String): DataFrame = {
+  case class LedgerRow(
+      file_key: String,
+      ingested: Boolean,
+      crawled: Boolean,
+      transformed: Boolean,
+      loaded: Boolean,
+      staged_rows: Long)
+
+  private val LedgerSchema = Encoders.product[LedgerRow].schema
+  private val SchemaLogSchema = Encoders.product[ColumnMeta].schema
+
+  /** Data files of a directory written by Spark (not `_SUCCESS`, not
+    * `.crc` side files), empty when the directory does not exist.
+    */
+  private def dataFiles(dir: Path, conf: Configuration): Seq[Path] = {
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+  }
+
+  private def footer[T](file: Path, conf: Configuration)(read: ParquetFileReader => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try read(reader)
+    finally reader.close()
+  }
+
+  /** Rows staged under each key, summed on the driver from the parquet
+    * footers of its `file_key=` partition: no Spark job, one listing
+    * and a few footer reads per key. A key without a partition (its
+    * file was corrupt) has 0.
+    */
+  private def stagedRowsOf(spark: SparkSession, stagingDir: String, keys: Seq[String]): Map[String, Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    keys.map { k =>
+      val part = new Path(stagingDir, ExternalCatalogUtils.getPartitionPathString("file_key", k))
+      k -> dataFiles(part, conf).map(f => footer(f, conf)(_.getRecordCount)).sum
+    }.toMap
+  }
+
+  /** Write the ledger via temp + swap (the ledger is input and output
+    * of a run); Files.move throws on failure instead of renameTo's
+    * silent false. One file: the ledger is metadata, and a one-file
+    * ledger is one task to read on the next run.
+    */
+  private def swapState(ledger: DataFrame, statePath: String): Unit = {
+    val tmp = s"$statePath.tmp"
+    Sinks.stageParquet(ledger.coalesce(1), tmp)
+    val stateDir = java.nio.file.Paths.get(statePath)
+    if (java.nio.file.Files.exists(stateDir)) {
+      val old = new java.io.File(s"$statePath.old")
+      if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
+      java.nio.file.Files.move(stateDir, old.toPath)
+    }
+    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), stateDir)
+  }
+
+  /** The ledger, read with its explicit schema (no footer-inference
+    * job), after two repairs:
+    *  - a swap a crash interrupted is finished first: `state` missing
+    *    while `state.old` exists means the run died between its two
+    *    moves, after `state.tmp` was fully written — move it into place
+    *    instead of treating all history as new;
+    *  - a ledger whose footer schema lacks `staged_rows` (written before
+    *    the column existed) would read it as null and undercount, so it
+    *    is migrated once: one count per key over staging, 0 for keys
+    *    with no staged rows, written back through the swap.
+    */
+  private def loadState(spark: SparkSession, statePath: String, stagingDir: String): DataFrame = {
+    import spark.implicits._
     val p = new java.io.File(statePath)
     if (!p.exists() && new java.io.File(s"$statePath.old").exists())
       java.nio.file.Files.move(java.nio.file.Paths.get(s"$statePath.tmp"), p.toPath)
-    if (p.exists() && p.listFiles() != null && p.listFiles().nonEmpty)
-      spark.read.parquet(statePath)
-    else {
-      import spark.implicits._
-      Seq.empty[operators.FileState].toDF()
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(new Path(p.getAbsolutePath), conf).headOption.foreach { f =>
+      if (!footer(f, conf)(_.getFooter.getFileMetaData.getSchema.containsField("staged_rows"))) {
+        val counts =
+          if (new java.io.File(stagingDir).exists())
+            spark.read.schema("file_key string").parquet(stagingDir)
+              .groupBy("file_key").agg(count(lit(1)).as("staged_rows"))
+          else Seq.empty[(String, Long)].toDF("file_key", "staged_rows")
+        swapState(
+          spark.read.parquet(statePath)
+            .join(counts, Seq("file_key"), "left")
+            .withColumn("staged_rows", coalesce(col("staged_rows"), lit(0L)))
+            .select(LedgerSchema.fieldNames.map(col).toIndexedSeq: _*),
+          statePath)
+      }
     }
+    if (p.exists()) spark.read.schema(LedgerSchema).parquet(statePath)
+    else Seq.empty[LedgerRow].toDF()
   }
 
   /** Executor-side extraction of one partition of (entry_name, bytes)
@@ -116,12 +208,14 @@ object Pipeline {
     * @param landingDir  dir of zip archives of match JSON (the S3 bucket)
     * @param workDir     scratch root: extracted files, staging, state, schema log
     * @param maxDriverRows bound on the two metadata collects that come
-    *   to the driver (new-entry NAMES for the scoped read, schema-log
-    *   rows for the drift diff). Both are metadata — tiny at the
-    *   reference's daily cadence — but a million-file backfill would
-    *   otherwise accrete an unbounded driver array; past the bound the
-    *   run fails LOUDLY with the batching remedy instead of slowly
-    *   OOMing the driver.
+    *   to the driver: the new files' (entry name, file_key) pairs, one
+    *   bounded collect that both selects the batch and sizes it, and
+    *   the schema-log rows for the drift diff. The per-key footer reads
+    *   and the ledger rows built on the driver follow the first bound.
+    *   Both are metadata — tiny at the reference's daily cadence — but
+    *   a million-file backfill would otherwise accrete an unbounded
+    *   driver array; past the bound the run fails LOUDLY with the
+    *   batching remedy instead of slowly OOMing the driver.
     * @param notifyDrift drift-notification transport — the reference emails
     *   the same report via SNS (`notifyChanges`,
     *   /root/reference/airflow-setup/Scripts/compare_schema.py:106-124);
@@ -143,6 +237,8 @@ object Pipeline {
     val stagingDir = s"$workDir/staging"
     val statePath = s"$workDir/state"
     val schemaPath = s"$workDir/schema_log"
+    // one row past the bound tells "over it" apart from "at it"
+    val collectBound = (maxDriverRows + 1).min(Int.MaxValue).toInt
 
     // 1. unzip fan-out (S2), idempotent per entry: anti-join against
     //    the ledger replaces the reference's per-file head_object loop.
@@ -154,7 +250,7 @@ object Pipeline {
     //    collisions resolve deterministically too.
     val entries = ZipIngest.unzipEntries(spark, landingDir)
       .withColumn("file_key", regexp_replace(col("entry_name"), ExtensionRe, ""))
-    val state = loadState(spark, statePath)
+    val state = loadState(spark, statePath, stagingDir)
     val latestWins = Window.partitionBy(col("file_key"))
       .orderBy(col("zip_path").desc, col("entry_name").desc)
     val newEntries = StateMerge
@@ -163,12 +259,13 @@ object Pipeline {
       .filter(col("_rn") === 1).drop("_rn")
       .persist()
     try {
-      val nNew = newEntries.count()
-      if (nNew == 0) return RunResult(0, 0, "no new files", hadDrift = false)
-      if (nNew > maxDriverRows)
+      val picked = newEntries.select("entry_name", "file_key").as[(String, String)]
+        .limit(collectBound).collect().toSeq
+      if (picked.isEmpty) return RunResult(0, 0, "no new files", hadDrift = false)
+      if (picked.length > maxDriverRows)
         throw new IllegalStateException(
-          s"Pipeline.runOnce: $nNew new files exceeds maxDriverRows=$maxDriverRows — " +
-            "the scoped read collects new-entry NAMES to the driver. Backfills this " +
+          s"Pipeline.runOnce: more than maxDriverRows=$maxDriverRows new files — " +
+            "the run collects new-entry names and keys to the driver. Backfills this " +
             "large should run in batches (ingest the landing dir in slices and call " +
             "runOnce per slice), or raise maxDriverRows if the driver has headroom.")
 
@@ -182,13 +279,11 @@ object Pipeline {
 
       // 3. read ONLY the new matches (the reference scopes its crawler
       //    to new prefixes the same way) — explicit schema fast path.
-      //    Names are metadata: collecting them (not contents) is fine.
       //    Entry names are glob-escaped: Hadoop path resolution treats
       //    [ ] { } * ? as patterns, so an entry like 'm[1].json' would
       //    otherwise be written literally but read as a (non-matching)
       //    glob.
-      val newPaths = newEntries.select("entry_name").as[String].collect()
-        .map(n => s"$extractedDir/${globEscape(n)}").toSeq
+      val newPaths = picked.map { case (n, _) => s"$extractedDir/${globEscape(n)}" }
       val allMatches = Cricsheet.readMatchFiles(spark, newPaths)
       // corrupt files degrade to null rows (PERMISSIVE) — filter them
       // out of staging and surface the count instead of failing the run.
@@ -217,22 +312,23 @@ object Pipeline {
       val inferred = Cricsheet.readMatchFiles(spark, newPaths, inferSchema = true).schema
       val newCols = SchemaDiff.leafColumns(inferred)
         .filterNot(c => c.name == "match_file" || c.name.startsWith("_corrupt_record"))
+      val logged = new java.io.File(schemaPath).exists()
       val oldCols =
-        if (new java.io.File(schemaPath).exists()) {
-          val log = spark.read.parquet(schemaPath)
-          val nCols = log.count()
-          if (nCols > maxDriverRows)
+        if (logged) {
+          val log = spark.read.schema(SchemaLogSchema).parquet(schemaPath).as[ColumnMeta]
+            .limit(collectBound).collect().toSeq
+          if (log.length > maxDriverRows)
             throw new IllegalStateException(
-              s"Pipeline.runOnce: schema log holds $nCols columns, exceeding " +
-                s"maxDriverRows=$maxDriverRows — the drift diff collects the log to the " +
-                "driver. A leaf-column count this size means runaway schema inference " +
-                "(e.g. map-typed data inferred as per-key struct fields); fix the input " +
-                "schema, or raise maxDriverRows if the driver has headroom.")
-          log.as[ColumnMeta].collect().toSeq
+              s"Pipeline.runOnce: schema log holds more than maxDriverRows=$maxDriverRows " +
+                "columns — the drift diff collects the log to the driver. A leaf-column " +
+                "count this size means runaway schema inference (e.g. map-typed data " +
+                "inferred as per-key struct fields); fix the input schema, or raise " +
+                "maxDriverRows if the driver has headroom.")
+          log
         } else newCols
-      val diff = SchemaDiff.diffDf(oldCols.toDF(), newCols.toDF())
-      val (hadDrift, driftMsg) =
-        DriftReport.render(diff.filter(col("change") =!= "dropped"), "ipl_matches")
+      // both sides are on the driver already: diff and render there
+      val (hadDrift, driftMsg) = DriftReport.render(
+        SchemaDiff.diffCols(oldCols, newCols).filter(_.change != "dropped"), "ipl_matches")
       if (hadDrift) {
         try notifyDrift(driftMsg)
         catch {
@@ -240,9 +336,12 @@ object Pipeline {
             System.err.println(s"[pipeline] drift notifier failed: ${e.getMessage}")
         }
       }
-      val newNames = newCols.map(_.name).toSet
-      val unionCols = newCols ++ oldCols.filterNot(c => newNames.contains(c.name))
-      unionCols.toDF().write.mode("overwrite").parquet(schemaPath)
+      // the union changes exactly when a column was added or retyped
+      if (!logged || hadDrift) {
+        val newNames = newCols.map(_.name).toSet
+        val unionCols = newCols ++ oldCols.filterNot(c => newNames.contains(c.name))
+        unionCols.toDF().coalesce(1).write.mode("overwrite").parquet(schemaPath)
+      }
 
       // 4. flatten + stage (S5), partitioned by file_key with dynamic
       //    partition overwrite: each file replaces exactly its own
@@ -269,30 +368,22 @@ object Pipeline {
           .partitionBy("file_key")
           .parquet(stagingDir)
       }
-      val staged =
-        if (new java.io.File(stagingDir).exists()) spark.read.parquet(stagingDir).count()
-        else 0L
 
-      // 5. state update (S8): one relational merge flips all flags
-      val updates = newEntries.select(col("file_key"))
-        .withColumn("ingested", lit(true))
-        .withColumn("crawled", lit(true))
-        .withColumn("transformed", lit(true))
-        .withColumn("loaded", lit(true))
-      val merged = StateMerge.merge(state, updates)
-      // write via temp + swap (state is input and output of this run);
-      // Files.move throws on failure instead of renameTo's silent false
-      val tmp = s"$statePath.tmp"
-      Sinks.stageParquet(merged, tmp)
-      val stateDir = java.nio.file.Paths.get(statePath)
-      if (java.nio.file.Files.exists(stateDir)) {
-        val old = new java.io.File(s"$statePath.old")
-        if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-        java.nio.file.Files.move(stateDir, old.toPath)
-      }
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp), stateDir)
+      // 5. state update (S8). New keys are disjoint from the ledger by
+      //    construction (notYetPresent), so the merge is a union; the
+      //    cumulative staged total is summed over the ledger as it is
+      //    written.
+      val keys = picked.map(_._2)
+      val rowsOf = stagedRowsOf(spark, stagingDir, keys)
+      val added = keys.map(k => LedgerRow(k, true, true, true, true, rowsOf(k))).toDF()
+      val total = org.apache.spark.sql.Observation()
+      swapState(
+        state.unionByName(added)
+          .observe(total, coalesce(sum(col("staged_rows")), lit(0L)).as("staged_rows")),
+        statePath)
 
-      RunResult(nNew, staged, driftMsg, hadDrift, nCorrupt)
+      RunResult(picked.length, total.get("staged_rows").asInstanceOf[Long],
+        driftMsg, hadDrift, nCorrupt)
     } finally newEntries.unpersist()
   }
 }

@@ -1,25 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 
 /** Human-readable schema-drift report — the reference's SNS
   * notification body (`notifyChanges`,
   * /root/reference/airflow-setup/Scripts/compare_schema.py:106-124)
   * minus the AWS transport: the caller decides where the message
-  * goes. Input is SchemaDiff.diffDf output.
+  * goes. Input is SchemaDiff.diffDf output, or its driver-side rows.
   */
 object DriftReport {
 
   /** (hasDrift, message). Collects the diff — schema diffs are small
     * by construction (columns, not rows).
     */
-  def render(diff: DataFrame, tableName: String): (Boolean, String) = {
-    val rows = diff.collect().map { r =>
-      (r.getString(0), r.getString(1), Option(r.getString(2)), Option(r.getString(3)))
+  def render(diff: DataFrame, tableName: String): (Boolean, String) =
+    render(diff.as(Encoders.product[ColumnChange]).collect().toSeq, tableName)
+
+  /** (hasDrift, message) over diff rows already on the driver. */
+  def render(diff: Seq[ColumnChange], tableName: String): (Boolean, String) = {
+    val added = diff.collect { case ColumnChange(n, "added", _, Some(t)) => s"  + $n: $t" }
+    val dropped = diff.collect { case ColumnChange(n, "dropped", Some(t), _) => s"  - $n: $t" }
+    val retyped = diff.collect {
+      case ColumnChange(n, "retyped", Some(o), Some(t)) => s"  ~ $n: $o -> $t"
     }
-    val added = rows.collect { case (n, "added", _, Some(t)) => s"  + $n: $t" }
-    val dropped = rows.collect { case (n, "dropped", Some(t), _) => s"  - $n: $t" }
-    val retyped = rows.collect { case (n, "retyped", Some(o), Some(t)) => s"  ~ $n: $o -> $t" }
     val hasDrift = added.nonEmpty || dropped.nonEmpty || retyped.nonEmpty
     val msg =
       if (!hasDrift) s"Schema of '$tableName': no changes detected."

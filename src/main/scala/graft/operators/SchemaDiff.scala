@@ -10,6 +10,16 @@ import org.apache.spark.sql.types.StructType
   */
 case class ColumnMeta(name: String, dataType: String)
 
+/** One row of a schema diff, in the shape [[SchemaDiff.diffDf]] emits:
+  * change ∈ added|dropped|retyped|unchanged, a type absent on the side
+  * that lacks the column.
+  */
+case class ColumnChange(
+    name: String,
+    change: String,
+    old_type: Option[String],
+    new_type: Option[String])
+
 /** Schema-drift detection: classify columns of a new schema version
   * against the previous one as added / dropped / retyped / unchanged.
   *
@@ -64,6 +74,25 @@ object SchemaDiff {
           .as("change"),
         col("old_type"),
         col("new_type"))
+  }
+
+  /** [[diffDf]] for column lists already on the driver (a pipeline's
+    * inferred leaves against its collected schema log): the same
+    * classification with no Spark job. Rows come in old-column order,
+    * then the added columns in new-column order.
+    */
+  def diffCols(oldCols: Seq[ColumnMeta], newCols: Seq[ColumnMeta]): Seq[ColumnChange] = {
+    val oldType = oldCols.map(c => c.name -> c.dataType).toMap
+    val newType = newCols.map(c => c.name -> c.dataType).toMap
+    (oldCols ++ newCols).map(_.name).distinct.map { n =>
+      val (o, t) = (oldType.get(n), newType.get(n))
+      val change =
+        if (o.isEmpty) "added"
+        else if (t.isEmpty) "dropped"
+        else if (o != t) "retyped"
+        else "unchanged"
+      ColumnChange(n, change, o, t)
+    }
   }
 
   /** Driver-side convenience over two StructTypes. */

@@ -56,8 +56,14 @@ object Ingest {
     */
   private def sweepStaleParts(dir: File, now: java.time.Instant): Unit =
     Option(dir.listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("ingest_") && f.getName.endsWith(".part")
-        && now.toEpochMilli - f.lastModified() > StalePartAgeMs)
+      .filter { f =>
+        // lastModified is 0 for a file missing at that instant — e.g. a
+        // concurrent writer's temp between the delete and re-create of
+        // Files.copy(REPLACE_EXISTING); 0 means unknown, not ancient
+        val mtime = f.lastModified()
+        f.getName.startsWith("ingest_") && f.getName.endsWith(".part") &&
+          mtime > 0 && now.toEpochMilli - mtime > StalePartAgeMs
+      }
       .foreach(_.delete())
 
   /** JVM-level monitor per ledger path (the canonical path, interned —

@@ -3,6 +3,7 @@ package graft
 import java.io.FileOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpecBase {
 
@@ -16,6 +17,23 @@ class PipelineSpec extends SparkSpecBase {
     zout.close()
   }
 
+  /** Rows in staging by a fresh read: the total `stagedRows` must equal. */
+  private def stagedNow(work: String): Long =
+    if (new java.io.File(s"$work/staging").exists())
+      spark.read.parquet(s"$work/staging").count()
+    else 0L
+
+  /** runOnce plus the ledger invariant: a run that processed files
+    * reports the total a fresh recount of staging sees (the ledger's
+    * per-key counts never drift from staging); a no-op run reports 0.
+    */
+  private def runChecked(landing: String, work: String): Pipeline.RunResult = {
+    val r = Pipeline.runOnce(spark, landing, work)
+    val want = if (r.newFiles > 0) stagedNow(work) else 0L
+    assert(r.stagedRows == want, s"stagedRows ${r.stagedRows} != fresh staging count $want")
+    r
+  }
+
   test("end-to-end incremental pipeline: fan-out, flatten, stage, exactly-once") {
     val landing = tmpDir("pipe_landing")
     val work = tmpDir("pipe_work")
@@ -24,18 +42,18 @@ class PipelineSpec extends SparkSpecBase {
 
     zipOf(landing, "batch1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
 
-    val r1 = Pipeline.runOnce(spark, landing, work)
+    val r1 = runChecked(landing, work)
     assert(r1.newFiles == 2)
     assert(r1.stagedRows == 4 + 52) // outer-flatten counts, cf. FlattenSpec
     assert(!r1.hadDrift) // first run: no prior schema version
 
     // idempotence: same landing dir, nothing new
-    val r2 = Pipeline.runOnce(spark, landing, work)
+    val r2 = runChecked(landing, work)
     assert(r2.newFiles == 0 && r2.stagedRows == 0)
 
     // a new archive lands: only its file processed, staging appends
     zipOf(landing, "batch2.zip", Map("m3.json" -> tiny))
-    val r3 = Pipeline.runOnce(spark, landing, work)
+    val r3 = runChecked(landing, work)
     assert(r3.newFiles == 1)
     assert(r3.stagedRows == 56 + 4)
     assert(!r3.hadDrift) // same schema as recorded version
@@ -43,10 +61,13 @@ class PipelineSpec extends SparkSpecBase {
     // a corrupt file: staged rows exclude it, corrupt count surfaces,
     // and the file is still marked processed (not retried forever)
     zipOf(landing, "batch3.zip", Map("m4.json" -> "{ not json".getBytes("UTF-8")))
-    val r4 = Pipeline.runOnce(spark, landing, work)
+    val r4 = runChecked(landing, work)
     assert(r4.newFiles == 1 && r4.corruptFiles == 1)
     assert(r4.stagedRows == 60) // unchanged: null row filtered from staging
-    val r5 = Pipeline.runOnce(spark, landing, work)
+    import spark.implicits._
+    assert(spark.read.parquet(s"$work/state").filter($"file_key" === "m4")
+      .select($"staged_rows").as[Long].collect().toSeq == Seq(0L))
+    val r5 = runChecked(landing, work)
     assert(r5.newFiles == 0) // corrupt file not reprocessed
 
     // same-run file_key collision (re-delivery in a second archive):
@@ -54,7 +75,7 @@ class PipelineSpec extends SparkSpecBase {
     // row; nested entry names extract with their directories intact
     zipOf(landing, "batch4a.zip", Map("m5.json" -> tiny))
     zipOf(landing, "batch4b.zip", Map("m5.json" -> tiny, "2024/m6.json" -> tiny))
-    val r6 = Pipeline.runOnce(spark, landing, work)
+    val r6 = runChecked(landing, work)
     assert(r6.newFiles == 2) // m5 deduped to one, plus 2024/m6
     assert(r6.stagedRows == 60 + 4 + 4)
 
@@ -65,17 +86,16 @@ class PipelineSpec extends SparkSpecBase {
       "\"balls_per_over\": 6,",
       "\"balls_per_over\": 6, \"forfeited_overs\": 2,")
     zipOf(landing, "batch5.zip", Map("m7.json" -> drifted.getBytes("UTF-8")))
-    val r7 = Pipeline.runOnce(spark, landing, work)
+    val r7 = runChecked(landing, work)
     assert(r7.hadDrift)
     assert(r7.driftReport.contains("info.forfeited_overs"))
     // drift is recorded: the same shape again is no longer drift
     zipOf(landing, "batch6.zip", Map("m8.json" -> drifted.getBytes("UTF-8")))
-    val r8 = Pipeline.runOnce(spark, landing, work)
+    val r8 = runChecked(landing, work)
     assert(!r8.hadDrift)
 
     // state table reflects all processed files with all flags set
     val state = spark.read.parquet(s"$work/state")
-    import spark.implicits._
     val keys = state.select($"file_key").as[String].collect().sorted
     assert(keys.toSeq == Seq("2024/m6", "m1", "m2", "m3", "m4", "m5", "m7", "m8"))
     assert(state.filter(!$"loaded" || !$"transformed").count() == 0)
@@ -90,7 +110,7 @@ class PipelineSpec extends SparkSpecBase {
     pruned.write.parquet(tmp)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$work/state"))
     new java.io.File(tmp).renameTo(new java.io.File(s"$work/state"))
-    val r9 = Pipeline.runOnce(spark, landing, work)
+    val r9 = runChecked(landing, work)
     assert(r9.newFiles == 2)
     assert(r9.stagedRows == before) // overwrote their partitions, not appended
   }
@@ -226,7 +246,7 @@ class PipelineSpec extends SparkSpecBase {
     // three incremental batches -> three per-file staging partitions
     (1 to 3).foreach { i =>
       zipOf(landing, s"b$i.zip", Map(s"m$i.json" -> tiny))
-      Pipeline.runOnce(spark, landing, work)
+      runChecked(landing, work)
     }
     val before = spark.read.parquet(s"$work/staging")
     val wantRows = before.count()
@@ -251,7 +271,8 @@ class PipelineSpec extends SparkSpecBase {
     prunedState.write.parquet(s"$work/state_pruned")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$work/state"))
     new java.io.File(s"$work/state_pruned").renameTo(new java.io.File(s"$work/state"))
-    Pipeline.runOnce(spark, landing, work)
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 1 && r.stagedRows == wantRows)
     assert(spark.read.parquet(s"$work/staging").count() == wantRows)
   }
 
@@ -337,5 +358,93 @@ class PipelineSpec extends SparkSpecBase {
     assert(messages(e).exists(_.contains("zip-slip")))
     // ../evil.json relative to work/extracted would land in work itself
     assert(!new java.io.File(s"$work/evil.json").exists())
+  }
+
+  test("a ledger written before staged_rows existed is migrated from staging once") {
+    val landing = tmpDir("legacy_landing")
+    val work = tmpDir("legacy_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny, "m2.json" -> full,
+      "m3.json" -> "{ not json".getBytes("UTF-8")))
+    assert(Pipeline.runOnce(spark, landing, work).newFiles == 3)
+
+    // the old shape: the reference's four flags, no staged_rows
+    import spark.implicits._
+    spark.read.parquet(s"$work/state")
+      .select($"file_key", $"ingested", $"crawled", $"transformed", $"loaded")
+      .write.parquet(s"$work/state_old_shape")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$work/state"))
+    new java.io.File(s"$work/state_old_shape").renameTo(new java.io.File(s"$work/state"))
+
+    zipOf(landing, "b2.zip", Map("m4.json" -> tiny))
+    val r = Pipeline.runOnce(spark, landing, work)
+    assert(r.newFiles == 1)
+    assert(r.stagedRows == spark.read.parquet(s"$work/staging").count())
+    val perKey = spark.read.parquet(s"$work/state")
+      .select($"file_key", $"staged_rows").as[(String, Long)].collect().toMap
+    assert(perKey == Map("m1" -> 4L, "m2" -> 52L, "m3" -> 0L, "m4" -> 4L))
+  }
+
+  test("a new-data run costs O(new files): jobs flat in history, no staging read, " +
+      "no schema-log rewrite without drift") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+
+    def listing(dir: String): Seq[(String, Long)] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .map(f => f.getName -> f.lastModified()).sortBy(_._1)
+
+    /** (jobs started, paths read) by one new-data run over `history` files. */
+    def newDataRun(history: Int): (Int, Seq[String]) = {
+      val landing = tmpDir(s"onew${history}_landing")
+      val work = tmpDir(s"onew${history}_work")
+      zipOf(landing, "history.zip", (1 to history).map(i => s"h$i.json" -> tiny).toMap)
+      assert(Pipeline.runOnce(spark, landing, work).newFiles == history)
+      zipOf(landing, "day.zip", Map("d1.json" -> tiny))
+      val logBefore = listing(s"$work/schema_log")
+
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val jobCounter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      val readRecorder = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          qe.analyzed.foreach {
+            case l: LogicalRelation => l.relation match {
+              case h: HadoopFsRelation => h.location.rootPaths.foreach(p => reads.add(p.toString))
+              case _ =>
+            }
+            case _ =>
+          }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val bus = spark.sparkContext
+      org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+      bus.addSparkListener(jobCounter)
+      spark.listenerManager.register(readRecorder)
+      val r =
+        try Pipeline.runOnce(spark, landing, work)
+        finally {
+          org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+          bus.removeSparkListener(jobCounter)
+          spark.listenerManager.unregister(readRecorder)
+        }
+      assert(r.newFiles == 1 && !r.hadDrift)
+      assert(r.stagedRows == 4L * (history + 1))
+      assert(listing(s"$work/schema_log") == logBefore, "schema_log rewritten without drift")
+      val staging = new java.io.File(s"$work/staging").toURI.getPath.stripSuffix("/")
+      (jobs.get(), reads.asScala.toSeq.filter(_.contains(staging)))
+    }
+
+    val (jobs5, stagingReads5) = newDataRun(5)
+    val (jobs40, stagingReads40) = newDataRun(40)
+    assert(stagingReads5.isEmpty && stagingReads40.isEmpty,
+      s"staging read: ${stagingReads5 ++ stagingReads40}")
+    assert(jobs5 == jobs40, s"jobs grew with history: $jobs5 at 5 files, $jobs40 at 40")
   }
 }

@@ -39,6 +39,16 @@ class OperatorPropertySpec extends SparkSpecBase {
     }, 25)
   }
 
+  test("driver-side diffCols classifies exactly as the relational diffDf") {
+    check(Prop.forAll(colsGen, colsGen) { (oldC, newC) =>
+      val oldCols = oldC.toSeq.map { case (n, t) => ColumnMeta(n, t) }
+      val newCols = newC.toSeq.map { case (n, t) => ColumnMeta(n, t) }
+      val relational = SchemaDiff.diffDf(oldCols.toDF(), newCols.toDF()).as[ColumnChange]
+      relational.collect().sortBy(_.name).toSeq ==
+        SchemaDiff.diffCols(oldCols, newCols).sortBy(_.name)
+    }, 25)
+  }
+
   test("state merge: unique keys, update flag wins, absent flags inherit then default false") {
     val boolGen = Gen.oneOf(true, false)
     val stateGen = Gen.mapOf(for {

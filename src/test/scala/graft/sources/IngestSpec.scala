@@ -63,6 +63,19 @@ class IngestSpec extends SparkSpecBase {
     assert(ledger.size() == 1, s"ledger: $ledger; dir: $dirList")
   }
 
+  test("orphaned temp parts are swept once stale, fresh ones are kept") {
+    val src = tmpDir("ingest_sweep_src")
+    val landing = tmpDir("ingest_sweep_landing")
+    Files.write(Paths.get(src, "p.zip"), "payload".getBytes("UTF-8"))
+    val orphan = Paths.get(landing, "ingest_orphan.part")
+    Files.write(orphan, "partial".getBytes("UTF-8"))
+    Ingest.downloadToLanding(fileUrl(s"$src/p.zip"), landing)
+    assert(Files.exists(orphan), "a fresh temp part was swept")
+    val later = java.time.Instant.now().plusMillis(Ingest.StalePartAgeMs + 60000)
+    Ingest.downloadToLanding(fileUrl(s"$src/p.zip"), landing, now = () => later)
+    assert(!Files.exists(orphan), "a stale temp part survived")
+  }
+
   test("a failed download leaves no partial file and no ledger entry") {
     val landing = tmpDir("ingest_fail")
     intercept[Exception] {
