@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared between [[Bench]] and [[graft.tools.ScaleSweep]]: the
+/** Shared between [[Bench]] and perfbench's query sweep: the
   * memoized-family run order, its cache-release schedule, and the
-  * band-bucket degeneracy guard. One definition, two mains — a new
-  * memoized table registered here reaches both harnesses, instead of
-  * a forgotten copy silently reinstating the storage-pressure
-  * distortion the release lifecycle exists to prevent.
+  * band-bucket degeneracy guard. One definition — a new memoized table
+  * registered here reaches both, instead of a forgotten copy silently
+  * reinstating the storage-pressure distortion the release lifecycle
+  * exists to prevent. Scale sweeps are Bench runs over a corpus
+  * [[graft.tools.ScaleSweep]] generates.
   */
 object BenchShared {
 
@@ -303,10 +304,10 @@ object Bench {
       (SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => corpusFamily.contains(q._1)) ++
         corpusFamily.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))
         .filter(q => only.forall(_.contains(q._1)))
-    // Cache lifecycle + band-bucket guard: shared with ScaleSweep via
-    // BenchShared.sweepStep (storage pressure taxes every later query
-    // with GC; on a loaded machine that tax measured 3-6× on family
-    // members in round 4).
+    // Cache lifecycle + band-bucket guard: BenchShared.sweepStep, whose
+    // releaseAfter schedule perfbench's sweep follows too (storage
+    // pressure taxes every later query with GC; on a loaded machine
+    // that tax measured 3-6× on family members in round 4).
     val bucketStats = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val meter = new QueryMeter(spark, sfDir, "bench")
     val readings = ordered.map { case (name, fn) =>

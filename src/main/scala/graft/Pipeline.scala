@@ -3,7 +3,7 @@ package graft
 import graft.operators.{ColumnMeta, DriftReport, Flatten, SchemaDiff, StateMerge}
 import graft.sources.{Cricsheet, Sinks, ZipIngest}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -20,12 +20,15 @@ import org.apache.spark.sql.functions._
   *
   * Each stage is a distributed operator: unzip fans out per-archive,
   * new-file selection is an anti-join against the ledger, extraction
-  * writes from the executors that already hold the bytes (via the
-  * Hadoop FileSystem API — in a cluster deployment `workDir` must be
-  * a shared filesystem / object store, exactly like any Spark output
-  * path; local mode satisfies this trivially), flatten is the
+  * writes from the executors that already hold the bytes, flatten is the
   * fix-point plan builder, staging is parquet partitioned by
   * file_key. Running again with no new input is a no-op.
+  *
+  * Every access to `workDir` (extraction, staging, ledger, schema log)
+  * goes through the Hadoop FileSystem of that path, so `workDir` may be
+  * any Spark output path: a local path, a `file:` URI, hdfs://, s3a://.
+  * In a cluster deployment it must be a shared filesystem / object
+  * store; local mode satisfies this trivially.
   *
   * Exactly-once: staging uses dynamic partition overwrite keyed by
   * file_key, so re-processing a file replaces its own partition
@@ -106,21 +109,28 @@ object Pipeline {
     }.toMap
   }
 
+  /** Rename that throws on failure: Hadoop's `rename` reports it as a
+    * silent `false`, which would leave the ledger half-swapped.
+    */
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"Pipeline: could not move $from to $to")
+
   /** Write the ledger via temp + swap (the ledger is input and output
-    * of a run); Files.move throws on failure instead of renameTo's
-    * silent false. One file: the ledger is metadata, and a one-file
+    * of a run). One file: the ledger is metadata, and a one-file
     * ledger is one task to read on the next run.
     */
   private def swapState(ledger: DataFrame, statePath: String): Unit = {
-    val tmp = s"$statePath.tmp"
-    Sinks.stageParquet(ledger.coalesce(1), tmp)
-    val stateDir = java.nio.file.Paths.get(statePath)
-    if (java.nio.file.Files.exists(stateDir)) {
-      val old = new java.io.File(s"$statePath.old")
-      if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-      java.nio.file.Files.move(stateDir, old.toPath)
+    val tmp = new Path(s"$statePath.tmp")
+    Sinks.stageParquet(ledger.coalesce(1), tmp.toString)
+    val state = new Path(statePath)
+    val fs = state.getFileSystem(ledger.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(state)) {
+      val old = new Path(s"$statePath.old")
+      fs.delete(old, true)
+      move(fs, state, old)
     }
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), stateDir)
+    move(fs, tmp, state)
   }
 
   /** The ledger, read with its explicit schema (no footer-inference
@@ -136,14 +146,15 @@ object Pipeline {
     */
   private def loadState(spark: SparkSession, statePath: String, stagingDir: String): DataFrame = {
     import spark.implicits._
-    val p = new java.io.File(statePath)
-    if (!p.exists() && new java.io.File(s"$statePath.old").exists())
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$statePath.tmp"), p.toPath)
     val conf = spark.sparkContext.hadoopConfiguration
-    dataFiles(new Path(p.getAbsolutePath), conf).headOption.foreach { f =>
+    val state = new Path(statePath)
+    val fs = state.getFileSystem(conf)
+    if (!fs.exists(state) && fs.exists(new Path(s"$statePath.old")))
+      move(fs, new Path(s"$statePath.tmp"), state)
+    dataFiles(state, conf).headOption.foreach { f =>
       if (!footer(f, conf)(_.getFooter.getFileMetaData.getSchema.containsField("staged_rows"))) {
         val counts =
-          if (new java.io.File(stagingDir).exists())
+          if (fs.exists(new Path(stagingDir)))
             spark.read.schema("file_key string").parquet(stagingDir)
               .groupBy("file_key").agg(count(lit(1)).as("staged_rows"))
           else Seq.empty[(String, Long)].toDF("file_key", "staged_rows")
@@ -155,13 +166,12 @@ object Pipeline {
           statePath)
       }
     }
-    if (p.exists()) spark.read.schema(LedgerSchema).parquet(statePath)
+    if (fs.exists(state)) spark.read.schema(LedgerSchema).parquet(statePath)
     else Seq.empty[LedgerRow].toDF()
   }
 
   /** Executor-side extraction of one partition of (entry_name, bytes)
-    * through the Hadoop FileSystem API, so `extractedRoot` may be any
-    * supported scheme (local path, hdfs://, s3a://); parent dirs are
+    * through the Hadoop FileSystem of `extractedRoot`; parent dirs are
     * created implicitly. Entry names that would escape the extraction
     * root (absolute, or `../` — zip-slip) fail the task loudly rather
     * than writing elsewhere.
@@ -173,7 +183,7 @@ object Pipeline {
       val rel = java.nio.file.Paths.get(name).normalize()
       require(!rel.isAbsolute && !rel.startsWith(".."),
         s"zip entry '$name' escapes the extraction dir (zip-slip)")
-      val target = new org.apache.hadoop.fs.Path(extractedRoot, rel.toString)
+      val target = new Path(extractedRoot, rel.toString)
       val fs = target.getFileSystem(conf)
       val out = fs.create(target, true)
       try out.write(bytes)
@@ -237,6 +247,7 @@ object Pipeline {
     val stagingDir = s"$workDir/staging"
     val statePath = s"$workDir/state"
     val schemaPath = s"$workDir/schema_log"
+    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one row past the bound tells "over it" apart from "at it"
     val collectBound = (maxDriverRows + 1).min(Int.MaxValue).toInt
 
@@ -272,10 +283,10 @@ object Pipeline {
       // 2. land extracted JSON (one file per match, like the json
       //    bucket), written by the executors that already hold the
       //    bytes — no collect of file contents through the driver
-      val extRoot = new java.io.File(extractedDir).getAbsolutePath
-      new java.io.File(extractedDir).mkdirs()
+      val extRoot = fs.makeQualified(new Path(extractedDir))
+      fs.mkdirs(extRoot)
       newEntries.select("entry_name", "content").as[(String, Array[Byte])]
-        .foreachPartition(writeEntries(extRoot) _)
+        .foreachPartition(writeEntries(extRoot.toString) _)
 
       // 3. read ONLY the new matches (the reference scopes its crawler
       //    to new prefixes the same way) — explicit schema fast path.
@@ -312,7 +323,7 @@ object Pipeline {
       val inferred = Cricsheet.readMatchFiles(spark, newPaths, inferSchema = true).schema
       val newCols = SchemaDiff.leafColumns(inferred)
         .filterNot(c => c.name == "match_file" || c.name.startsWith("_corrupt_record"))
-      val logged = new java.io.File(schemaPath).exists()
+      val logged = fs.exists(new Path(schemaPath))
       val oldCols =
         if (logged) {
           val log = spark.read.schema(SchemaLogSchema).parquet(schemaPath).as[ColumnMeta]
@@ -350,7 +361,8 @@ object Pipeline {
       //    is corrupt — an empty write must not touch staging.
       if (nValid > 0) {
         // input_file_name() is a percent-encoded URI; decode it before
-        // stripping the extraction root, or any encodable character in
+        // stripping the extraction root's path (scheme and authority
+        // may be spelled differently), or any encodable character in
         // workDir ('%', space, …) makes the prefix never match and
         // every row collapses into one empty partition key. url_decode
         // also maps '+' to space (form encoding), so literal '+' is
@@ -359,7 +371,7 @@ object Pipeline {
           url_decode(regexp_replace(col("match_file"), "\\+", "%2B"))
         val fileKey = regexp_replace(
           regexp_extract(decodedPath,
-            java.util.regex.Pattern.quote(extRoot) + "/(.*)$", 1),
+            java.util.regex.Pattern.quote(extRoot.toUri.getPath) + "/(.*)$", 1),
           ExtensionRe, "")
         val flat = Flatten
           .flatten(matches.withColumn("file_key", fileKey).drop("match_file"), outer = true)

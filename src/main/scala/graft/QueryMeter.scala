@@ -24,7 +24,7 @@ final case class QueryReading(
 }
 
 /** The per-query instrument every harness shares: Bench's sweep and
-  * recheck, TimeQueries and ScaleSweep measure through [[measure]].
+  * recheck and TimeQueries measure through [[measure]].
   *
   * Each query is forced with a `noop`-format write, not `count()`:
   * under count(), ColumnPruning deletes every projection expression

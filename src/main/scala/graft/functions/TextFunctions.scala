@@ -28,8 +28,9 @@ object TextFunctions {
     * registers it). Constructing with no active session throws, and
     * executing on a different extension-less session fails function
     * resolution — unlike the old pure-regex formulation, which was
-    * session-free. Every graft entry point (SparkEntry/Bench/Verify/
-    * ScaleSweep, the test harness) satisfies both conditions.
+    * session-free. Every graft entry point (SparkEntry/Bench/Verify,
+    * the ScaleSweep generator, perfbench, the test harness) satisfies
+    * both conditions.
     */
   def normText(c: Column): Column = {
     graft.plans.TextRunFunctions.register(

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * `sbt "runMain graft.tools.DedupScaleProbe [corpusDir]"` — prints
   * one JSON line; read-only (builds the memoized chain in-session,
   * releases it at exit). [[probeJson]] is also embedded into every
-  * full-sweep Bench / ScaleSweep record (VERDICT r14 item 4:
+  * full-sweep Bench record, scale-corpus runs included (VERDICT r14 item 4:
   * probe-to-guard promotion — each 10×/100× record carries the
   * pair-mass attribution that found the round-14 quadratic term).
   */

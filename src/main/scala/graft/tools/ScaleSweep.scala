@@ -1,16 +1,19 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale-sweep harness for the heavy dedup/ANN family: generates a
-  * documents/embeddings corpus `factor`× the sf0.1 fixtures and runs
-  * the memoized-family queries against it, so the sub-linear-probing
-  * and band-bucket-sanity claims are MEASURED above bench scale
-  * instead of extrapolated from sf0.1.
+/** Scale-corpus generator: writes every table Bench reads, `factor`×
+  * the base fixtures on the fact side, so the heavy dedup/ANN family
+  * and the events/TPC-H waves are MEASURED above bench scale instead
+  * of extrapolated from sf0.1.
   *
   * `sbt "runMain graft.tools.ScaleSweep [baseDir] [factor] [outDir]"`
-  * prints one JSON line: per-query seconds, corpus sizes, and the
-  * LSH/SimHash band-bucket guards at the scaled size.
+  * writes the corpus and prints one `scale_corpus` JSON line. The
+  * sweep itself is Bench pointed at the corpus, which brings its run
+  * order, cache lifecycle, recheck, probe and bucket guards:
+  * `SPARK_GRAFT_SF_DIR=<outDir> SPARK_GRAFT_SNAPSHOT=<record>.json
+  * [SPARK_GRAFT_ONLY=<names>] sbt "runMain graft.Bench"`.
   *
   * The corpus is BENCHMARK data, not oracle data (correctness stays
   * pinned to the driver fixtures): documents are seeded-PRNG token
@@ -30,10 +33,24 @@ object ScaleSweep {
     new java.util.Random(id * 2654435761L + 1013904223L)
 
   def main(args: Array[String]): Unit = {
+    if (args.length > 3) {
+      System.err.println("usage: ScaleSweep [baseDir] [factor] [outDir]")
+      sys.exit(2)
+    }
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse("target/scale_corpus")
     val spark = graft.GraftSession.local()
+    val (nDocs, nVecs) = generate(spark, base, factor, outDir)
+    println(s"""{"metric":"scale_corpus","factor":$factor,"n_docs":$nDocs,"n_vecs":$nVecs,"out":"$outDir","base":"$base"}""")
+    spark.stop()
+  }
+
+  /** Write the `factor`× corpus of `base` under `outDir` (one
+    * `<table>.parquet` per [[graft.Tables.all]] name, overwriting) and
+    * return its (documents, embeddings) row counts.
+    */
+  def generate(spark: SparkSession, base: String, factor: Int, outDir: String): (Long, Long) = {
     import spark.implicits._
 
     // ---- corpus generation ------------------------------------------
@@ -152,252 +169,6 @@ object ScaleSweep {
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
 
-    // --gen-only (round 13): write the factor× corpus and exit. The
-    // FULL 362-query inventory is then swept by pointing Bench at the
-    // corpus (SPARK_GRAFT_SF_DIR=<outDir> SPARK_GRAFT_SNAPSHOT=...),
-    // reusing its run order, cache lifecycle, and instrumentation
-    // instead of duplicating them here.
-    if (args.lift(3).contains("--gen-only")) {
-      println(s"""{"metric":"scale_corpus","factor":$factor,"n_docs":$nDocs,"n_vecs":$nVecs,"out":"$outDir","base":"$base"}""")
-      spark.stop()
-      return
-    }
-
-    // ---- the heavy family at scale ----------------------------------
-    // Bench's shared corpus run order + release schedule (BenchShared,
-    // one definition for both harnesses) plus the embedding/ANN and
-    // scan-bound text queries that also exercise the scaled corpus
-    val fullFamily = graft.BenchShared.corpusFamily ++ Seq(
-      "embedding_neardup",
-      "knn_bruteforce", "cosine_topk", "knn_ivf", "knn_lsh",
-      "lm_score",
-      "exact_dedup", "text_stats", "lang_id", "doc_chunk",
-      // round-8 corpus ops (anomaly_mad/seasonal_decompose moved to
-      // the round-11 events block below once the scale corpus grew an
-      // events table)
-      "dsir_select", "ccnet_buckets",
-      // round-9 corpus/embedding ops (taxonomy_classify and — since
-      // r10 — winnow_fingerprint ride corpusFamily above)
-      "lm_backoff_score", "length_histogram",
-      "embedding_quantize",
-      // twelfth wave (documents-side dataset-assembly ops;
-      // changepoint_cusum rides the round-11 events block below)
-      "split_assign", "domain_cap", "junk_detect", "line_dedup",
-      // wave 36: url_dedup is a pure scan projection + hash agg;
-      // conformal_calibration is auc_eval-shaped (embeddings side)
-      "url_dedup", "conformal_calibration",
-      "length_filter_sweep", "source_reliability", "audio_rms",
-      // thirteenth wave (ngram_novelty/kmeans_iterate ride
-      // corpusFamily above; quality_calibration is lm_score-shaped)
-      "knn_hard_negatives", "contrastive_triplets", "quality_calibration",
-      // fourteenth wave (boilerplate_ngrams / collocation_pmi /
-      // vocab_coverage ride corpusFamily above)
-      "epoch_shuffle", "span_corruption", "linear_probe", "pca_power",
-      "ann_recall_eval",
-      // fifteenth wave (lsh_recall_eval rides corpusFamily above)
-      "importance_resample", "curation_funnel", "embedding_outliers",
-      "mixture_drift", "token_budget_trim",
-      // sixteenth wave (the tpch_* ops are bench-only — the scale
-      // corpus has no lineitem)
-      "image_ahash", "image_neardup", "audio_fingerprint",
-      "audio_neardup", "nn_descent_step",
-      // seventeenth wave (minhash_b_bit / simhash_recall_eval /
-      // kcore_peel ride corpusFamily; sql_group_by_all is bench-only)
-      "curriculum_schedule",
-      // eighteenth wave (vocab_growth / zipf_profile ride corpusFamily)
-      "embedding_drift", "dataset_version_diff",
-      // nineteenth wave (maxsim_rerank rides corpusFamily); waves
-      // 20-25 (chi2_terms / winnow_matches / triangle_count ride
-      // corpusFamily; the events/orders/lineitem-side ops ride the
-      // round-11 blocks below)
-      "auc_eval", "pareto_front", "cooccur_window",
-      "grouped_linear_fit", "compaction_plan",
-      // round-11: waves 26-32 + the winnow/bpe additions ride
-      // corpusFamily above (kcore_peel, bfs_hops, good_turing,
-      // substring_dedup_cut, bpe_decode, label_propagation); the
-      // documents-side Kneser-Ney LM joins here; wave 34's scan-bound
-      // corpus-QA ops ride along (jaccard_link_pred is in corpusFamily)
-      "kneser_ney_lm", "template_dedup", "tokenizer_fertility",
-      // round-11: events-side time-series/stat waves — the scale
-      // corpus now carries a factor× events month (wave 34:
-      // sessionize / mann_whitney / cramers_v)
-      "trend_test", "theil_sen", "autocorr_lag", "event_trigrams",
-      "event_transitions", "ks_test", "user_burstiness", "iqr_outliers",
-      "ab_ttest", "anomaly_mad", "changepoint_cusum",
-      "seasonal_decompose", "stream_throttle",
-      "sessionize", "mann_whitney", "cramers_v",
-      // wave 35 events-side (kruskal/levene/emd are cell-aggregate
-      // bounded — the corpus-scale work is one map-side-combinable
-      // groupBy each)
-      "kruskal_wallis", "levene_test", "emd_1d", "interval_overlap_join",
-      // round-11: orders/lineitem-side stats + the full TPC-H batch —
-      // the scale corpus now carries factor× key-shifted fact tables
-      // (wave 34: benford_test)
-      "hist_equidepth", "group_quantiles", "gini_concentration",
-      "benford_test", "kendall_tau",
-      "tpch_pricing", "tpch_market_share", "tpch_volume_shipping",
-      "tpch_custdist", "tpch_forecast_revenue", "tpch_large_orders",
-      "tpch_order_priority", "tpch_product_profit", "tpch_promo_share",
-      "tpch_returned_items", "tpch_shipping_priority",
-      "tpch_small_qty_revenue", "tpch_supplier_parts",
-      "tpch_top_supplier",
-      // round 15: derived-partsupp shapes — ps derives from the
-      // (unscaled) part dim, so the scale question these answer is
-      // the factor× lineitem pre-aggregate in Q20 and the dim-join
-      // chain staying broadcast
-      "tpch_min_cost_supp", "tpch_important_stock", "tpch_promo_suppliers",
-      // wave 37: assoc_rules/rfm ride the factor× fact tables;
-      // isotonic_fit (embeddings) and eb_shrinkage (documents) are
-      // bounded-grid aggregates off one corpus scan each
-      "assoc_rules", "rfm_segmentation", "isotonic_fit", "eb_shrinkage",
-      // wave 38: survival_km/markov_stationary ride the factor×
-      // events month; mmr_diversify's pool is retrieval-bounded
-      // (constant work at any corpus size) — swept to prove exactly
-      // that
-      "survival_km", "markov_stationary", "mmr_diversify",
-      // wave 39: quantile_normalize rides the events month
-      // (DistributedNtile skew-free path); dp_noise_counts is one
-      // documents aggregate + a noise projection
-      "quantile_normalize", "dp_noise_counts",
-      // wave 40: one (type, day) cell aggregate is the only
-      // corpus-scale stage; the DP runs on capped bounded arrays
-      "dtw_distance",
-      // wave 41: inclusion/fd profile the factor× fact tables
-      // (distinct + det-keyed aggregates); histogram_drift rides the
-      // events month; flesch_readability is a pure documents scan
-      "inclusion_deps", "fd_discovery", "histogram_drift",
-      "flesch_readability",
-      // wave 42: rp_project is a pure embeddings scan projection +
-      // bounded eval join; simpson/burrows are one (source, term)
-      // corpus aggregate each, bounded-grid arithmetic after
-      "rp_project", "simpson_diversity", "burrows_delta",
-      // wave 43: all three ride the (type, day) cell aggregate on
-      // the capped spine; the folds are bounded-array arithmetic
-      "sax_symbolize", "holt_forecast", "median_polish",
-      // wave 44: als/session ride the factor× events month (one
-      // keyed aggregate + one window pass); feature_hash is a pure
-      // documents scan + (source, bucket) aggregate
-      "als_user_factors", "feature_hash", "session_outliers",
-      // wave 45: moments ride the factor× fact tables (two exact-
-      // integer passes per column); texttiling is a pure documents
-      // scan; golden_record rides the memoized cluster labels
-      "moments_profile", "texttiling_segments", "golden_record",
-      // wave 46: dbscan rides the memoized embedding pair table;
-      // churn/attribution ride the factor× events month (one keyed
-      // aggregate / one window pass each)
-      "dbscan_core", "churn_labels", "attribution_touch",
-      // wave 47: ndcg rides the factor× events month (two window
-      // passes on ONE user-keyed exchange, ≤20 rows/user after);
-      // hits rides the factor× fact tables (keyed joins + aggregates
-      // per iteration); lttb rides the (type, day) cell aggregate,
-      // the walk is bounded-array integer arithmetic
-      "ndcg_eval", "hits_scores", "lttb_downsample",
-      // wave 48: target_encode/woe_iv ride the factor× events month
-      // (one keyed aggregate each, bounded grids after); fdr_bh rides
-      // the distinct term-presence aggregate + top-m cut over the
-      // factor× documents
-      "target_encode", "woe_iv", "fdr_bh",
-      // wave 49: did/bootstrap ride the factor× events month (one
-      // keyed aggregate each — the bootstrap's 40 replicates are
-      // map-side-combined in the same pass); script_detect is a pure
-      // documents scan through the one-pass CharClassCounts byte loop
-      "did_estimator", "poisson_bootstrap_ci", "script_detect",
-      // wave 50: prefixspan rides the factor× events month (one
-      // window pass + |A|-bounded rejoins); rake/aes ride the
-      // factor× documents (per-doc fold / pure projection + top-K)
-      "prefixspan_lite", "rake_keywords", "weighted_sample_aes",
-      // wave 52 (round 12): the MapType round-trip rides the factor×
-      // events month — one keyed aggregate, a JSON scratch write of
-      // |users| map rows, and the explicit-schema map read back
-      "map_json_scan",
-      // wave 53 (round 12): char_entropy rides the factor× documents
-      // (per-doc char aggregate, ≤36 keys/doc); hill rides the
-      // factor× events month (one keyed top-k window)
-      "char_entropy", "hill_tail_index",
-      // wave 51: holt_winters/croston ride the (type, day) cell
-      // aggregate (bounded-spine folds); fs_linkage rides the
-      // memoized LSH pair chain + broadcast metadata joins
-      "holt_winters", "croston_forecast", "fs_linkage",
-      // wave 54 (round 12): anova/jarque ride the factor× events
-      // month (one group aggregate each, ≤k-row arithmetic after);
-      // spearman rides the factor× lineitem (two distinct-value
-      // prefix sums + one keyed rank join)
-      "anova_oneway", "jarque_bera", "spearman_rho",
-      // wave 55: mutual_info is one documents aggregate to a bounded
-      // joint grid; js_divergence rides the memoized term relation
-      // with a fixed 201-cell per-source state; k_anonymity audits
-      // the (unscaled) customer dimension — swept to prove the
-      // dimension audit stays constant-time as facts grow
-      "mutual_info", "js_divergence", "k_anonymity",
-      // wave 56: map_eval rides the factor× events month (one
-      // user-keyed window exchange); graph_modularity rides the
-      // memoized LSH pair table (two bounded aggregates);
-      // theta_forecast rides the (type, day) cell aggregate
-      "map_eval", "graph_modularity", "theta_forecast",
-      // wave 57: cohens_kappa is one documents scan to a bounded
-      // confusion grid; lift_table rides the factor× embeddings
-      // through the skew-free NTILE; page_hinkley rides the
-      // (type, day) cell aggregate (bounded-spine fold)
-      "cohens_kappa", "lift_table", "page_hinkley",
-      // wave 58: psi/cuped ride the factor× events month (one keyed
-      // NTILE exchange / one user aggregate + exact-decimal moment
-      // assembly); srm_check is one documents scan to a 3-row grid
-      "psi_stability", "cuped_adjust", "srm_check",
-      // wave 59: code_detect is one raw-text documents scan (replace
-      // arithmetic, no regex); join_skew_report is one keyed
-      // aggregate per audited column; pacf_durbin rides the
-      // (type, day) cell aggregate (bounded-array folds)
-      "code_detect", "join_skew_report", "pacf_durbin",
-      // wave 60: ljung_box rides the shared ACF substrate;
-      // mde_power is one events aggregate + exact-moment assembly;
-      // markov_entropy_rate rides the lag-window transition counts
-      "ljung_box", "mde_power", "markov_entropy_rate",
-      // wave 61: hour_profile/seasonality_strength ride the events
-      // month (bounded grids); tokenizer_compression is one
-      // documents scan with integer token sums
-      "hour_profile", "seasonality_strength", "tokenizer_compression",
-      // wave 62: conversion_latency/freshness ride the events month
-      // (keyed min/max aggregates); source_dup_rate is the
-      // fingerprint aggregate + one fp-keyed join
-      "conversion_latency", "freshness_audit", "source_dup_rate",
-      // wave 63: simpson_check rides the factor× lineitem (one keyed
-      // moment aggregate); source_overlap rides the memoized term
-      // relation (distinct + term-keyed self-join, bounded fan-out)
-      "simpson_check", "source_overlap")
-      // a few ops are (intentionally) listed both in corpusFamily and
-      // in their wave block above — dedupe, keeping the FIRST (family)
-      // position so release points stay ahead of their consumers; the
-      // round-13 100× subset measured js_divergence twice before this
-      .distinct
-    // optional subset (args 3+): sweep only the named queries — for
-    // targeted high-factor runs where re-measuring the whole family
-    // would burn hours re-confirming already-recorded readings
-    val family = if (args.length > 3) {
-      val only = args.drop(3).toSet
-      val unknown = only -- fullFamily.toSet
-      require(unknown.isEmpty, s"not in sweep family: ${unknown.mkString(", ")}")
-      fullFamily.filter(only)
-    } else fullFamily
-    val drifted = family.filterNot(graft.SparkEntry.queries.contains)
-    require(drifted.isEmpty,
-      s"family names no longer in SparkEntry.queries: ${drifted.mkString(", ")}")
-    val bucketStats = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val meter = new graft.QueryMeter(spark, outDir, "scale")
-    val results = family.map { name =>
-      val r = graft.BenchShared.sweepStep(meter, name, graft.SparkEntry.queries(name), bucketStats)
-      name -> r.wallSec
-    }
-    graft.queries.LlmQueries.clearCaches(Some(spark))
-    val probeField = graft.BenchShared.probeOrSkip(spark, outDir, "scale")
-      .map(p => s""","probe":$p""").getOrElse("")
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val buckets = bucketStats.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"scale_sweep","value":${fmt(total)},"unit":"sec","factor":$factor,"n_docs":$nDocs,"n_vecs":$nVecs,"queries":$qs,"failed":$failed,"bucket_stats":$buckets$probeField,"base":"$base"}""")
-    spark.stop()
+    (nDocs, nVecs)
   }
 }

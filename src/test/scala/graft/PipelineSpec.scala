@@ -18,10 +18,12 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   /** Rows in staging by a fresh read: the total `stagedRows` must equal. */
-  private def stagedNow(work: String): Long =
-    if (new java.io.File(s"$work/staging").exists())
+  private def stagedNow(work: String): Long = {
+    val staging = new org.apache.hadoop.fs.Path(s"$work/staging")
+    if (staging.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(staging))
       spark.read.parquet(s"$work/staging").count()
     else 0L
+  }
 
   /** runOnce plus the ledger invariant: a run that processed files
     * reports the total a fresh recount of staging sees (the ledger's
@@ -219,6 +221,28 @@ class PipelineSpec extends SparkSpecBase {
     zipOf(landing, "b2.zip", Map("m2.json" -> tiny))
     val r2 = Pipeline.runOnce(spark, landing, work)
     assert(r2.stagedRows == 8)
+  }
+
+  test("a file: URI work dir runs like a plain path and writes nothing under the cwd") {
+    val landing = tmpDir("uri_landing")
+    val work = new java.io.File(tmpDir("uri_work")).toURI.toString
+    assert(work.startsWith("file:"))
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    zipOf(landing, "batch1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+    val r1 = runChecked(landing, work)
+    assert(r1.newFiles == 2 && r1.stagedRows == 4 + 52 && !r1.hadDrift)
+    val r2 = runChecked(landing, work)
+    assert(r2.newFiles == 0 && r2.stagedRows == 0)
+    zipOf(landing, "batch2.zip", Map("m3.json" -> tiny))
+    val r3 = runChecked(landing, work)
+    assert(r3.newFiles == 1 && r3.stagedRows == 56 + 4 && !r3.hadDrift)
+    import spark.implicits._
+    assert(spark.read.parquet(s"$work/state").select($"file_key").as[String]
+      .collect().sorted.toSeq == Seq("m1", "m2", "m3"))
+    // java.io would take the URI for a relative path: <cwd>/file:/…
+    assert(!new java.io.File(work).getAbsoluteFile.exists(),
+      s"stray ${new java.io.File(work).getAbsolutePath}")
   }
 
   test("same-archive key collision resolves deterministically (last entry name wins)") {
