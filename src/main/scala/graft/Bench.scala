@@ -143,6 +143,22 @@ object BenchShared {
     r
   }
 
+  /** A whole sweep: [[sweepStep]] per query in order, then the guard
+    * and release of every table still memoized. A subset sweep
+    * (`SPARK_GRAFT_ONLY`) can build a table without running the query
+    * [[releaseAfter]] releases it after; its bucket guard must still
+    * reach the record, and the table must not stay cached.
+    */
+  def sweep(
+      meter: QueryMeter,
+      queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
+      bucketStats: scala.collection.mutable.Map[String, Long]): Seq[QueryReading] = {
+    val readings = queries.map { case (name, build) => sweepStep(meter, name, build, bucketStats) }
+    graft.queries.LlmQueries.memoizedTags(meter.spark).toSeq.sorted.foreach(tag =>
+      guardAndRelease(meter.spark, meter.sfDir, tag, bucketStats, meter.label))
+    readings
+  }
+
   /** The dedup pair-mass probe block (`{...}`) for a sweep record, or
     * None when SPARK_GRAFT_NO_PROBE is set or the probe fails. Probe
     * to guard (VERDICT r14 item 4): every full-sweep record carries the
@@ -304,15 +320,13 @@ object Bench {
       (SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => corpusFamily.contains(q._1)) ++
         corpusFamily.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))
         .filter(q => only.forall(_.contains(q._1)))
-    // Cache lifecycle + band-bucket guard: BenchShared.sweepStep, whose
+    // Cache lifecycle + band-bucket guard: BenchShared.sweep, whose
     // releaseAfter schedule perfbench's sweep follows too (storage
     // pressure taxes every later query with GC; on a loaded machine
     // that tax measured 3-6× on family members in round 4).
     val bucketStats = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val meter = new QueryMeter(spark, sfDir, "bench")
-    val readings = ordered.map { case (name, fn) =>
-      BenchShared.sweepStep(meter, name, fn, bucketStats)
-    }
+    val readings = BenchShared.sweep(meter, ordered, bucketStats)
     val results = readings.map(r => r.name -> r.wallSec)
     graft.queries.LlmQueries.clearCaches(Some(spark))
     // GATE-2 self-evidencing recheck (VERDICT r14 item 1): twice

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** The reference's entire daily DAG (SURVEY.md §3.1: ingest → unzip
   * fan-out → identify new files → schema drift check → flatten →
@@ -171,14 +172,15 @@ object Pipeline {
   }
 
   /** Executor-side extraction of one partition of (entry_name, bytes)
-    * through the Hadoop FileSystem of `extractedRoot`; parent dirs are
-    * created implicitly. Entry names that would escape the extraction
-    * root (absolute, or `../` — zip-slip) fail the task loudly rather
-    * than writing elsewhere.
+    * through the Hadoop FileSystem of `extractedRoot`, opened with the
+    * session's Hadoop conf (credentials, `fs.<scheme>.impl`, …); parent
+    * dirs are created implicitly. Entry names that would escape the
+    * extraction root (absolute, or `../` — zip-slip) fail the task
+    * loudly rather than writing elsewhere.
     */
-  private def writeEntries(extractedRoot: String)(
+  private def writeEntries(extractedRoot: String, hadoopConf: SerializableConfiguration)(
       it: Iterator[(String, Array[Byte])]): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = hadoopConf.value
     it.foreach { case (name, bytes) =>
       val rel = java.nio.file.Paths.get(name).normalize()
       require(!rel.isAbsolute && !rel.startsWith(".."),
@@ -285,8 +287,9 @@ object Pipeline {
       //    bytes — no collect of file contents through the driver
       val extRoot = fs.makeQualified(new Path(extractedDir))
       fs.mkdirs(extRoot)
+      val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
       newEntries.select("entry_name", "content").as[(String, Array[Byte])]
-        .foreachPartition(writeEntries(extRoot.toString) _)
+        .foreachPartition(writeEntries(extRoot.toString, hadoopConf) _)
 
       // 3. read ONLY the new matches (the reference scopes its crawler
       //    to new prefixes the same way) — explicit schema fast path.
@@ -298,20 +301,17 @@ object Pipeline {
       val allMatches = Cricsheet.readMatchFiles(spark, newPaths)
       // corrupt files degrade to null rows (PERMISSIVE) — filter them
       // out of staging and surface the count instead of failing the run.
-      // Both counters ride ONE scan via observe (CollectMetrics): a
-      // separate total count + valid count would read every new file
-      // twice — at 100 TB the monitoring must not double the ingest IO.
+      // Both counters ride the staging write's scan via observe
+      // (CollectMetrics, step 4): a count of their own would read every
+      // new file once more — at 100 TB the monitoring must not add
+      // ingest IO.
       val validFlag =
         if (allMatches.columns.contains("innings"))
           when(col("innings").isNotNull, 1L).otherwise(0L)
         else lit(0L)
       val validity = org.apache.spark.sql.Observation()
-      val observed = allMatches.observe(validity,
-        count(lit(1)).as("n_total"), coalesce(sum(validFlag), lit(0L)).as("n_valid"))
-      observed.count() // the single materializing action; metrics land in `validity`
-      val nValid = validity.get("n_valid").asInstanceOf[Long]
-      val nCorrupt = validity.get("n_total").asInstanceOf[Long] - nValid
-      val matches = Cricsheet.validMatches(allMatches)
+      val matches = Cricsheet.validMatches(allMatches.observe(validity,
+        count(lit(1)).as("n_total"), coalesce(sum(validFlag), lit(0L)).as("n_valid")))
 
       // 3b. drift check = the reference's crawler + compare_schema
       //     stage: INFER the schema of the new files (the explicit
@@ -357,29 +357,34 @@ object Pipeline {
       // 4. flatten + stage (S5), partitioned by file_key with dynamic
       //    partition overwrite: each file replaces exactly its own
       //    partition, making the write idempotent under re-runs (and
-      //    partition-prunable downstream). Skipped when every new file
-      //    is corrupt — an empty write must not touch staging.
-      if (nValid > 0) {
-        // input_file_name() is a percent-encoded URI; decode it before
-        // stripping the extraction root's path (scheme and authority
-        // may be spelled differently), or any encodable character in
-        // workDir ('%', space, …) makes the prefix never match and
-        // every row collapses into one empty partition key. url_decode
-        // also maps '+' to space (form encoding), so literal '+' is
-        // pre-escaped to %2B.
-        val decodedPath =
-          url_decode(regexp_replace(col("match_file"), "\\+", "%2B"))
-        val fileKey = regexp_replace(
-          regexp_extract(decodedPath,
-            java.util.regex.Pattern.quote(extRoot.toUri.getPath) + "/(.*)$", 1),
-          ExtensionRe, "")
-        val flat = Flatten
-          .flatten(matches.withColumn("file_key", fileKey).drop("match_file"), outer = true)
-        flat.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("file_key")
-          .parquet(stagingDir)
-      }
+      //    partition-prunable downstream). The write is the one scan
+      //    of the new files' rows and fills `validity`. When every new
+      //    file is corrupt it writes no partition, so existing staging
+      //    is untouched; a staging dir it had to create is removed.
+      //
+      //    input_file_name() is a percent-encoded URI; decode it before
+      //    stripping the extraction root's path (scheme and authority
+      //    may be spelled differently), or any encodable character in
+      //    workDir ('%', space, …) makes the prefix never match and
+      //    every row collapses into one empty partition key. url_decode
+      //    also maps '+' to space (form encoding), so literal '+' is
+      //    pre-escaped to %2B.
+      val decodedPath =
+        url_decode(regexp_replace(col("match_file"), "\\+", "%2B"))
+      val fileKey = regexp_replace(
+        regexp_extract(decodedPath,
+          java.util.regex.Pattern.quote(extRoot.toUri.getPath) + "/(.*)$", 1),
+        ExtensionRe, "")
+      val stagingPath = new Path(stagingDir)
+      val stagingExisted = fs.exists(stagingPath)
+      Flatten.flatten(matches.withColumn("file_key", fileKey).drop("match_file"), outer = true)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("file_key")
+        .parquet(stagingDir)
+      val nValid = validity.get("n_valid").asInstanceOf[Long]
+      val nCorrupt = validity.get("n_total").asInstanceOf[Long] - nValid
+      if (nValid == 0 && !stagingExisted) fs.delete(stagingPath, true)
 
       // 5. state update (S8). New keys are disjoint from the ledger by
       //    construction (notYetPresent), so the merge is a union; the

@@ -471,4 +471,52 @@ class PipelineSpec extends SparkSpecBase {
       s"staging read: ${stagingReads5 ++ stagingReads40}")
     assert(jobs5 == jobs40, s"jobs grew with history: $jobs5 at 5 files, $jobs40 at 40")
   }
+
+  test("a first run that lands only corrupt files stages nothing and leaves no staging dir") {
+    val landing = tmpDir("allbad_landing")
+    val work = tmpDir("allbad_work")
+    zipOf(landing, "bad.zip", Map(
+      "b1.json" -> "{ not json".getBytes("UTF-8"),
+      "b2.json" -> "not json at all".getBytes("UTF-8")))
+    val r1 = runChecked(landing, work)
+    assert(r1.newFiles == 2 && r1.corruptFiles == r1.newFiles && r1.stagedRows == 0)
+    assert(!Files.exists(Paths.get(work, "staging")), "an all-corrupt batch created staging")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "good.zip", Map("m1.json" -> tiny))
+    val r2 = runChecked(landing, work)
+    assert(r2.newFiles == 1 && r2.corruptFiles == 0 && r2.stagedRows == 4)
+  }
+
+  test("extraction opens the work dir with the session's Hadoop conf") {
+    // a scheme only the session conf knows; with the FileSystem cache
+    // off for it, a fresh Configuration cannot open it
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", classOf[GraftfsLocalFileSystem].getName)
+    conf.setBoolean("fs.graftfs.impl.disable.cache", true)
+    try {
+      val landing = tmpDir("scheme_landing")
+      val work = "graftfs:" + tmpDir("scheme_work")
+      val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+      val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+      zipOf(landing, "batch1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+      val r1 = runChecked(landing, work)
+      assert(r1.newFiles == 2 && r1.stagedRows == 4 + 52 && !r1.hadDrift)
+      val r2 = runChecked(landing, work)
+      assert(r2.newFiles == 0 && r2.stagedRows == 0)
+      zipOf(landing, "batch2.zip", Map("m3.json" -> tiny))
+      val r3 = runChecked(landing, work)
+      assert(r3.newFiles == 1 && r3.stagedRows == 56 + 4 && !r3.hadDrift)
+    } finally {
+      conf.unset("fs.graftfs.impl")
+      conf.unset("fs.graftfs.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under the scheme `graftfs:`, which only a
+  * Hadoop conf naming this class in `fs.graftfs.impl` can open.
+  */
+class GraftfsLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+  override def getScheme: String = "graftfs"
 }

@@ -54,4 +54,16 @@ class QueryMeterSpec extends SparkSpecBase {
       assert(meter.measure("minhash_dedup", SparkEntry.queries("minhash_dedup")).cacheBuilds.isEmpty)
     }
   }
+
+  test("a subset sweep that never reaches a table's release point still guards and releases it") {
+    withMeter { meter =>
+      LlmQueries.clearCaches(Some(spark))
+      val stats = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      val rs = BenchShared.sweep(meter, Seq("minhash_dedup" -> SparkEntry.queries("minhash_dedup")), stats)
+      assert(rs.map(_.name) == Seq("minhash_dedup") && !rs.head.failed)
+      assert(rs.head.cacheBuilds.contains("bands"))
+      assert(stats.contains("lsh_max_band_bucket"))
+      assert(LlmQueries.memoizedTags(spark).isEmpty)
+    }
+  }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import graft.sources.Cricsheet
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,6 +48,16 @@ class FlattenSpec extends SparkSpecBase {
     assert(flat.collect().head.toSeq == Seq(1, 5))
   }
 
+  test("a suffixed name is taken for the struct's later fields too") {
+    val df = Seq((1, 5, 7)).toDF("a_b", "x", "y")
+      .withColumn("a", struct($"x".as("b"), $"y".as("b_1")))
+      .select($"a_b", $"a")
+    val flat = Flatten.flatten(df)
+    assert(flat.columns.toSeq == Seq("a_b", "a_b_1", "a_b_1_1"))
+    assert(flat.collect().head.toSeq == Seq(1, 5, 7))
+    assert(FlattenModel.flatten(df).columns.toSeq == flat.columns.toSeq)
+  }
+
   test("maps flatten to key/value rows") {
     val df = Seq((1L, Map("k1" -> 10, "k2" -> 20))).toDF("id", "m")
     val flat = Flatten.flatten(df)
@@ -80,5 +93,37 @@ class FlattenSpec extends SparkSpecBase {
     val flat = Flatten.flatten(df)
     assert(flat.isEmpty)
     assert(Flatten.nestedColumns(flat).isEmpty)
+  }
+
+  test("null and empty arrays, null struct elements and arrays of arrays match the model") {
+    val elem = StructType(Seq(
+      StructField("v", LongType),
+      StructField("tags", ArrayType(StringType))))
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("xs", ArrayType(elem)),
+      StructField("grid", ArrayType(ArrayType(LongType))),
+      StructField("m", MapType(StringType, ArrayType(LongType)))))
+    val rows = Seq(
+      Row(1L, Seq(Row(1L, Seq("a", "b")), null, Row(2L, null), Row(3L, Seq.empty)),
+        Seq(Seq(1L, 2L), null, Seq.empty, Seq(3L)), Map("k" -> Seq(7L, 8L), "e" -> null)),
+      Row(2L, null, null, null),
+      Row(3L, Seq.empty, Seq.empty, Map.empty[String, Seq[Long]]),
+      Row(4L, Seq(null), Seq(Seq(null, 5L)), Map("k" -> Seq.empty[Long])))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    Seq(true, false).foreach { outer =>
+      val got = Flatten.flatten(df, outer)
+      val want = FlattenModel.flatten(df, outer)
+      assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+      assert(got.collect().toSeq == want.collect().toSeq, s"outer=$outer")
+    }
+  }
+
+  test("the cricsheet match schema flattens through exactly one generator") {
+    val matches = Cricsheet.readMatchFiles(spark, Seq(fixture("match_full.json"))).drop("match_file")
+    Seq(true, false).foreach { outer =>
+      val plan = Flatten.flatten(matches, outer).queryExecution.optimizedPlan
+      assert(plan.collect { case g: Generate => g }.size == 1, plan.treeString)
+    }
   }
 }
