@@ -13,10 +13,16 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
+# the checkout this script lives in: Verify runs from its sources, and
+# the default dump dir is under its target/
+REPO = Path(__file__).resolve().parents[1]
+
 pos = [a for a in sys.argv[1:] if not a.startswith("--")]
 flags = set(a for a in sys.argv[1:] if a.startswith("--"))
 SF = pos[0] if len(pos) > 0 else "/root/testdata/sf0.01"
-OUT = pos[1] if len(pos) > 1 else "/root/repo/target/verify_out"
+# absolute, so Verify (run from REPO) and the compare below (run from
+# the caller's cwd) agree on a relative dump dir
+OUT = str(Path(pos[1]).resolve()) if len(pos) > 1 else str(REPO / "target" / "verify_out")
 only = pos[2:]
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -27,7 +33,7 @@ if "--skip-verify" not in flags:
     names = (" " + " ".join(only)) if only else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{names}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=REPO, capture_output=True, text=True)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-3000:])

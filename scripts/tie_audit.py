@@ -19,10 +19,12 @@ single-row aggregates among them are trivially safe.
 Dev tooling only (driver-side python); not part of the Scala library.
 """
 import json, re, sys
+from pathlib import Path
 import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ORACLE_PATH = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out/oracle_sql.json"
+ORACLE_PATH = sys.argv[2] if len(sys.argv) > 2 else str(
+    Path(__file__).resolve().parents[1] / "target" / "verify_out" / "oracle_sql.json")
 ORACLE = json.load(open(ORACLE_PATH))
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 con = duckdb.connect()

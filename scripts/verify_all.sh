@@ -2,7 +2,8 @@
 # One-command verification entry point (VERDICT r9 item 7 / r10 item 7):
 # full oracle compare at sf0.01 AND sf0.1, the null-corpus
 # oracle-equality sweep for the NTILE/running-sum family, the whole
-# ScalaTest suite, and the sf0.1 bench — single exit code, and the
+# ScalaTest suite (after the benchmark's own Python unit tests), and
+# the sf0.1 bench — single exit code, and the
 # bench's parsed per-query record committed-ready as
 # BENCH_LOCAL_r${ROUND}.json.
 #
@@ -39,6 +40,9 @@ python3 scripts/tie_audit.py /root/testdata/sf0.01 \
   target/verify_out/oracle_sql.json || rc=1
 python3 scripts/tie_audit.py /tmp/null_corpus \
   target/verify_out/oracle_sql.json || rc=1
+
+step "perfbench unit tests (pure Python; reads perfbench/, writes nothing there)"
+PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench/tests || rc=1
 
 step "sbt test"
 sbt -batch test || rc=1

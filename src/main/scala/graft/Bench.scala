@@ -382,20 +382,13 @@ object Bench {
     val cpuTotal = readings.map(_.cpuSec).sum
     val gcTotal = readings.map(_.gcSec).sum
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // End-of-run JIT CodeCache occupancy (segmented pools on JDK 17):
-    // a full pool (used ≈ max on the non-profiled segment) means the
-    // JIT stopped compiling and hot loops run interpreted — the
-    // driver-side failure mode r11's record could not see.
-    val codeCacheJson = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))
-        .map { p =>
-          val u = p.getUsage
-          "\"" + p.getName.replace("'", "") + "\":{\"used_mb\":" +
-            (u.getUsed >> 20) + ",\"max_mb\":" + (u.getMax >> 20) + "}"
-        }.mkString("{", ",", "}")
-    }
+    // What the run leaves resident, read after a full GC so the heap
+    // and metaspace figures are what Spark's codegen class cache and
+    // the other JVM-wide state really retain.
+    System.gc()
+    val retainedJson = BenchRecord.retainedJson(BenchRecord.livePools(),
+      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed,
+      readings.map(_.codegenCompiles).sum)
     val syncFullStr = String.format(java.util.Locale.ROOT, "%.1f", Double.box(syncSec))
     val recheckSec = rechecks.map(r => r.name -> r.wallSec)
     val probeField = probeJson.map(p => s""","probe":$p""").getOrElse("")
@@ -405,7 +398,7 @@ object Bench {
     // consumer grepping for it can never double-count or pick the
     // truncated head of this long line.
     val full =
-      s"""{"metric":"total_full","value":${f3(total)},"unit":"sec","queries":${secMapJson(results)},"cpu_sec":${secCol(_.cpuSec)},"gc_sec":${secCol(_.gcSec)},"cpu_total":${f3(cpuTotal)},"gc_total":${f3(gcTotal)},"proc_user_sec":${secCol(_.procUserSec)},"proc_sys_sec":${secCol(_.procSysSec)},"sync_sec":$syncFullStr,"failed":$failed,"cache_builds":${tagsJson(readings)},"bucket_stats":${longMapJson(bucketStats)},"recheck_sec":${secMapJson(recheckSec)},"recheck_builds":${tagsJson(rechecks)},"codegen_compiles":${longMapJson(readings.map(r => r.name -> r.codegenCompiles))},"jit_ms":${longMapJson(readings.map(r => r.name -> r.jitMs))},"code_cache":$codeCacheJson$probeField,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":${f3(total)},"unit":"sec","queries":${secMapJson(results)},"cpu_sec":${secCol(_.cpuSec)},"gc_sec":${secCol(_.gcSec)},"cpu_total":${f3(cpuTotal)},"gc_total":${f3(gcTotal)},"proc_user_sec":${secCol(_.procUserSec)},"proc_sys_sec":${secCol(_.procSysSec)},"sync_sec":$syncFullStr,"failed":$failed,"cache_builds":${tagsJson(readings)},"bucket_stats":${longMapJson(bucketStats)},"recheck_sec":${secMapJson(recheckSec)},"recheck_builds":${tagsJson(rechecks)},"codegen_compiles":${longMapJson(readings.map(r => r.name -> r.codegenCompiles))},"jit_ms":${longMapJson(readings.map(r => r.name -> r.jitMs))},$retainedJson$probeField,"sf":"$sfDir"}"""
     // The harness that records this output keeps a ~2000-char tail of
     // the COMBINED console stream and parses the last JSON line it
     // finds there. Every round through r12 recorded `parsed: null`,
@@ -461,10 +454,11 @@ object Bench {
 }
 
 /** The compact stdout record — the ONE line the driver's bounded tail
-  * capture must be able to parse. Pure (no Spark), so BenchRecordSpec
-  * can pin the two contract properties directly: it is valid JSON, and
-  * at the full inventory size with worst-case query names and a capped
-  * failure list it stays under the recorder's ~2000-char window.
+  * capture must be able to parse — and the full record's resident-state
+  * fields. Pure (no Spark), so BenchRecordSpec can pin the contract
+  * properties directly: the line is valid JSON, and at the full
+  * inventory size with worst-case query names and a capped failure list
+  * it stays under the recorder's ~2000-char window.
   */
 object BenchRecord {
   /** Hard budget for the compact line. The recorder keeps ~2000 chars
@@ -487,6 +481,44 @@ object BenchRecord {
 
   private def secMapJson(m: Iterable[(String, Double)]): String =
     m.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+
+  /** One JVM memory pool at the end of a run, in bytes (`max` is -1
+    * when the pool has no limit).
+    */
+  final case class Pool(name: String, used: Long, committed: Long, max: Long)
+
+  /** This JVM's memory pools, as they stand now. */
+  def livePools(): Seq[Pool] = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq.map { p =>
+      val u = p.getUsage
+      Pool(p.getName, u.getUsed, u.getCommitted, u.getMax)
+    }
+  }
+
+  /** The full record's resident-state fields:
+    *  - `code_cache`: JIT CodeCache occupancy per segment (segmented
+    *    pools on JDK 17). A full non-profiled segment means the JIT
+    *    stopped compiling and hot loops run interpreted.
+    *  - `metaspace`: used and committed MB. Every generated class that
+    *    Spark's codegen class cache keeps alive stays loaded here.
+    *  - `heap_after_gc_mb`: heap used after a full GC. The cache's keys
+    *    hold each class's full source text.
+    *  - `codegen_compiles_total`: the sweep's summed per-query codegen
+    *    compile counts.
+    */
+  def retainedJson(pools: Seq[Pool], heapAfterGc: Long, codegenCompilesTotal: Long): String = {
+    val codeCache = pools
+      .filter(p => p.name.contains("CodeHeap") || p.name.contains("Code Cache"))
+      .map { p =>
+        "\"" + p.name.replace("'", "") + "\":{\"used_mb\":" + (p.used >> 20) +
+          ",\"max_mb\":" + (p.max >> 20) + "}"
+      }.mkString("{", ",", "}")
+    val metaspace = pools.find(_.name == "Metaspace")
+      .map(p => s"""{"used_mb":${p.used >> 20},"committed_mb":${p.committed >> 20}}""")
+      .getOrElse("{}")
+    s""""code_cache":$codeCache,"metaspace":$metaspace,"heap_after_gc_mb":${heapAfterGc >> 20},"codegen_compiles_total":$codegenCompilesTotal"""
+  }
 
   def compactLine(
       results: Seq[(String, Double)],

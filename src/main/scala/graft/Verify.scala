@@ -1,18 +1,36 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional name filter (dev iteration): dump only these queries.
+    val spark = GraftSession.local()
+    val errors = dump(spark, sfDir, outDir, args.drop(2).toSet)
+    // loud, but rc stays 0: the driver must still run its compare over
+    // the partial dump — the green subset is evidence worth keeping
+    if (errors.nonEmpty)
+      System.err.println(s"[verify] ${errors.size} queries FAILED to dump " +
+        s"(missing from the correctness record): ${errors.keys.mkString(", ")}")
+    spark.stop()
+    dropDumpFromPageCache(outDir)
+  }
+
+  /** Dump each `SparkEntry.queries` result (or only the named ones, for
+    * dev iteration) to `outDir/<name>` as parquet, plus
+    * `oracle_sql.json` and `verify_errors.json`. Returns the errors:
+    * query name → message of each query that failed to dump.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Set[String]): Map[String, String] = {
     // Unknown names fail loudly — a typo must not silently dump
     // nothing and surface later as an unrelated compare error.
-    val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"no such queries: ${unknown.mkString(", ")}")
-    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // A query that fails here silently vanishes from the driver's
     // correctness record (its row simply never appears) — round 7 lost
@@ -48,13 +66,7 @@ object Verify {
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
-    // loud, but rc stays 0: the driver must still run its compare over
-    // the partial dump — the green subset is evidence worth keeping
-    if (errors.nonEmpty)
-      System.err.println(s"[verify] ${errors.size} queries FAILED to dump " +
-        s"(missing from the correctness record): ${errors.keys.mkString(", ")}")
-    spark.stop()
-    dropDumpFromPageCache(outDir)
+    errors.toMap
   }
 
   /** Writeback mitigation at the source (VERDICT r13 item 2): the

@@ -104,4 +104,25 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(n.get("failed").get(8).asText == "+42 more")
     assert(n.get("n_queries").asInt == 51)
   }
+
+  test("full record's resident-state fields: code cache, metaspace, heap after GC, compiles") {
+    val mb = 1L << 20
+    val pools = Seq(
+      BenchRecord.Pool("CodeHeap 'non-nmethods'", 5 * mb, 6 * mb, 7 * mb),
+      BenchRecord.Pool("CodeHeap 'non-profiled nmethods'", 100 * mb, 120 * mb, 250 * mb),
+      BenchRecord.Pool("Metaspace", 150 * mb, 160 * mb, -1L),
+      BenchRecord.Pool("G1 Old Gen", 900 * mb, 1000 * mb, 4000 * mb))
+    val n = parse("{" + BenchRecord.retainedJson(pools, 300 * mb, 9035L) + "}")
+    assert(n.get("code_cache").size == 2)
+    val np = n.get("code_cache").get("CodeHeap non-profiled nmethods")
+    assert(np.get("used_mb").asLong == 100 && np.get("max_mb").asLong == 250)
+    assert(n.get("metaspace").get("used_mb").asLong == 150)
+    assert(n.get("metaspace").get("committed_mb").asLong == 160)
+    assert(n.get("heap_after_gc_mb").asLong == 300)
+    assert(n.get("codegen_compiles_total").asLong == 9035L)
+    // this JVM's own pools carry the names the record looks for
+    val live = parse("{" + BenchRecord.retainedJson(BenchRecord.livePools(), 0L, 0L) + "}")
+    assert(live.get("code_cache").size > 0)
+    assert(live.get("metaspace").get("used_mb").asLong > 0)
+  }
 }
