@@ -2,8 +2,8 @@
 # One-command verification entry point (VERDICT r9 item 7 / r10 item 7):
 # full oracle compare at sf0.01 AND sf0.1, the null-corpus
 # oracle-equality sweep for the NTILE/running-sum family, the whole
-# ScalaTest suite (after the benchmark's own Python unit tests), and
-# the sf0.1 bench — single exit code, and the
+# ScalaTest suite (after the benchmark's own Python unit tests), one
+# checked etl_daily run of the benchmark, and the sf0.1 bench — single exit code, and the
 # bench's parsed per-query record committed-ready as
 # BENCH_LOCAL_r${ROUND}.json.
 #
@@ -46,6 +46,11 @@ PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench/tests || rc=
 
 step "sbt test"
 sbt -batch test || rc=1
+
+step "etl_daily end to end (perfbench checks every RunResult and ledger)"
+# exits 1 on any wrong RunResult or ledger: the staging path is checked
+# against the match generator's own expected counts
+python3 perfbench/run.py --workload etl_daily --seed 1 --seconds 1 --trace 0 || rc=1
 
 if [ "${SKIP_BENCH:-0}" != "1" ]; then
   step "bench @ sf0.1"

@@ -6,8 +6,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
@@ -21,9 +24,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Each stage is a distributed operator: unzip fans out per-archive,
   * new-file selection is an anti-join against the ledger, extraction
-  * writes from the executors that already hold the bytes, flatten is the
-  * fix-point plan builder, staging is parquet partitioned by
-  * file_key. Running again with no new input is a no-op.
+  * writes from the executors that already hold the bytes (the same job
+  * returns the selected names), flatten is one generator planned on the
+  * schema, staging is parquet partitioned by file_key. Running again
+  * with no new input is a no-op.
   *
   * Every access to `workDir` (extraction, staging, ledger, schema log)
   * goes through the Hadoop FileSystem of that path, so `workDir` may be
@@ -171,25 +175,54 @@ object Pipeline {
     else Seq.empty[LedgerRow].toDF()
   }
 
-  /** Executor-side extraction of one partition of (entry_name, bytes)
-    * through the Hadoop FileSystem of `extractedRoot`, opened with the
-    * session's Hadoop conf (credentials, `fs.<scheme>.impl`, …); parent
-    * dirs are created implicitly. Entry names that would escape the
-    * extraction root (absolute, or `../` — zip-slip) fail the task
-    * loudly rather than writing elsewhere.
+  /** Executor-side extraction of one partition of (entry_name,
+    * file_key, content) rows through the Hadoop FileSystem of
+    * `extractedRoot`, opened with the session's Hadoop conf (credentials,
+    * `fs.<scheme>.impl`, …); parent dirs are created implicitly. Entry
+    * names that would escape the extraction root (absolute, or `../` —
+    * zip-slip) fail the task loudly rather than writing elsewhere.
+    * Writes at most `bound` entries and returns their (entry_name,
+    * file_key) pairs: a partition that reaches the bound already makes
+    * the run fail.
     */
-  private def writeEntries(extractedRoot: String, hadoopConf: SerializableConfiguration)(
-      it: Iterator[(String, Array[Byte])]): Unit = {
-    val conf = hadoopConf.value
-    it.foreach { case (name, bytes) =>
+  private def writeEntries(
+      extractedRoot: String, hadoopConf: Broadcast[SerializableConfiguration], bound: Int)(
+      it: Iterator[InternalRow]): Array[(String, String)] = {
+    val conf = hadoopConf.value.value
+    it.take(bound).map { row =>
+      val name = row.getUTF8String(0).toString
       val rel = java.nio.file.Paths.get(name).normalize()
       require(!rel.isAbsolute && !rel.startsWith(".."),
         s"zip entry '$name' escapes the extraction dir (zip-slip)")
       val target = new Path(extractedRoot, rel.toString)
-      val fs = target.getFileSystem(conf)
-      val out = fs.create(target, true)
-      try out.write(bytes)
+      val out = target.getFileSystem(conf).create(target, true)
+      try out.write(row.getBinary(2))
       finally out.close()
+      name -> row.getUTF8String(1).toString
+    }.toArray
+  }
+
+  /** Select and extract in one job: every task writes its partition of
+    * `newEntries` and returns its (entry_name, file_key) pairs; the
+    * driver keeps the first `bound` of them, in partition order.
+    */
+  private def extract(
+      newEntries: DataFrame,
+      extractedRoot: String,
+      hadoopConf: Broadcast[SerializableConfiguration],
+      bound: Int): Seq[(String, String)] = {
+    val qe = newEntries.select("entry_name", "file_key", "content").queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("extract")) {
+      val rows = qe.toRdd
+      val parts = Array.fill(rows.getNumPartitions)(Array.empty[(String, String)])
+      var kept = 0
+      qe.sparkSession.sparkContext.runJob(rows,
+        writeEntries(extractedRoot, hadoopConf, bound) _,
+        (i: Int, pairs: Array[(String, String)]) => {
+          parts(i) = pairs.take(bound - kept)
+          kept += parts(i).length
+        })
+      parts.toSeq.flatten
     }
   }
 
@@ -220,14 +253,19 @@ object Pipeline {
     * @param landingDir  dir of zip archives of match JSON (the S3 bucket)
     * @param workDir     scratch root: extracted files, staging, state, schema log
     * @param maxDriverRows bound on the two metadata collects that come
-    *   to the driver: the new files' (entry name, file_key) pairs, one
-    *   bounded collect that both selects the batch and sizes it, and
+    *   to the driver: the new files' (entry name, file_key) pairs, which
+    *   the extraction job returns (it both selects the batch and sizes
+    *   it; the driver keeps at most `maxDriverRows + 1` of them), and
     *   the schema-log rows for the drift diff. The per-key footer reads
     *   and the ledger rows built on the driver follow the first bound.
     *   Both are metadata — tiny at the reference's daily cadence — but
     *   a million-file backfill would otherwise accrete an unbounded
     *   driver array; past the bound the run fails LOUDLY with the
-    *   batching remedy instead of slowly OOMing the driver.
+    *   batching remedy instead of slowly OOMing the driver. It fails
+    *   before anything is staged or written to the ledger, but after
+    *   extraction: up to `maxDriverRows + 1` new files per extraction
+    *   task may already be in `workDir/extracted`. That is scratch
+    *   space; the run that lands them rewrites them.
     * @param notifyDrift drift-notification transport — the reference emails
     *   the same report via SNS (`notifyChanges`,
     *   /root/reference/airflow-setup/Scripts/compare_schema.py:106-124);
@@ -270,10 +308,16 @@ object Pipeline {
       .notYetPresent(entries, state.select("file_key"))
       .withColumn("_rn", row_number().over(latestWins))
       .filter(col("_rn") === 1).drop("_rn")
-      .persist()
+    val hadoopConf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     try {
-      val picked = newEntries.select("entry_name", "file_key").as[(String, String)]
-        .limit(collectBound).collect().toSeq
+      // 2. land extracted JSON (one file per match, like the json
+      //    bucket), written by the executors that already hold the
+      //    bytes — no collect of file contents through the driver. The
+      //    same job brings the batch's (entry name, file_key) pairs to
+      //    the driver, bounded: it both selects the batch and sizes it.
+      val extRoot = fs.makeQualified(new Path(extractedDir))
+      val picked = extract(newEntries, extRoot.toString, hadoopConf, collectBound)
       if (picked.isEmpty) return RunResult(0, 0, "no new files", hadDrift = false)
       if (picked.length > maxDriverRows)
         throw new IllegalStateException(
@@ -281,15 +325,6 @@ object Pipeline {
             "the run collects new-entry names and keys to the driver. Backfills this " +
             "large should run in batches (ingest the landing dir in slices and call " +
             "runOnce per slice), or raise maxDriverRows if the driver has headroom.")
-
-      // 2. land extracted JSON (one file per match, like the json
-      //    bucket), written by the executors that already hold the
-      //    bytes — no collect of file contents through the driver
-      val extRoot = fs.makeQualified(new Path(extractedDir))
-      fs.mkdirs(extRoot)
-      val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-      newEntries.select("entry_name", "content").as[(String, Array[Byte])]
-        .foreachPartition(writeEntries(extRoot.toString, hadoopConf) _)
 
       // 3. read ONLY the new matches (the reference scopes its crawler
       //    to new prefixes the same way) — explicit schema fast path.
@@ -401,6 +436,6 @@ object Pipeline {
 
       RunResult(picked.length, total.get("staged_rows").asInstanceOf[Long],
         driftMsg, hadDrift, nCorrupt)
-    } finally newEntries.unpersist()
+    } finally hadoopConf.destroy()
   }
 }

@@ -1,13 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, functions}
-import org.apache.spark.sql.functions._
+import graft.plans.{FlattenProgram, FlattenRows}
+import graft.plans.FlattenProgram.Path
+import org.apache.spark.sql.{DataFrame, GraftOfRowsBridge}
+import org.apache.spark.sql.catalyst.expressions.CreateStruct
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Recursive flatten of nested DataFrames: structs expand to
   * `parent_child` columns, arrays explode to one row per element, maps
-  * become `name_key`/`name_value` (via `map_entries`, then the
-  * array+struct paths take over).
+  * explode to one row per entry with `name_key`/`name_value` columns
+  * (each entry read as the struct `map_entries` makes).
   *
   * Re-expresses the intent of the reference's `flatten_df`
   * (/root/reference/airflow-setup/Scripts/transformation_job.py:19-34)
@@ -24,23 +28,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
   *
   * Scale note: this is a driver-side *plan builder* that runs its
   * fix-point on the `StructType` alone — no Dataset is analysed per
-  * pass. Every column becomes an expression over the input row and the
-  * loop variables of the arrays met so far, and the result is ONE
-  * generator: `inline` over nested `flatten(transform(…))`, one level
-  * per array in the order the fix-point met them. (A chain of one
-  * `Generate` per array carries every unexploded nested column through
-  * each level; for the cricsheet schema it took 2.4× as long to plan
-  * and compiled to one whole-stage codegen class of 1.2M characters,
-  * regenerated on every call.) The price: each input row's
-  * cross-product is built in memory as one array before it is emitted,
-  * so one row's output must fit in a task's memory (a cricsheet match
-  * is a few thousand rows). The plan stays narrow (no shuffle) and
-  * scales linearly in the number of input rows.
+  * pass. Every column becomes a field-ordinal path from the input row
+  * or from the current element of one of the arrays met so far, and
+  * the result is ONE generator, [[graft.plans.FlattenRows]], over that
+  * precomputed program. It walks the arrays with an index stack and
+  * streams the output rows one at a time, so one input row's output
+  * never has to fit in memory: a `limit` over a row whose arrays cross
+  * to 10^8 rows returns at once. The plan resolves in one Analyzer pass
+  * (no lambda variables), stays narrow (no shuffle) and scales
+  * linearly in the number of input rows. Output columns are all
+  * declared nullable.
   */
 object Flatten {
-
-  private def quoted(name: String): String =
-    "`" + name.replace("`", "``") + "`"
 
   /** First name of `base`, `base_1`, `base_2`, … not present in `taken`. */
   private def fresh(taken: Set[String], base: String): String =
@@ -53,10 +52,8 @@ object Flatten {
       case _                                         => false
     }
 
-  /** A column of the plan being built: its value given the loop
-    * variables bound so far (one per array met, outermost first).
-    */
-  private case class Slot(name: String, dataType: DataType, value: Seq[Column] => Column)
+  /** A column of the plan being built: where its value is read from. */
+  private case class Slot(name: String, dataType: DataType, path: Path)
 
   /** Fully flatten `df` until no struct/array/map columns remain.
     *
@@ -65,8 +62,7 @@ object Flatten {
     *              reference's plain `explode` (row-dropping) semantics.
     */
   def flatten(df: DataFrame, outer: Boolean = false, sep: String = "_"): DataFrame = {
-    // (array type, array value given the variables of the loops outside it)
-    val loops = scala.collection.mutable.ArrayBuffer.empty[(ArrayType, Seq[Column] => Column)]
+    val loops = scala.collection.mutable.ArrayBuffer.empty[FlattenProgram.Loop]
 
     @annotation.tailrec
     def loop(slots: Vector[Slot]): Vector[Slot] = {
@@ -77,46 +73,40 @@ object Flatten {
         val replacement = s.dataType match {
           case st: StructType =>
             var taken = slots.patch(idx, Nil, 1).map(_.name).toSet
-            st.fields.toSeq.map { sf =>
+            st.fields.toSeq.zipWithIndex.map { case (sf, i) =>
               val name = fresh(taken, s"${s.name}$sep${sf.name}")
               taken += name
-              Slot(name, sf.dataType, vars => s.value(vars).getField(sf.name))
+              Slot(name, sf.dataType, s.path.copy(steps = s.path.steps :+ (i -> sf.dataType)))
             }
           case at: ArrayType =>
-            val depth = loops.length
-            loops += (at -> s.value)
-            Seq(Slot(s.name, at.elementType, vars => vars(depth)))
+            loops += FlattenProgram.Loop(s.path, at)
+            Seq(Slot(s.name, at.elementType, Path(loops.length - 1, Vector.empty)))
           case mt: MapType =>
-            // map → array<struct<key,value>>; array+struct passes finish it.
+            // one loop over the entries, each a struct<key, value>
+            // (the `map_entries` shape) that the struct rule expands
+            loops += FlattenProgram.Loop(s.path, mt)
             val entry = StructType(Seq(
               StructField("key", mt.keyType, nullable = false),
               StructField("value", mt.valueType, mt.valueContainsNull)))
-            Seq(Slot(s.name, ArrayType(entry, containsNull = false),
-              vars => map_entries(s.value(vars))))
+            Seq(Slot(s.name, entry, Path(loops.length - 1, Vector.empty)))
         }
         loop(slots.patch(idx, replacement, 1))
       }
     }
 
     if (!df.schema.fields.exists(f => isNested(f.dataType))) return df
-    val flat = loop(df.schema.fields.toVector.map(f =>
-      Slot(f.name, f.dataType, _ => col(quoted(f.name)))))
-    def columns(vars: Seq[Column]): Seq[Column] = flat.map(s => s.value(vars).as(s.name))
-    if (loops.isEmpty) return df.select(columns(Nil): _*)
-
-    // explode_outer emits one null row for a null or empty array;
-    // explode emits none, and a null must not null out the enclosing
-    // flatten(), so it becomes an empty array.
-    def elements(at: ArrayType, arr: Column): Column =
-      if (outer) when(size(arr) > 0, arr).otherwise(array(lit(null).cast(at.elementType)))
-      else coalesce(arr, array().cast(at))
-    def nest(depth: Int, vars: Vector[Column]): Column = {
-      val (at, arr) = loops(depth)
-      val xs = elements(at, arr(vars))
-      if (depth == loops.length - 1) transform(xs, v => struct(columns(vars :+ v): _*))
-      else functions.flatten(transform(xs, v => nest(depth + 1, vars :+ v)))
-    }
-    df.select(inline(nest(0, Vector.empty)))
+    val flat = loop(df.schema.fields.toVector.zipWithIndex.map { case (f, i) =>
+      Slot(f.name, f.dataType, Path(FlattenProgram.Input, Vector(i -> f.dataType)))
+    })
+    val program = FlattenProgram(
+      StructType(flat.map(s => StructField(s.name, s.dataType))),
+      loops.toSeq, flat.map(_.path))
+    val input = df.queryExecution.analyzed
+    val generate = Generate(
+      FlattenRows(CreateStruct(input.output), program, outer),
+      unrequiredChildIndex = input.output.indices, outer = false, qualifier = None,
+      generatorOutput = DataTypeUtils.toAttributes(program.schema), child = input)
+    GraftOfRowsBridge.ofRows(df.sparkSession, generate)
   }
 
   /** Names of columns that are still nested (diagnostic / guard). */

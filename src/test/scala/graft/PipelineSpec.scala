@@ -511,6 +511,65 @@ class PipelineSpec extends SparkSpecBase {
       conf.unset("fs.graftfs.impl.disable.cache")
     }
   }
+
+  test("a crash at any stage boundary, then a rerun, leaves what one clean run leaves") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", classOf[CrashingGraftfs].getName)
+    conf.setBoolean("fs.graftfs.impl.disable.cache", true)
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    def staging(work: String) = spark.read.parquet(s"$work/staging")
+    def ledger(work: String): Set[Pipeline.LedgerRow] =
+      spark.read.parquet(s"$work/state").as[Pipeline.LedgerRow].collect().toSet
+
+    /** A history day, then a second day's run with `crash` armed (if
+      * any), then the rerun; the work dir after them and the rerun's
+      * new files.
+      */
+    def days(name: String, crash: Option[String]): (String, Long) = {
+      val landing = tmpDir(s"crash_${name}_landing")
+      val work = "graftfs:" + tmpDir(s"crash_${name}_work")
+      zipOf(landing, "day1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+      assert(runChecked(landing, work).newFiles == 2)
+      zipOf(landing, "day2.zip", Map("m3.json" -> full, "2024/m4.json" -> tiny))
+      crash.foreach { boundary =>
+        CrashingGraftfs.armed = Some(boundary)
+        val e = intercept[Exception](Pipeline.runOnce(spark, landing, work))
+        assert(CrashingGraftfs.armed.isEmpty, s"$boundary never reached")
+        assert(messages(e).exists(_.contains(s"injected crash: $boundary")), e.toString)
+      }
+      (work, runChecked(landing, work).newFiles)
+    }
+
+    try {
+      val (clean, _) = days("clean", None)
+      val want = staging(clean)
+      assert(want.count() == 4 + 52 + 52 + 4)
+      // each boundary and the new files its rerun lands: a crash before
+      // the ledger's first move redoes the day; one between or after the
+      // moves leaves nothing to redo
+      val boundaries = Seq("extraction write" -> 2L, "staging commit" -> 2L,
+        "state -> state.old" -> 2L, "state.tmp -> state" -> 0L, "after the swap" -> 0L)
+      boundaries.zipWithIndex.foreach { case ((boundary, redone), i) =>
+        val (work, newFiles) = days(s"b$i", Some(boundary))
+        assert(newFiles == redone, s"rerun after a crash at $boundary")
+        val got = staging(work)
+        assert(got.count() == want.count() && got.exceptAll(want).isEmpty &&
+          want.exceptAll(got).isEmpty, s"staging after a crash at $boundary")
+        assert(ledger(work) == ledger(clean), s"ledger after a crash at $boundary")
+        val perKey = got.groupBy("file_key").count().as[(String, Long)].collect().toMap
+        assert(ledger(work).map(r => r.file_key -> r.staged_rows).toMap == perKey,
+          s"ledger staged_rows vs staging after a crash at $boundary")
+      }
+    } finally {
+      CrashingGraftfs.armed = None
+      conf.unset("fs.graftfs.impl")
+      conf.unset("fs.graftfs.impl.disable.cache")
+    }
+  }
 }
 
 /** The local filesystem under the scheme `graftfs:`, which only a
@@ -519,4 +578,43 @@ class PipelineSpec extends SparkSpecBase {
 class GraftfsLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
   override def getScheme: String = "graftfs"
+}
+
+/** [[GraftfsLocalFileSystem]] that fails once, like a crash, at the
+  * stage boundary of `Pipeline.runOnce` that [[CrashingGraftfs.armed]]
+  * names. "after the swap" fails the ledger's last move after making it.
+  */
+class CrashingGraftfs extends GraftfsLocalFileSystem {
+  import CrashingGraftfs.crashAt
+  import org.apache.hadoop.fs.Path
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    crashAt("extraction write", f.getParent.getName == "extracted")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    crashAt("staging commit",
+      dst.getParent.getName == "staging" && dst.getName.startsWith("file_key="))
+    crashAt("state -> state.old", src.getName == "state" && dst.getName == "state.old")
+    crashAt("state.tmp -> state", src.getName == "state.tmp" && dst.getName == "state")
+    val moved = super.rename(src, dst)
+    crashAt("after the swap", src.getName == "state.tmp" && dst.getName == "state")
+    moved
+  }
+}
+
+object CrashingGraftfs {
+
+  /** The boundary the next matching call fails at, once. */
+  @volatile var armed: Option[String] = None
+
+  private def crashAt(boundary: String, here: Boolean): Unit = synchronized {
+    if (here && armed.contains(boundary)) {
+      armed = None
+      throw new java.io.IOException(s"injected crash: $boundary")
+    }
+  }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import graft.SparkSpecBase
 import graft.sources.Cricsheet
 import org.apache.spark.sql.Row
+import graft.plans.FlattenRows
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction}
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -122,8 +124,37 @@ class FlattenSpec extends SparkSpecBase {
   test("the cricsheet match schema flattens through exactly one generator") {
     val matches = Cricsheet.readMatchFiles(spark, Seq(fixture("match_full.json"))).drop("match_file")
     Seq(true, false).foreach { outer =>
-      val plan = Flatten.flatten(matches, outer).queryExecution.optimizedPlan
+      val qe = Flatten.flatten(matches, outer).queryExecution
+      val plan = qe.optimizedPlan
       assert(plan.collect { case g: Generate => g }.size == 1, plan.treeString)
+      val generators = qe.analyzed.collect { case g: Generate => g.generator }
+      assert(generators.map(_.getClass) == Seq(classOf[FlattenRows]), qe.analyzed.treeString)
+      val lambdas = qe.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: LambdaFunction | _: ArrayTransform) => e
+      }))
+      assert(lambdas.isEmpty, qe.analyzed.treeString)
     }
+  }
+
+  test("analysing the cricsheet flatten takes a bounded number of Resolution passes") {
+    // ResolveReferences runs once per pass of the Analyzer's Resolution
+    // batch; the lambda form took one pass per nested `transform` (19)
+    val matches = Cricsheet.readMatchFiles(spark, Seq(fixture("match_full.json"))).drop("match_file")
+    val rules = Flatten.flatten(matches, outer = true).queryExecution.tracker.rules
+    val passes = rules.collect {
+      case (name, summary) if name.endsWith("$ResolveReferences") => summary.numInvocations
+    }.sum
+    assert(passes >= 1 && passes <= 2, s"$passes Resolution passes")
+  }
+
+  test("a limit over a row whose arrays cross to 10^8 rows returns at once") {
+    // four arrays of 100 elements: the output is streamed, never built
+    val xs = sequence(lit(1), lit(100))
+    val df = spark.range(1).select(xs.as("a"), xs.as("b"), xs.as("c"), xs.as("d"))
+    val t0 = System.nanoTime()
+    val got = Flatten.flatten(df).limit(10).collect()
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(got.toSeq == (1 to 10).map(d => Row(1, 1, 1, d)))
+    assert(seconds < 30, s"limit(10) took $seconds s")
   }
 }
