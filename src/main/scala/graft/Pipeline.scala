@@ -6,14 +6,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** The reference's entire daily DAG (SURVEY.md §3.1: ingest → unzip
   * fan-out → identify new files → schema drift check → flatten →
@@ -23,14 +19,17 @@ import org.apache.spark.util.SerializableConfiguration
   * state table merged relationally.
   *
   * Each stage is a distributed operator: unzip fans out per-archive,
-  * new-file selection is an anti-join against the ledger, extraction
-  * writes from the executors that already hold the bytes (the same job
-  * returns the selected names), flatten is one generator planned on the
+  * new-file selection is an anti-join of the archives' entry names
+  * (read from their central directories, nothing inflated) against the
+  * ledger whose bounded collect brings only the new entries' names to
+  * the driver, drift inference and staging parse the new entries
+  * straight from their archives' bytes (only they are inflated, nothing
+  * is unpacked to disk), flatten is one generator planned on the
   * schema, staging is parquet partitioned by file_key. Running again
   * with no new input is a no-op.
   *
-  * Every access to `workDir` (extraction, staging, ledger, schema log)
-  * goes through the Hadoop FileSystem of that path, so `workDir` may be
+  * Every access to `workDir` (staging, ledger, schema log) goes
+  * through the Hadoop FileSystem of that path, so `workDir` may be
   * any Spark output path: a local path, a `file:` URI, hdfs://, s3a://.
   * In a cluster deployment it must be a shared filesystem / object
   * store; local mode satisfies this trivially.
@@ -64,12 +63,6 @@ object Pipeline {
     * distinct files' identities).
     */
   private val ExtensionRe = "\\.[^./]*$"
-
-  /** Escape Hadoop glob metacharacters in a path fragment so it is
-    * read as a literal name, not a pattern.
-    */
-  private[graft] def globEscape(name: String): String =
-    name.replaceAll("([\\\\\\[\\]{}*?])", "\\\\$1")
 
   /** One ledger row: the reference's per-file flags (the shape of
     * [[operators.FileState]]) plus the rows the file left in staging.
@@ -175,57 +168,6 @@ object Pipeline {
     else Seq.empty[LedgerRow].toDF()
   }
 
-  /** Executor-side extraction of one partition of (entry_name,
-    * file_key, content) rows through the Hadoop FileSystem of
-    * `extractedRoot`, opened with the session's Hadoop conf (credentials,
-    * `fs.<scheme>.impl`, …); parent dirs are created implicitly. Entry
-    * names that would escape the extraction root (absolute, or `../` —
-    * zip-slip) fail the task loudly rather than writing elsewhere.
-    * Writes at most `bound` entries and returns their (entry_name,
-    * file_key) pairs: a partition that reaches the bound already makes
-    * the run fail.
-    */
-  private def writeEntries(
-      extractedRoot: String, hadoopConf: Broadcast[SerializableConfiguration], bound: Int)(
-      it: Iterator[InternalRow]): Array[(String, String)] = {
-    val conf = hadoopConf.value.value
-    it.take(bound).map { row =>
-      val name = row.getUTF8String(0).toString
-      val rel = java.nio.file.Paths.get(name).normalize()
-      require(!rel.isAbsolute && !rel.startsWith(".."),
-        s"zip entry '$name' escapes the extraction dir (zip-slip)")
-      val target = new Path(extractedRoot, rel.toString)
-      val out = target.getFileSystem(conf).create(target, true)
-      try out.write(row.getBinary(2))
-      finally out.close()
-      name -> row.getUTF8String(1).toString
-    }.toArray
-  }
-
-  /** Select and extract in one job: every task writes its partition of
-    * `newEntries` and returns its (entry_name, file_key) pairs; the
-    * driver keeps the first `bound` of them, in partition order.
-    */
-  private def extract(
-      newEntries: DataFrame,
-      extractedRoot: String,
-      hadoopConf: Broadcast[SerializableConfiguration],
-      bound: Int): Seq[(String, String)] = {
-    val qe = newEntries.select("entry_name", "file_key", "content").queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("extract")) {
-      val rows = qe.toRdd
-      val parts = Array.fill(rows.getNumPartitions)(Array.empty[(String, String)])
-      var kept = 0
-      qe.sparkSession.sparkContext.runJob(rows,
-        writeEntries(extractedRoot, hadoopConf, bound) _,
-        (i: Int, pairs: Array[(String, String)]) => {
-          parts(i) = pairs.take(bound - kept)
-          kept += parts(i).length
-        })
-      parts.toSeq.flatten
-    }
-  }
-
   /** Staging maintenance — run periodically (not per batch): the
     * incremental pipeline writes one parquet file per new source file
     * into its own `file_key=` partition, so a long-running deployment
@@ -250,22 +192,22 @@ object Pipeline {
 
   /** One incremental run.
     *
-    * @param landingDir  dir of zip archives of match JSON (the S3 bucket)
-    * @param workDir     scratch root: extracted files, staging, state, schema log
+    * @param landingDir  dir of zip archives of match JSON (the S3 bucket),
+    *   a Spark path (a glob expands)
+    * @param workDir     root of the run's outputs: staging, state, schema log
     * @param maxDriverRows bound on the two metadata collects that come
-    *   to the driver: the new files' (entry name, file_key) pairs, which
-    *   the extraction job returns (it both selects the batch and sizes
-    *   it; the driver keeps at most `maxDriverRows + 1` of them), and
-    *   the schema-log rows for the drift diff. The per-key footer reads
-    *   and the ledger rows built on the driver follow the first bound.
-    *   Both are metadata — tiny at the reference's daily cadence — but
-    *   a million-file backfill would otherwise accrete an unbounded
-    *   driver array; past the bound the run fails LOUDLY with the
-    *   batching remedy instead of slowly OOMing the driver. It fails
-    *   before anything is staged or written to the ledger, but after
-    *   extraction: up to `maxDriverRows + 1` new files per extraction
-    *   task may already be in `workDir/extracted`. That is scratch
-    *   space; the run that lands them rewrites them.
+    *   to the driver: the new entries' (zip path, entry name, file_key)
+    *   triples, which both select the batch and size it (the driver
+    *   receives at most `maxDriverRows + 1` of them), and the schema-log
+    *   rows for the drift diff. The per-key footer reads, the ledger
+    *   rows built on the driver and the picked names that ride in the
+    *   batch tasks' closure (about 2 MB at the default bound, shipped
+    *   once per stage) follow the first bound. Both are
+    *   metadata — tiny at the reference's daily cadence — but a
+    *   million-file backfill would otherwise accrete an unbounded driver
+    *   array; past the bound the run fails LOUDLY with the batching
+    *   remedy instead of slowly OOMing the driver. It fails before any
+    *   match is parsed or staged and before the ledger gains a row.
     * @param notifyDrift drift-notification transport — the reference emails
     *   the same report via SNS (`notifyChanges`,
     *   /root/reference/airflow-setup/Scripts/compare_schema.py:106-124);
@@ -283,7 +225,6 @@ object Pipeline {
       maxDriverRows: Long = 100000L,
       notifyDrift: String => Unit = msg => System.err.println(s"[pipeline] $msg")): RunResult = {
     import spark.implicits._
-    val extractedDir = s"$workDir/extracted"
     val stagingDir = s"$workDir/staging"
     val statePath = s"$workDir/state"
     val schemaPath = s"$workDir/schema_log"
@@ -291,151 +232,140 @@ object Pipeline {
     // one row past the bound tells "over it" apart from "at it"
     val collectBound = (maxDriverRows + 1).min(Int.MaxValue).toInt
 
-    // 1. unzip fan-out (S2), idempotent per entry: anti-join against
-    //    the ledger replaces the reference's per-file head_object loop.
-    //    file_key = entry path minus extension (dirs kept, so
-    //    2024/m1.json and 2025/m1.json stay distinct); when one run
-    //    sees the same key twice (re-delivery in a second archive, or
-    //    m1.json vs m1.txt), the lexicographically-last (zip, entry)
+    // 1. unzip fan-out (S2) and selection, idempotent per entry: an
+    //    anti-join against the ledger replaces the reference's per-file
+    //    head_object loop. file_key = entry path minus extension (dirs
+    //    kept, so 2024/m1.json and 2025/m1.json stay distinct); when one
+    //    run sees the same key twice (re-delivery in a second archive,
+    //    or m1.json vs m1.txt), the lexicographically-last (zip, entry)
     //    wins — the ordering includes entry_name so same-archive
-    //    collisions resolve deterministically too.
-    val entries = ZipIngest.unzipEntries(spark, landingDir)
-      .withColumn("file_key", regexp_replace(col("entry_name"), ExtensionRe, ""))
+    //    collisions resolve deterministically too. Selection needs only
+    //    the entry names, read from each archive's central directory:
+    //    no entry is inflated. The join is a shuffled hash join on
+    //    file_key: the window after it shuffles on the same key, and a
+    //    broadcast ledger would pin a whole Tungsten page in the block
+    //    manager until the ContextCleaner gets to it. One bounded
+    //    collect brings the batch's triples to the driver: it both
+    //    selects the batch and sizes it.
+    val fileKey = regexp_replace(col("entry_name"), ExtensionRe, "").as("file_key")
+    val entries = ZipIngest.entryNames(spark, landingDir).select(col("zip_path"), col("entry_name"), fileKey)
     val state = loadState(spark, statePath, stagingDir)
     val latestWins = Window.partitionBy(col("file_key"))
       .orderBy(col("zip_path").desc, col("entry_name").desc)
-    val newEntries = StateMerge
-      .notYetPresent(entries, state.select("file_key"))
+    val picked = StateMerge
+      .notYetPresent(entries, state.select("file_key").hint("shuffle_hash"))
       .withColumn("_rn", row_number().over(latestWins))
-      .filter(col("_rn") === 1).drop("_rn")
-    val hadoopConf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    try {
-      // 2. land extracted JSON (one file per match, like the json
-      //    bucket), written by the executors that already hold the
-      //    bytes — no collect of file contents through the driver. The
-      //    same job brings the batch's (entry name, file_key) pairs to
-      //    the driver, bounded: it both selects the batch and sizes it.
-      val extRoot = fs.makeQualified(new Path(extractedDir))
-      val picked = extract(newEntries, extRoot.toString, hadoopConf, collectBound)
-      if (picked.isEmpty) return RunResult(0, 0, "no new files", hadDrift = false)
-      if (picked.length > maxDriverRows)
-        throw new IllegalStateException(
-          s"Pipeline.runOnce: more than maxDriverRows=$maxDriverRows new files — " +
-            "the run collects new-entry names and keys to the driver. Backfills this " +
-            "large should run in batches (ingest the landing dir in slices and call " +
-            "runOnce per slice), or raise maxDriverRows if the driver has headroom.")
+      .filter(col("_rn") === 1)
+      .select("zip_path", "entry_name", "file_key").as[(String, String, String)]
+      .limit(collectBound).collect().toSeq
+    if (picked.isEmpty) return RunResult(0, 0, "no new files", hadDrift = false)
+    if (picked.length > maxDriverRows)
+      throw new IllegalStateException(
+        s"Pipeline.runOnce: more than maxDriverRows=$maxDriverRows new files — " +
+          "the run collects new-entry names and keys to the driver. Backfills this " +
+          "large should run in batches (ingest the landing dir in slices and call " +
+          "runOnce per slice), or raise maxDriverRows if the driver has headroom.")
 
-      // 3. read ONLY the new matches (the reference scopes its crawler
-      //    to new prefixes the same way) — explicit schema fast path.
-      //    Entry names are glob-escaped: Hadoop path resolution treats
-      //    [ ] { } * ? as patterns, so an entry like 'm[1].json' would
-      //    otherwise be written literally but read as a (non-matching)
-      //    glob.
-      val newPaths = picked.map { case (n, _) => s"$extractedDir/${globEscape(n)}" }
-      val allMatches = Cricsheet.readMatchFiles(spark, newPaths)
-      // corrupt files degrade to null rows (PERMISSIVE) — filter them
-      // out of staging and surface the count instead of failing the run.
-      // Both counters ride the staging write's scan via observe
-      // (CollectMetrics, step 4): a count of their own would read every
-      // new file once more — at 100 TB the monitoring must not add
-      // ingest IO.
-      val validFlag =
-        if (allMatches.columns.contains("innings"))
-          when(col("innings").isNotNull, 1L).otherwise(0L)
-        else lit(0L)
-      val validity = org.apache.spark.sql.Observation()
-      val matches = Cricsheet.validMatches(allMatches.observe(validity,
-        count(lit(1)).as("n_total"), coalesce(sum(validFlag), lit(0L)).as("n_valid")))
+    // 2. the batch: re-read ONLY the archives that hold new entries (the
+    //    reference scopes its crawler to new prefixes the same way) and
+    //    inflate exactly the picked entries, keyed as selection keyed
+    //    them — an archive that lands mid-run is not in the batch, so
+    //    staging matches the ledger. Inference and staging each read
+    //    the batch once; nothing is written to disk. The picked names
+    //    (at most maxDriverRows) ride in the tasks' closure.
+    val batch = ZipIngest.readEntries(spark, picked.groupMap(_._1)(_._2))
+      .select(fileKey, col("content").cast("string").as("content"))
 
-      // 3b. drift check = the reference's crawler + compare_schema
-      //     stage: INFER the schema of the new files (the explicit
-      //     matchSchema is a constant and can never drift) and diff its
-      //     leaves against the recorded log. Scoped inference cannot see
-      //     columns that merely don't occur in this batch, so 'dropped'
-      //     is expected noise — drift is added/retyped only, and the log
-      //     records the union (new type wins) like a crawler's catalog.
-      val inferred = Cricsheet.readMatchFiles(spark, newPaths, inferSchema = true).schema
-      val newCols = SchemaDiff.leafColumns(inferred)
-        .filterNot(c => c.name == "match_file" || c.name.startsWith("_corrupt_record"))
-      val logged = fs.exists(new Path(schemaPath))
-      val oldCols =
-        if (logged) {
-          val log = spark.read.schema(SchemaLogSchema).parquet(schemaPath).as[ColumnMeta]
-            .limit(collectBound).collect().toSeq
-          if (log.length > maxDriverRows)
-            throw new IllegalStateException(
-              s"Pipeline.runOnce: schema log holds more than maxDriverRows=$maxDriverRows " +
-                "columns — the drift diff collects the log to the driver. A leaf-column " +
-                "count this size means runaway schema inference (e.g. map-typed data " +
-                "inferred as per-key struct fields); fix the input schema, or raise " +
-                "maxDriverRows if the driver has headroom.")
-          log
-        } else newCols
-      // both sides are on the driver already: diff and render there
-      val (hadDrift, driftMsg) = DriftReport.render(
-        SchemaDiff.diffCols(oldCols, newCols).filter(_.change != "dropped"), "ipl_matches")
-      if (hadDrift) {
-        try notifyDrift(driftMsg)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[pipeline] drift notifier failed: ${e.getMessage}")
-        }
+    // 3. drift check = the reference's crawler + compare_schema stage:
+    //    INFER the schema of the new matches (the explicit matchSchema
+    //    is a constant and can never drift) and diff its leaves against
+    //    the recorded log. Scoped inference cannot see columns that
+    //    merely don't occur in this batch, so 'dropped' is expected
+    //    noise — drift is added/retyped only, and the log records the
+    //    union (new type wins) like a crawler's catalog.
+    val inferred = spark.read.json(batch.select("content").as[String]).schema
+    val newCols = SchemaDiff.leafColumns(inferred).filterNot(_.name.startsWith("_corrupt_record"))
+    val logged = fs.exists(new Path(schemaPath))
+    val oldCols =
+      if (logged) {
+        val log = spark.read.schema(SchemaLogSchema).parquet(schemaPath).as[ColumnMeta]
+          .limit(collectBound).collect().toSeq
+        if (log.length > maxDriverRows)
+          throw new IllegalStateException(
+            s"Pipeline.runOnce: schema log holds more than maxDriverRows=$maxDriverRows " +
+              "columns — the drift diff collects the log to the driver. A leaf-column " +
+              "count this size means runaway schema inference (e.g. map-typed data " +
+              "inferred as per-key struct fields); fix the input schema, or raise " +
+              "maxDriverRows if the driver has headroom.")
+        log
+      } else newCols
+    // both sides are on the driver already: diff and render there
+    val (hadDrift, driftMsg) = DriftReport.render(
+      SchemaDiff.diffCols(oldCols, newCols).filter(_.change != "dropped"), "ipl_matches")
+    if (hadDrift) {
+      try notifyDrift(driftMsg)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[pipeline] drift notifier failed: ${e.getMessage}")
       }
-      // the union changes exactly when a column was added or retyped
-      if (!logged || hadDrift) {
-        val newNames = newCols.map(_.name).toSet
-        val unionCols = newCols ++ oldCols.filterNot(c => newNames.contains(c.name))
-        unionCols.toDF().coalesce(1).write.mode("overwrite").parquet(schemaPath)
-      }
+    }
+    // the union changes exactly when a column was added or retyped
+    if (!logged || hadDrift) {
+      val newNames = newCols.map(_.name).toSet
+      val unionCols = newCols ++ oldCols.filterNot(c => newNames.contains(c.name))
+      unionCols.toDF().coalesce(1).write.mode("overwrite").parquet(schemaPath)
+    }
 
-      // 4. flatten + stage (S5), partitioned by file_key with dynamic
-      //    partition overwrite: each file replaces exactly its own
-      //    partition, making the write idempotent under re-runs (and
-      //    partition-prunable downstream). The write is the one scan
-      //    of the new files' rows and fills `validity`. When every new
-      //    file is corrupt it writes no partition, so existing staging
-      //    is untouched; a staging dir it had to create is removed.
-      //
-      //    input_file_name() is a percent-encoded URI; decode it before
-      //    stripping the extraction root's path (scheme and authority
-      //    may be spelled differently), or any encodable character in
-      //    workDir ('%', space, …) makes the prefix never match and
-      //    every row collapses into one empty partition key. url_decode
-      //    also maps '+' to space (form encoding), so literal '+' is
-      //    pre-escaped to %2B.
-      val decodedPath =
-        url_decode(regexp_replace(col("match_file"), "\\+", "%2B"))
-      val fileKey = regexp_replace(
-        regexp_extract(decodedPath,
-          java.util.regex.Pattern.quote(extRoot.toUri.getPath) + "/(.*)$", 1),
-        ExtensionRe, "")
-      val stagingPath = new Path(stagingDir)
-      val stagingExisted = fs.exists(stagingPath)
-      Flatten.flatten(matches.withColumn("file_key", fileKey).drop("match_file"), outer = true)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("file_key")
-        .parquet(stagingDir)
-      val nValid = validity.get("n_valid").asInstanceOf[Long]
-      val nCorrupt = validity.get("n_total").asInstanceOf[Long] - nValid
-      if (nValid == 0 && !stagingExisted) fs.delete(stagingPath, true)
+    // 4. parse (explicit schema fast path), flatten + stage (S5),
+    //    partitioned by file_key with dynamic partition overwrite: each
+    //    file replaces exactly its own partition, making the write
+    //    idempotent under re-runs (and partition-prunable downstream).
+    //    Corrupt matches parse to null rows (PERMISSIVE) — they are
+    //    filtered out of staging and counted instead of failing the run.
+    //    Both counters ride the write's scan via observe (CollectMetrics):
+    //    a count of their own would unzip the batch once more. When every
+    //    new file is corrupt the write stages no partition, so existing
+    //    staging is untouched; a staging dir it had to create is removed.
+    val allMatches = batch
+      .select(from_json(col("content"), Cricsheet.matchSchema).as("m"), col("file_key"))
+      .select(col("m.*"), col("file_key"))
+    val validity = Observation()
+    val matches = Cricsheet.validMatches(allMatches.observe(validity,
+      count(lit(1)).as("n_total"),
+      coalesce(sum(when(col("innings").isNotNull, 1L).otherwise(0L)), lit(0L)).as("n_valid")))
+    val stagingPath = new Path(stagingDir)
+    val stagingExisted = fs.exists(stagingPath)
+    Flatten.flatten(matches, outer = true)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("file_key")
+      .parquet(stagingDir)
+    val nValid = validity.get("n_valid").asInstanceOf[Long]
+    val nTotal = validity.get("n_total").asInstanceOf[Long]
+    if (nValid == 0 && !stagingExisted) fs.delete(stagingPath, true)
+    // selection and staging read the archives apart: a picked entry the
+    // staging read did not see (its archive was replaced or removed in
+    // between) must not reach the ledger as staged
+    if (nTotal != picked.length)
+      throw new IllegalStateException(
+        s"Pipeline.runOnce: staged $nTotal of the ${picked.length} new entries — an " +
+          "archive in the landing dir changed during the run. The ledger is unchanged; " +
+          "the next run picks the new entries again.")
 
-      // 5. state update (S8). New keys are disjoint from the ledger by
-      //    construction (notYetPresent), so the merge is a union; the
-      //    cumulative staged total is summed over the ledger as it is
-      //    written.
-      val keys = picked.map(_._2)
-      val rowsOf = stagedRowsOf(spark, stagingDir, keys)
-      val added = keys.map(k => LedgerRow(k, true, true, true, true, rowsOf(k))).toDF()
-      val total = org.apache.spark.sql.Observation()
-      swapState(
-        state.unionByName(added)
-          .observe(total, coalesce(sum(col("staged_rows")), lit(0L)).as("staged_rows")),
-        statePath)
+    // 5. state update (S8). New keys are disjoint from the ledger by
+    //    construction (notYetPresent), so the merge is a union; the
+    //    cumulative staged total is summed over the ledger as it is
+    //    written.
+    val keys = picked.map(_._3)
+    val rowsOf = stagedRowsOf(spark, stagingDir, keys)
+    val added = keys.map(k => LedgerRow(k, true, true, true, true, rowsOf(k))).toDF()
+    val total = Observation()
+    swapState(
+      state.unionByName(added)
+        .observe(total, coalesce(sum(col("staged_rows")), lit(0L)).as("staged_rows")),
+      statePath)
 
-      RunResult(picked.length, total.get("staged_rows").asInstanceOf[Long],
-        driftMsg, hadDrift, nCorrupt)
-    } finally hadoopConf.destroy()
+    RunResult(picked.length, total.get("staged_rows").asInstanceOf[Long],
+      driftMsg, hadDrift, nTotal - nValid)
   }
 }

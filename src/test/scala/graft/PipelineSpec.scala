@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions.{col, regexp_extract}
+
 class PipelineSpec extends SparkSpecBase {
 
   private def zipOf(dir: String, zipName: String, entries: Map[String, Array[Byte]]): Unit = {
@@ -202,9 +204,9 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("work dir with URI-encodable characters still partitions staging by file") {
-    // input_file_name() percent-encodes the path; the staging file_key
-    // derivation must decode it or every row collapses into one
-    // empty-key partition that the next run's overwrite then deletes
+    // a file_key derived from a percent-encoded path would collapse
+    // every row into one empty-key partition that the next run's
+    // overwrite then deletes
     val landing = tmpDir("enc_landing")
     val workRoot = tmpDir("enc_work")
     val work = s"$workRoot/with space+plus"
@@ -261,6 +263,55 @@ class PipelineSpec extends SparkSpecBase {
     val venues = spark.read.parquet(s"$work/staging")
       .select($"info_venue").distinct().as[String].collect()
     assert(venues.toSeq == Seq("Venue TXT")) // a.txt > a.json lexicographically
+  }
+
+  test("an entry name one archive holds twice stages once, from its first copy") {
+    val landing = tmpDir("dup_landing")
+    val work = tmpDir("dup_work")
+    val tiny = new String(
+      Files.readAllBytes(Paths.get(fixture("match_tiny.json"))), "UTF-8")
+    // java.util.zip refuses a duplicate name; commons-compress writes it
+    val zout = new org.apache.commons.compress.archivers.zip.ZipArchiveOutputStream(
+      new java.io.File(s"$landing/b.zip"))
+    Seq("Venue First", "Venue Second").foreach { venue =>
+      zout.putArchiveEntry(new org.apache.commons.compress.archivers.zip.ZipArchiveEntry("m1.json"))
+      zout.write(tiny.replace("Wankhede Stadium", venue).getBytes("UTF-8"))
+      zout.closeArchiveEntry()
+    }
+    zout.close()
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 1 && r.stagedRows == 4 && r.corruptFiles == 0)
+    import spark.implicits._
+    val venues = spark.read.parquet(s"$work/staging")
+      .select($"info_venue").distinct().as[String].collect()
+    assert(venues.toSeq == Seq("Venue First"))
+  }
+
+  test("an archive replaced during the run fails it before the ledger changes") {
+    val landing = tmpDir("swap_landing")
+    val work = tmpDir("swap_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny))
+    assert(runChecked(landing, work).newFiles == 1)
+    def ledger(): Set[String] = {
+      import spark.implicits._
+      spark.read.parquet(s"$work/state").select($"file_key").as[String].collect().toSet
+    }
+    // m2 adds a column, so the drift notifier runs: after selection and
+    // inference, before staging. It replaces m2's archive with one that
+    // no longer holds m2.
+    val drifted = new String(tiny, "UTF-8").replace(
+      "\"balls_per_over\": 6,", "\"balls_per_over\": 6, \"forfeited_overs\": 2,")
+    zipOf(landing, "b2.zip", Map("m2.json" -> drifted.getBytes("UTF-8")))
+    val e = intercept[IllegalStateException] {
+      Pipeline.runOnce(spark, landing, work,
+        notifyDrift = _ => zipOf(landing, "b2.zip", Map("m3.json" -> tiny)))
+    }
+    assert(e.getMessage.contains("staged 0 of the 1 new entries"))
+    assert(ledger() == Set("m1"))
+    // the next run picks what the landing dir now holds
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 1 && ledger() == Set("m1", "m3"))
   }
 
   test("maintain compacts staging while preserving partitions and exactly-once") {
@@ -369,19 +420,116 @@ class PipelineSpec extends SparkSpecBase {
       .newFiles == 0)
   }
 
-  test("zip-slip entry names fail the run instead of writing outside the work dir") {
+  test("an entry named ../evil.json writes nothing outside workDir and stages " +
+      "under an escaped file_key= partition") {
     val landing = tmpDir("slip_landing")
-    val work = tmpDir("slip_work")
+    val root = tmpDir("slip_root")
+    val work = s"$root/work"
     val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
     zipOf(landing, "evil.zip", Map("../evil.json" -> tiny))
-    val e = intercept[Exception] {
-      Pipeline.runOnce(spark, landing, work)
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 1 && r.stagedRows == 4)
+    def names(dir: String): Set[String] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName).toSet
+    assert(names(root) == Set("work"), s"written beside the work dir: ${names(root)}")
+    assert(names(landing) == Set("evil.zip"))
+    // the partition writer escapes '/', so the key stays one directory
+    assert(names(s"$work/staging").filter(_.startsWith("file_key=")) == Set("file_key=..%2Fevil"))
+    import spark.implicits._
+    assert(spark.read.parquet(s"$work/staging").select($"file_key").distinct()
+      .as[String].collect().toSeq == Seq("../evil"))
+  }
+
+  test("archive names are read literally: spaces, '%', '+' and glob characters") {
+    val landing = tmpDir("lit_landing")
+    val work = tmpDir("lit_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "day 1%20+[a].zip", Map("m1.json" -> tiny))
+    zipOf(landing, "day{2}*?.zip", Map("m2.json" -> tiny))
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 2 && r.stagedRows == 8 && r.corruptFiles == 0)
+  }
+
+  test("a run writes nothing under workDir/extracted") {
+    val landing = tmpDir("noext_landing")
+    val work = tmpDir("noext_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny, "2024/m2.json" -> full))
+    assert(runChecked(landing, work).newFiles == 2)
+    zipOf(landing, "b2.zip", Map("m3.json" -> tiny))
+    assert(runChecked(landing, work).newFiles == 1)
+    assert(!Files.exists(Paths.get(work, "extracted")))
+    val written = Files.list(Paths.get(work)).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(written.subsetOf(Set("staging", "state", "state.old", "schema_log")), written)
+  }
+
+  test("staged rows equal the flatten of the file reader over the same match files") {
+    import spark.implicits._
+    val landing = tmpDir("same_landing")
+    val work = tmpDir("same_work")
+    val files = tmpDir("same_files")
+    val entries = Map(
+      "m1.json" -> Files.readAllBytes(Paths.get(fixture("match_tiny.json"))),
+      "m2.json" -> Files.readAllBytes(Paths.get(fixture("match_full.json"))),
+      "m3.json" -> "{ not json".getBytes("UTF-8"))
+    zipOf(landing, "b1.zip", entries)
+    entries.foreach { case (name, bytes) => Files.write(Paths.get(files, name), bytes) }
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 3 && r.corruptFiles == 1)
+
+    val got = spark.read.parquet(s"$work/staging")
+    val read = graft.sources.Cricsheet.readMatchFiles(spark, entries.keys.toSeq.map(n => s"$files/$n"))
+    val want = graft.operators.Flatten.flatten(
+        graft.sources.Cricsheet.validMatches(read)
+          .withColumn("file_key", regexp_extract($"match_file", "([^/]+)\\.json$", 1))
+          .drop("match_file"),
+        outer = true)
+      .select(got.columns.toIndexedSeq.map(col): _*)
+    assert(got.count() == 4 + 52)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("no plan a runOnce executes holds a broadcast exchange") {
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Walk extends AdaptiveSparkPlanHelper {
+      def broadcasts(p: SparkPlan): Seq[String] = collectWithSubqueries(p) {
+        case b @ (_: BroadcastExchangeLike | _: BroadcastQueryStageExec) => Seq(b.nodeName)
+        case c: CommandResultExec => broadcasts(c.commandPhysicalPlan)
+      }.flatten
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("zip-slip")))
-    // ../evil.json relative to work/extracted would land in work itself
-    assert(!new java.io.File(s"$work/evil.json").exists())
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.atomic.AtomicInteger()
+    val recorder = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.incrementAndGet()
+        Walk.broadcasts(qe.executedPlan).foreach(b => seen.add(s"$f: $b"))
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val landing = tmpDir("nobc_landing")
+    val work = tmpDir("nobc_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    val bus = spark.sparkContext
+    org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+    spark.listenerManager.register(recorder)
+    try {
+      // a first day, then a day against a non-empty ledger, then a no-op
+      zipOf(landing, "day1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+      assert(Pipeline.runOnce(spark, landing, work).newFiles == 2)
+      zipOf(landing, "day2.zip", Map("m3.json" -> full, "m1.json" -> tiny))
+      assert(Pipeline.runOnce(spark, landing, work).newFiles == 1)
+      assert(Pipeline.runOnce(spark, landing, work).newFiles == 0)
+    } finally {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+      spark.listenerManager.unregister(recorder)
+    }
+    assert(plans.get() > 0)
+    assert(seen.isEmpty, s"broadcasts: ${seen.asScala.mkString("; ")}")
   }
 
   test("a ledger written before staged_rows existed is migrated from staging once") {
@@ -487,7 +635,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(r2.newFiles == 1 && r2.corruptFiles == 0 && r2.stagedRows == 4)
   }
 
-  test("extraction opens the work dir with the session's Hadoop conf") {
+  test("every work-dir access uses the session's Hadoop conf") {
     // a scheme only the session conf knows; with the FileSystem cache
     // off for it, a fresh Configuration cannot open it
     val conf = spark.sparkContext.hadoopConfiguration
@@ -551,7 +699,7 @@ class PipelineSpec extends SparkSpecBase {
       // each boundary and the new files its rerun lands: a crash before
       // the ledger's first move redoes the day; one between or after the
       // moves leaves nothing to redo
-      val boundaries = Seq("extraction write" -> 2L, "staging commit" -> 2L,
+      val boundaries = Seq("staging commit" -> 2L,
         "state -> state.old" -> 2L, "state.tmp -> state" -> 0L, "after the swap" -> 0L)
       boundaries.zipWithIndex.foreach { case ((boundary, redone), i) =>
         val (work, newFiles) = days(s"b$i", Some(boundary))
@@ -587,13 +735,6 @@ class GraftfsLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 class CrashingGraftfs extends GraftfsLocalFileSystem {
   import CrashingGraftfs.crashAt
   import org.apache.hadoop.fs.Path
-
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
-      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
-      : org.apache.hadoop.fs.FSDataOutputStream = {
-    crashAt("extraction write", f.getParent.getName == "extracted")
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     crashAt("staging commit",

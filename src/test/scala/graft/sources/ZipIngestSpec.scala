@@ -38,6 +38,21 @@ class ZipIngestSpec extends SparkSpecBase {
     assert(ZipIngest.unzipEntries(spark, dir).count() == 1)
   }
 
+  test("entryNames lists entries; readEntries reads only the named ones, literally") {
+    val dir = tmpDir("zips3")
+    makeZip(dir, "a[1].zip", Map("x.json" -> """{"v":1}""", "y.json" -> """{"v":2}"""))
+    makeZip(dir, "b.zip", Map("z.json" -> """{"v":3}"""))
+    // not a zip: no rows, as from an empty archive
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "junk.zip"), "<html>")
+    val names = ZipIngest.entryNames(spark, dir).as[(String, String)].collect()
+    assert(names.map(_._2).sorted.toSeq == Seq("x.json", "y.json", "z.json"))
+    val a = names.collectFirst { case (zip, "x.json") => zip }.get
+    val got = ZipIngest.readEntries(spark, Map(a -> Seq("y.json", "gone.json")))
+      .as[(String, String, Array[Byte])].collect()
+    assert(got.map(r => (r._1, r._2, new String(r._3, "UTF-8"))).toSeq ==
+      Seq((a, "y.json", """{"v":2}""")))
+  }
+
   test("listFiles returns names and sizes without reading content") {
     val dir = "/root/testdata/sf0.001"
     val got = ZipIngest.listFiles(spark, dir, "*.parquet")
