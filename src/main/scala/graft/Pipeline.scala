@@ -2,11 +2,16 @@ package graft
 
 import graft.operators.{ColumnMeta, DriftReport, Flatten, SchemaDiff, StateMerge}
 import graft.sources.{Cricsheet, Sinks, ZipIngest}
+import graft.sources.ZipIngest.Archive
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.{DataFrame, Encoders, GraftFromJsonBridge, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +31,25 @@ import org.apache.spark.sql.functions._
   * straight from their archives' bytes (only they are inflated, nothing
   * is unpacked to disk), flatten is one generator planned on the
   * schema, staging is parquet partitioned by file_key. Running again
-  * with no new input is a no-op.
+  * with no new input is a no-op that runs no Spark job.
+  *
+  * Selection opens only the archives the ledger has not seen, as the
+  * reference looks each S3 object up in its ProcessedFiles table
+  * before it reads it (the reference matches by object name only).
+  * Each ledger version keeps, in `state/_archives`, the landing archives
+  * its run listed, by (path, length, modification time); an archive
+  * missing from that record is read, one in it is not. The listing is
+  * taken before any archive is read and every failure comes before the
+  * ledger swap, so every entry key of every recorded archive is in the
+  * ledger. Limits: an archive rewritten in place with the same length
+  * and modification time is not read again; a ledger pruned by hand
+  * must drop its `_archives` (a ledger dir without one reads every
+  * archive, as a legacy ledger does); and the record holds only the
+  * last run's listing of its `landingDir`, so one `workDir` should be
+  * fed from one landing path: runs that alternate paths or globs over
+  * one `workDir` (a sliced backfill, per-day globs) overwrite each
+  * other's record, and the next run over the whole dir reads every
+  * archive again. The output stays correct either way.
   *
   * Every access to `workDir` (staging, ledger, schema log) goes
   * through the Hadoop FileSystem of that path, so `workDir` may be
@@ -76,7 +99,17 @@ object Pipeline {
       staged_rows: Long)
 
   private val LedgerSchema = Encoders.product[LedgerRow].schema
-  private val SchemaLogSchema = Encoders.product[ColumnMeta].schema
+
+  private val NoNewFiles = RunResult(0, 0, "no new files", hadDrift = false)
+
+  /** The landing archives a ledger version covers, one [[Archive]] a
+    * row, kept in the ledger's dir: the `_` prefix hides it from every
+    * Spark read of the ledger, and it moves with the ledger rows in the
+    * swap.
+    */
+  private val ArchivesFile = "_archives"
+  private val ArchivesType = MessageTypeParser.parseMessageType(
+    "message archive { required binary path (STRING); required int64 length; required int64 modificationTime; }")
 
   /** Data files of a directory written by Spark (not `_SUCCESS`, not
     * `.crc` side files), empty when the directory does not exist.
@@ -92,6 +125,27 @@ object Pipeline {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try read(reader)
     finally reader.close()
+  }
+
+  /** The rows of `files` in order, read on the driver (no Spark job),
+    * at most `limit` of them.
+    */
+  private def readRows(files: Seq[Path], conf: Configuration, limit: Int): Vector[Group] =
+    files.iterator.flatMap { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).take(limit).toVector
+      finally reader.close()
+    }.take(limit).toVector
+
+  private def writeArchives(file: Path, archives: Seq[Archive], conf: Configuration): Unit = {
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf).withType(ArchivesType).withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+    val rows = new SimpleGroupFactory(ArchivesType)
+    try archives.foreach { a =>
+      writer.write(rows.newGroup().append("path", a.path).append("length", a.length)
+        .append("modificationTime", a.modificationTime))
+    }
+    finally writer.close()
   }
 
   /** Rows staged under each key, summed on the driver from the parquet
@@ -116,13 +170,17 @@ object Pipeline {
 
   /** Write the ledger via temp + swap (the ledger is input and output
     * of a run). One file: the ledger is metadata, and a one-file
-    * ledger is one task to read on the next run.
+    * ledger is one task to read on the next run. The record of the
+    * `archives` it covers is written into the temp dir before the
+    * swap, so it moves with the rows it describes.
     */
-  private def swapState(ledger: DataFrame, statePath: String): Unit = {
+  private def swapState(ledger: DataFrame, statePath: String, archives: Seq[Archive]): Unit = {
+    val conf = ledger.sparkSession.sparkContext.hadoopConfiguration
     val tmp = new Path(s"$statePath.tmp")
     Sinks.stageParquet(ledger.coalesce(1), tmp.toString)
+    writeArchives(new Path(tmp, ArchivesFile), archives, conf)
     val state = new Path(statePath)
-    val fs = state.getFileSystem(ledger.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = state.getFileSystem(conf)
     if (fs.exists(state)) {
       val old = new Path(s"$statePath.old")
       fs.delete(old, true)
@@ -131,8 +189,8 @@ object Pipeline {
     move(fs, tmp, state)
   }
 
-  /** The ledger, read with its explicit schema (no footer-inference
-    * job), after two repairs:
+  /** The archives the ledger version covers (none when it has no
+    * record), read on the driver after two repairs of the ledger:
     *  - a swap a crash interrupted is finished first: `state` missing
     *    while `state.old` exists means the run died between its two
     *    moves, after `state.tmp` was fully written — move it into place
@@ -140,9 +198,10 @@ object Pipeline {
     *  - a ledger whose footer schema lacks `staged_rows` (written before
     *    the column existed) would read it as null and undercount, so it
     *    is migrated once: one count per key over staging, 0 for keys
-    *    with no staged rows, written back through the swap.
+    *    with no staged rows, written back through the swap with no
+    *    archive record.
     */
-  private def loadState(spark: SparkSession, statePath: String, stagingDir: String): DataFrame = {
+  private def loadState(spark: SparkSession, statePath: String, stagingDir: String): Set[Archive] = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val state = new Path(statePath)
@@ -161,11 +220,14 @@ object Pipeline {
             .join(counts, Seq("file_key"), "left")
             .withColumn("staged_rows", coalesce(col("staged_rows"), lit(0L)))
             .select(LedgerSchema.fieldNames.map(col).toIndexedSeq: _*),
-          statePath)
+          statePath, Nil)
       }
     }
-    if (fs.exists(state)) spark.read.schema(LedgerSchema).parquet(statePath)
-    else Seq.empty[LedgerRow].toDF()
+    val record = new Path(state, ArchivesFile)
+    if (!fs.exists(record)) Set.empty
+    else readRows(Seq(record), conf, Int.MaxValue)
+      .map(g => Archive(g.getString("path", 0), g.getLong("length", 0), g.getLong("modificationTime", 0)))
+      .toSet
   }
 
   /** Staging maintenance — run periodically (not per batch): the
@@ -228,28 +290,39 @@ object Pipeline {
     val stagingDir = s"$workDir/staging"
     val statePath = s"$workDir/state"
     val schemaPath = s"$workDir/schema_log"
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(workDir).getFileSystem(conf)
     // one row past the bound tells "over it" apart from "at it"
     val collectBound = (maxDriverRows + 1).min(Int.MaxValue).toInt
 
     // 1. unzip fan-out (S2) and selection, idempotent per entry: an
     //    anti-join against the ledger replaces the reference's per-file
-    //    head_object loop. file_key = entry path minus extension (dirs
-    //    kept, so 2024/m1.json and 2025/m1.json stay distinct); when one
-    //    run sees the same key twice (re-delivery in a second archive,
-    //    or m1.json vs m1.txt), the lexicographically-last (zip, entry)
-    //    wins — the ordering includes entry_name so same-archive
-    //    collisions resolve deterministically too. Selection needs only
-    //    the entry names, read from each archive's central directory:
-    //    no entry is inflated. The join is a shuffled hash join on
-    //    file_key: the window after it shuffles on the same key, and a
-    //    broadcast ledger would pin a whole Tungsten page in the block
-    //    manager until the ContextCleaner gets to it. One bounded
-    //    collect brings the batch's triples to the driver: it both
-    //    selects the batch and sizes it.
+    //    head_object loop. The landing archives are listed on the driver
+    //    before any is read, and only those the ledger's `_archives`
+    //    record lacks are scanned, by path; when there are none the call
+    //    ends here, having started no Spark job. file_key = entry path
+    //    minus extension (dirs kept, so 2024/m1.json and 2025/m1.json
+    //    stay distinct); when one run sees the same key twice
+    //    (re-delivery in a second archive, or m1.json vs m1.txt), the
+    //    lexicographically-last (zip, entry) wins — the ordering includes
+    //    entry_name so same-archive collisions resolve deterministically
+    //    too. Selection needs only the entry names, read from each
+    //    archive's central directory: no entry is inflated. The join is a
+    //    shuffled hash join on file_key: the window after it shuffles on
+    //    the same key, and a broadcast ledger would pin a whole Tungsten
+    //    page in the block manager until the ContextCleaner gets to it.
+    //    One bounded collect brings the batch's triples to the driver: it
+    //    both selects the batch and sizes it.
+    val listed = ZipIngest.archiveFiles(spark, landingDir)
+    val fresh = listed.filterNot(loadState(spark, statePath, stagingDir))
+    if (fresh.isEmpty) return NoNewFiles
     val fileKey = regexp_replace(col("entry_name"), ExtensionRe, "").as("file_key")
-    val entries = ZipIngest.entryNames(spark, landingDir).select(col("zip_path"), col("entry_name"), fileKey)
-    val state = loadState(spark, statePath, stagingDir)
+    val entries = ZipIngest.entryNames(spark, fresh.map(a => ZipIngest.literal(a.path)): _*)
+      .select(col("zip_path"), col("entry_name"), fileKey)
+    // the ledger, read with its explicit schema (no footer-inference job)
+    val state =
+      if (fs.exists(new Path(statePath))) spark.read.schema(LedgerSchema).parquet(statePath)
+      else Seq.empty[LedgerRow].toDF()
     val latestWins = Window.partitionBy(col("file_key"))
       .orderBy(col("zip_path").desc, col("entry_name").desc)
     val picked = StateMerge
@@ -258,7 +331,12 @@ object Pipeline {
       .filter(col("_rn") === 1)
       .select("zip_path", "entry_name", "file_key").as[(String, String, String)]
       .limit(collectBound).collect().toSeq
-    if (picked.isEmpty) return RunResult(0, 0, "no new files", hadDrift = false)
+    // fresh archives without a new entry (a re-delivery, a corrected
+    // copy) leave the rows as they are and only extend the record
+    if (picked.isEmpty) {
+      swapState(state, statePath, listed)
+      return NoNewFiles
+    }
     if (picked.length > maxDriverRows)
       throw new IllegalStateException(
         s"Pipeline.runOnce: more than maxDriverRows=$maxDriverRows new files — " +
@@ -288,8 +366,8 @@ object Pipeline {
     val logged = fs.exists(new Path(schemaPath))
     val oldCols =
       if (logged) {
-        val log = spark.read.schema(SchemaLogSchema).parquet(schemaPath).as[ColumnMeta]
-          .limit(collectBound).collect().toSeq
+        val log = readRows(dataFiles(new Path(schemaPath), conf), conf, collectBound)
+          .map(g => ColumnMeta(g.getString("name", 0), g.getString("dataType", 0)))
         if (log.length > maxDriverRows)
           throw new IllegalStateException(
             s"Pipeline.runOnce: schema log holds more than maxDriverRows=$maxDriverRows " +
@@ -327,7 +405,7 @@ object Pipeline {
     //    new file is corrupt the write stages no partition, so existing
     //    staging is untouched; a staging dir it had to create is removed.
     val allMatches = batch
-      .select(from_json(col("content"), Cricsheet.matchSchema).as("m"), col("file_key"))
+      .select(GraftFromJsonBridge.fromJson(col("content"), Cricsheet.matchSchema).as("m"), col("file_key"))
       .select(col("m.*"), col("file_key"))
     val validity = Observation()
     val matches = Cricsheet.validMatches(allMatches.observe(validity,
@@ -363,7 +441,7 @@ object Pipeline {
     swapState(
       state.unionByName(added)
         .observe(total, coalesce(sum(col("staged_rows")), lit(0L)).as("staged_rows")),
-      statePath)
+      statePath, listed)
 
     RunResult(picked.length, total.get("staged_rows").asInstanceOf[Long],
       driftMsg, hadDrift, nTotal - nValid)

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipFile}
 import org.apache.commons.compress.utils.SeekableInMemoryByteChannel
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Zip decompress + fan-out (SURVEY.md §2.1 S2): the reference's
   * Lambda unzip (/root/reference/airflow-setup/Scripts/
@@ -21,6 +22,32 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
   */
 object ZipIngest {
 
+  /** An archive as a file: its path (a `zip_path` of this object),
+    * length and modification time.
+    */
+  case class Archive(path: String, length: Long, modificationTime: Long)
+
+  /** The `binaryFile` relation over every `*.zip` under `paths`. */
+  private def zipFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.zip").load(paths: _*)
+
+  /** `path` as a Spark path that names exactly it: glob characters are
+    * escaped, so any archive name reads back as the same archive.
+    */
+  def literal(path: String): String = path.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
+
+  /** The archives the readers of this object scan under `paths`, from
+    * the `binaryFile` relation's own file index (same listing, globs,
+    * hidden-file rule and `*.zip` filter). The driver lists them; Spark
+    * lists in a job only past `parallelPartitionDiscovery.threshold`
+    * paths or subdirectories.
+    */
+  def archiveFiles(spark: SparkSession, paths: String*): Seq[Archive] =
+    zipFiles(spark, paths).queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.listFiles(Nil, Nil) }.flatten
+      .flatMap(_.files.map(_.fileStatus))
+      .map(f => Archive(f.getPath.toString, f.getLen, f.getModificationTime))
+
   /** The rows `read` makes of every `*.zip` under `paths` (Spark paths:
     * directories, archives or globs). Bytes that do not start with a
     * local entry header (a stray non-zip `.zip`, an empty archive) make
@@ -29,9 +56,7 @@ object ZipIngest {
   private def archives[T: Encoder](spark: SparkSession, paths: Seq[String])(
       read: (String, ZipFile) => Seq[T]): Dataset[T] = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.zip")
-      .load(paths: _*)
+    zipFiles(spark, paths)
       .select("path", "content")
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -81,7 +106,7 @@ object ZipIngest {
     */
   def readEntries(spark: SparkSession, picks: Map[String, Seq[String]]): DataFrame = {
     import spark.implicits._
-    archives(spark, picks.keys.toSeq.map(_.replaceAll("""([\\\[\]{}*?])""", """\\$1"""))) {
+    archives(spark, picks.keys.toSeq.map(literal)) {
       (path, zip) =>
         picks.getOrElse(path, Nil).flatMap(name => Option(zip.getEntry(name)).map(e => (path, name, content(zip, e))))
     }.toDF("zip_path", "entry_name", "content")

@@ -660,6 +660,127 @@ class PipelineSpec extends SparkSpecBase {
     }
   }
 
+  /** `body`'s result and the Spark jobs and SQL executions it started. */
+  private def jobsAndExecutions[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val bus = spark.sparkContext
+    org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+    bus.addSparkListener(counter)
+    val r =
+      try body
+      finally {
+        org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+        bus.removeSparkListener(counter)
+      }
+    (r, jobs.get(), executions.get())
+  }
+
+  test("a no-op run starts no Spark job and no SQL execution") {
+    val landing = tmpDir("noop_landing")
+    val work = tmpDir("noop_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+    assert(runChecked(landing, work).newFiles == 2)
+    val (r, jobs, executions) = jobsAndExecutions(Pipeline.runOnce(spark, landing, work))
+    assert(r == Pipeline.RunResult(0, 0, "no new files", hadDrift = false))
+    assert(jobs == 0 && executions == 0, s"$jobs jobs, $executions SQL executions")
+  }
+
+  test("a new archive beside 5 or 40 recorded ones is the only archive a run reads") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+
+    /** Names of the landing paths the scans of a new-data run beside `history` archives read. */
+    def scanned(history: Int): Set[String] = {
+      val landing = tmpDir(s"fresh${history}_landing")
+      val work = tmpDir(s"fresh${history}_work")
+      (1 to history).foreach(i => zipOf(landing, s"h$i.zip", Map(s"h$i.json" -> tiny)))
+      assert(runChecked(landing, work).newFiles == history)
+      zipOf(landing, "day.zip", Map("d1.json" -> tiny))
+      val landingUri = new java.io.File(landing).toURI.getPath.stripSuffix("/")
+      val roots = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
+      val recorder = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          qe.analyzed.foreach {
+            case l: LogicalRelation => l.relation match {
+              case h: HadoopFsRelation => h.location.rootPaths.foreach(roots.add)
+              case _ =>
+            }
+            case _ =>
+          }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val bus = spark.sparkContext
+      org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+      spark.listenerManager.register(recorder)
+      val r =
+        try Pipeline.runOnce(spark, landing, work)
+        finally {
+          org.apache.spark.GraftListenerBridge.drainListenerBus(bus)
+          spark.listenerManager.unregister(recorder)
+        }
+      assert(r.newFiles == 1 && r.stagedRows == 4L * (history + 1))
+      roots.asScala.filter(_.toUri.getPath.startsWith(landingUri)).map(_.getName).toSet
+    }
+
+    assert(scanned(5) == Set("day.zip"))
+    assert(scanned(40) == Set("day.zip"))
+  }
+
+  test("a re-delivery-only archive lands nothing, and the next run starts no Spark job") {
+    val landing = tmpDir("redeliver_landing")
+    val work = tmpDir("redeliver_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny, "m2.json" -> tiny))
+    assert(runChecked(landing, work).newFiles == 2)
+    zipOf(landing, "b2.zip", Map("m2.json" -> tiny))
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 0 && r.stagedRows == 0)
+    val (next, jobs, executions) = jobsAndExecutions(Pipeline.runOnce(spark, landing, work))
+    assert(next.newFiles == 0)
+    assert(jobs == 0 && executions == 0, s"$jobs jobs, $executions SQL executions")
+  }
+
+  test("an archive rewritten in place with a new entry is read again") {
+    val landing = tmpDir("rewrite_landing")
+    val work = tmpDir("rewrite_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny))
+    assert(runChecked(landing, work).newFiles == 1)
+    assert(runChecked(landing, work).newFiles == 0)
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny, "m2.json" -> tiny))
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 1 && r.stagedRows == 8)
+    import spark.implicits._
+    assert(spark.read.parquet(s"$work/state").select($"file_key").as[String].collect().sorted
+      .toSeq == Seq("m1", "m2"))
+  }
+
+  test("a schema log longer than maxDriverRows fails the run before the ledger changes") {
+    val landing = tmpDir("logcap_landing")
+    val work = tmpDir("logcap_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "b1.zip", Map("m1.json" -> tiny))
+    assert(runChecked(landing, work).newFiles == 1)
+    zipOf(landing, "b2.zip", Map("m2.json" -> tiny))
+    val e = intercept[IllegalStateException](Pipeline.runOnce(spark, landing, work, maxDriverRows = 3))
+    assert(e.getMessage.contains("schema log holds more than maxDriverRows=3"))
+    assert(runChecked(landing, work).newFiles == 1)
+  }
+
   test("a crash at any stage boundary, then a rerun, leaves what one clean run leaves") {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
@@ -699,7 +820,7 @@ class PipelineSpec extends SparkSpecBase {
       // each boundary and the new files its rerun lands: a crash before
       // the ledger's first move redoes the day; one between or after the
       // moves leaves nothing to redo
-      val boundaries = Seq("staging commit" -> 2L,
+      val boundaries = Seq("staging commit" -> 2L, "_archives into state.tmp" -> 2L,
         "state -> state.old" -> 2L, "state.tmp -> state" -> 0L, "after the swap" -> 0L)
       boundaries.zipWithIndex.foreach { case ((boundary, redone), i) =>
         val (work, newFiles) = days(s"b$i", Some(boundary))
@@ -734,7 +855,13 @@ class GraftfsLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   */
 class CrashingGraftfs extends GraftfsLocalFileSystem {
   import CrashingGraftfs.crashAt
-  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    crashAt("_archives into state.tmp", f.getName == "_archives" && f.getParent.getName == "state.tmp")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     crashAt("staging commit",

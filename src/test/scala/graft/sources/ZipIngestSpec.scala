@@ -53,6 +53,26 @@ class ZipIngestSpec extends SparkSpecBase {
       Seq((a, "y.json", """{"v":2}""")))
   }
 
+  test("archiveFiles lists exactly the archives entryNames scans") {
+    val dir = tmpDir("zips4")
+    makeZip(dir, "a.zip", Map("x.json" -> "{}"))
+    makeZip(dir, "b {1}.zip", Map("y.json" -> "{}", "z.json" -> "{}"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "noise.txt"), "nope")
+    makeZip(dir, "_hidden.zip", Map("h.json" -> "{}"))
+    makeZip(dir, ".dot.zip", Map("d.json" -> "{}"))
+    Seq(dir, s"$dir/*").foreach { path =>
+      val listed = ZipIngest.archiveFiles(spark, path)
+      val scanned = ZipIngest.entryNames(spark, path).select($"zip_path").distinct().as[String].collect()
+      assert(listed.map(_.path).sorted == scanned.toSeq.sorted, path)
+      assert(listed.map(a => new org.apache.hadoop.fs.Path(a.path).getName).sorted ==
+        Seq("a.zip", "b {1}.zip"), path)
+      listed.foreach { a =>
+        val f = new java.io.File(new org.apache.hadoop.fs.Path(a.path).toUri.getPath)
+        assert(a.length == f.length() && a.modificationTime == f.lastModified(), a)
+      }
+    }
+  }
+
   test("listFiles returns names and sizes without reading content") {
     val dir = "/root/testdata/sf0.001"
     val got = ZipIngest.listFiles(spark, dir, "*.parquet")
