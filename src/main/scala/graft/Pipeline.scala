@@ -1,19 +1,24 @@
 package graft
 
-import graft.operators.{ColumnMeta, DriftReport, Flatten, SchemaDiff, StateMerge}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.regex.Pattern
+
+import graft.operators.{ColumnMeta, DriftReport, Flatten, SchemaDiff}
 import graft.sources.{Cricsheet, Sinks, ZipIngest}
 import graft.sources.ZipIngest.Archive
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.sql.{DataFrame, Encoders, GraftFromJsonBridge, Observation, SparkSession}
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.{GraftFromJsonBridge, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's entire daily DAG (SURVEY.md §3.1: ingest → unzip
@@ -21,17 +26,22 @@ import org.apache.spark.sql.functions._
   * stage → state update) as one idempotent function over a landing
   * directory. Orchestration state that the reference spreads across
   * XCom, DynamoDB and S3 head-object checks collapses into one keyed
-  * state table merged relationally.
+  * state table.
   *
-  * Each stage is a distributed operator: unzip fans out per-archive,
-  * new-file selection is an anti-join of the archives' entry names
-  * (read from their central directories, nothing inflated) against the
-  * ledger whose bounded collect brings only the new entries' names to
-  * the driver, drift inference and staging parse the new entries
-  * straight from their archives' bytes (only they are inflated, nothing
-  * is unpacked to disk), flatten is one generator planned on the
-  * schema, staging is parquet partitioned by file_key. Running again
-  * with no new input is a no-op that runs no Spark job.
+  * The data work is distributed and the bookkeeping is not. Drift
+  * inference and staging parse the new entries straight from their
+  * archives' bytes on the executors (only the picked entries are
+  * inflated, nothing is unpacked to disk); flatten is one generator
+  * planned on the schema; staging is parquet partitioned by file_key.
+  * Selection and the ledger, about a kilobyte of metadata a day, stay
+  * on the driver, as the reference's driver loop over S3 objects and
+  * DynamoDB lookups does: the fresh archives' entry names come from
+  * their central directories, the ledger rows are read and written and
+  * the schema log is read with parquet-hadoop, and no Spark job or SQL
+  * execution is spent on them. A new-data run starts two Spark jobs,
+  * drift inference and the staging write (three on a run that writes
+  * the schema log). Running again with no new input is a no-op that
+  * runs no Spark job.
   *
   * Selection opens only the archives the ledger has not seen, as the
   * reference looks each S3 object up in its ProcessedFiles table
@@ -98,7 +108,20 @@ object Pipeline {
       loaded: Boolean,
       staged_rows: Long)
 
-  private val LedgerSchema = Encoders.product[LedgerRow].schema
+  /** The ledger's parquet schema: [[LedgerRow]] as Spark writes it. */
+  private val LedgerType = MessageTypeParser.parseMessageType(
+    "message spark_schema { optional binary file_key (STRING); required boolean ingested; " +
+      "required boolean crawled; required boolean transformed; required boolean loaded; " +
+      "required int64 staged_rows; }")
+  private val LedgerFile = "part-00000.parquet"
+
+  private val ExtensionPattern = Pattern.compile(ExtensionRe)
+
+  /** Spark's string order: unsigned UTF-8 bytes, not UTF-16 units. */
+  private val Utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+  }
 
   private val NoNewFiles = RunResult(0, 0, "no new files", hadDrift = false)
 
@@ -121,8 +144,12 @@ object Pipeline {
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
   }
 
+  /** `file` opened with `conf` itself: default read options would load
+    * a fresh Hadoop `Configuration`, parsing its XML defaults, per file.
+    */
   private def footer[T](file: Path, conf: Configuration)(read: ParquetFileReader => T): T = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
     try read(reader)
     finally reader.close()
   }
@@ -132,34 +159,38 @@ object Pipeline {
     */
   private def readRows(files: Seq[Path], conf: Configuration, limit: Int): Vector[Group] =
     files.iterator.flatMap { f =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(conf).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).take(limit).toVector
-      finally reader.close()
+      footer(f, conf) { reader =>
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val columns = new ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).flatMap { rowGroup =>
+          val records = columns.getRecordReader(rowGroup, new GroupRecordConverter(schema))
+          Iterator.fill(rowGroup.getRowCount.toInt)(records.read())
+        }.take(limit).toVector
+      }
     }.take(limit).toVector
 
-  private def writeArchives(file: Path, archives: Seq[Archive], conf: Configuration): Unit = {
+  private def writeRows(file: Path, schema: MessageType, conf: Configuration)(rows: SimpleGroupFactory => Seq[Group]): Unit = {
     val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
-      .withConf(conf).withType(ArchivesType).withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
-    val rows = new SimpleGroupFactory(ArchivesType)
-    try archives.foreach { a =>
-      writer.write(rows.newGroup().append("path", a.path).append("length", a.length)
-        .append("modificationTime", a.modificationTime))
-    }
+      .withConf(conf).withType(schema).withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+    try rows(new SimpleGroupFactory(schema)).foreach(writer.write)
     finally writer.close()
   }
+
+  /** A ledger row with `g`'s flags and `stagedRows`. */
+  private def ledgerRow(g: Group, stagedRows: Long): LedgerRow =
+    LedgerRow(g.getString("file_key", 0), g.getBoolean("ingested", 0), g.getBoolean("crawled", 0),
+      g.getBoolean("transformed", 0), g.getBoolean("loaded", 0), stagedRows)
 
   /** Rows staged under each key, summed on the driver from the parquet
     * footers of its `file_key=` partition: no Spark job, one listing
     * and a few footer reads per key. A key without a partition (its
     * file was corrupt) has 0.
     */
-  private def stagedRowsOf(spark: SparkSession, stagingDir: String, keys: Seq[String]): Map[String, Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  private def stagedRowsOf(conf: Configuration, stagingDir: String, keys: Seq[String]): Map[String, Long] =
     keys.map { k =>
       val part = new Path(stagingDir, ExternalCatalogUtils.getPartitionPathString("file_key", k))
       k -> dataFiles(part, conf).map(f => footer(f, conf)(_.getRecordCount)).sum
     }.toMap
-  }
 
   /** Rename that throws on failure: Hadoop's `rename` reports it as a
     * silent `false`, which would leave the ledger half-swapped.
@@ -169,18 +200,24 @@ object Pipeline {
       throw new java.io.IOException(s"Pipeline: could not move $from to $to")
 
   /** Write the ledger via temp + swap (the ledger is input and output
-    * of a run). One file: the ledger is metadata, and a one-file
-    * ledger is one task to read on the next run. The record of the
-    * `archives` it covers is written into the temp dir before the
-    * swap, so it moves with the rows it describes.
+    * of a run), on the driver: its rows as one parquet file, then the
+    * record of the `archives` it covers, so the record moves with the
+    * rows it describes.
     */
-  private def swapState(ledger: DataFrame, statePath: String, archives: Seq[Archive]): Unit = {
-    val conf = ledger.sparkSession.sparkContext.hadoopConfiguration
+  private def swapState(rows: Seq[LedgerRow], statePath: String, archives: Seq[Archive], conf: Configuration): Unit = {
     val tmp = new Path(s"$statePath.tmp")
-    Sinks.stageParquet(ledger.coalesce(1), tmp.toString)
-    writeArchives(new Path(tmp, ArchivesFile), archives, conf)
     val state = new Path(statePath)
     val fs = state.getFileSystem(conf)
+    fs.delete(tmp, true)
+    writeRows(new Path(tmp, LedgerFile), LedgerType, conf) { row =>
+      rows.map(r => row.newGroup().append("file_key", r.file_key).append("ingested", r.ingested)
+        .append("crawled", r.crawled).append("transformed", r.transformed).append("loaded", r.loaded)
+        .append("staged_rows", r.staged_rows))
+    }
+    writeRows(new Path(tmp, ArchivesFile), ArchivesType, conf) { row =>
+      archives.map(a => row.newGroup().append("path", a.path).append("length", a.length)
+        .append("modificationTime", a.modificationTime))
+    }
     if (fs.exists(state)) {
       val old = new Path(s"$statePath.old")
       fs.delete(old, true)
@@ -197,30 +234,21 @@ object Pipeline {
     *    instead of treating all history as new;
     *  - a ledger whose footer schema lacks `staged_rows` (written before
     *    the column existed) would read it as null and undercount, so it
-    *    is migrated once: one count per key over staging, 0 for keys
-    *    with no staged rows, written back through the swap with no
-    *    archive record.
+    *    is migrated once: each key's staged rows from its partition's
+    *    footers, 0 for keys with none, written back through the swap
+    *    with no archive record.
     */
-  private def loadState(spark: SparkSession, statePath: String, stagingDir: String): Set[Archive] = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
+  private def loadState(conf: Configuration, statePath: String, stagingDir: String): Set[Archive] = {
     val state = new Path(statePath)
     val fs = state.getFileSystem(conf)
     if (!fs.exists(state) && fs.exists(new Path(s"$statePath.old")))
       move(fs, new Path(s"$statePath.tmp"), state)
-    dataFiles(state, conf).headOption.foreach { f =>
+    val files = dataFiles(state, conf)
+    files.headOption.foreach { f =>
       if (!footer(f, conf)(_.getFooter.getFileMetaData.getSchema.containsField("staged_rows"))) {
-        val counts =
-          if (fs.exists(new Path(stagingDir)))
-            spark.read.schema("file_key string").parquet(stagingDir)
-              .groupBy("file_key").agg(count(lit(1)).as("staged_rows"))
-          else Seq.empty[(String, Long)].toDF("file_key", "staged_rows")
-        swapState(
-          spark.read.parquet(statePath)
-            .join(counts, Seq("file_key"), "left")
-            .withColumn("staged_rows", coalesce(col("staged_rows"), lit(0L)))
-            .select(LedgerSchema.fieldNames.map(col).toIndexedSeq: _*),
-          statePath, Nil)
+        val legacy = readRows(files, conf, Int.MaxValue)
+        val rowsOf = stagedRowsOf(conf, stagingDir, legacy.map(_.getString("file_key", 0)))
+        swapState(legacy.map(g => ledgerRow(g, rowsOf(g.getString("file_key", 0)))), statePath, Nil, conf)
       }
     }
     val record = new Path(state, ArchivesFile)
@@ -257,19 +285,22 @@ object Pipeline {
     * @param landingDir  dir of zip archives of match JSON (the S3 bucket),
     *   a Spark path (a glob expands)
     * @param workDir     root of the run's outputs: staging, state, schema log
-    * @param maxDriverRows bound on the two metadata collects that come
-    *   to the driver: the new entries' (zip path, entry name, file_key)
-    *   triples, which both select the batch and size it (the driver
-    *   receives at most `maxDriverRows + 1` of them), and the schema-log
-    *   rows for the drift diff. The per-key footer reads, the ledger
-    *   rows built on the driver and the picked names that ride in the
-    *   batch tasks' closure (about 2 MB at the default bound, shipped
-    *   once per stage) follow the first bound. Both are
-    *   metadata — tiny at the reference's daily cadence — but a
-    *   million-file backfill would otherwise accrete an unbounded driver
-    *   array; past the bound the run fails LOUDLY with the batching
-    *   remedy instead of slowly OOMing the driver. It fails before any
-    *   match is parsed or staged and before the ledger gains a row.
+    * @param maxDriverRows bound on the two kinds of metadata row the
+    *   driver picks or reads per run: the picks, one (zip path, entry
+    *   name, file_key) per distinct new key, which both select the batch
+    *   and size it, and the schema-log rows for the drift diff. The
+    *   per-key footer reads, the new ledger rows and the picked names
+    *   that ride in the batch tasks' closure (about 2 MB at the default
+    *   bound, shipped once per stage) follow the first bound. The driver
+    *   also holds, unbounded by it, the ledger rows (one per processed
+    *   file: about 1.1k for all IPL to date) and the entry names of the
+    *   archives the ledger has not seen. All of it is metadata — tiny
+    *   at the reference's daily cadence — but a million-file backfill
+    *   would otherwise accrete an unbounded pick list; at the
+    *   `maxDriverRows + 1`-th distinct new key the run fails LOUDLY with
+    *   the batching remedy instead of slowly OOMing the driver. It fails
+    *   before any entry is inflated or staged and before the ledger
+    *   gains a row.
     * @param notifyDrift drift-notification transport — the reference emails
     *   the same report via SNS (`notifyChanges`,
     *   /root/reference/airflow-setup/Scripts/compare_schema.py:106-124);
@@ -295,54 +326,47 @@ object Pipeline {
     // one row past the bound tells "over it" apart from "at it"
     val collectBound = (maxDriverRows + 1).min(Int.MaxValue).toInt
 
-    // 1. unzip fan-out (S2) and selection, idempotent per entry: an
-    //    anti-join against the ledger replaces the reference's per-file
-    //    head_object loop. The landing archives are listed on the driver
+    // 1. unzip fan-out (S2) and selection, idempotent per entry, on the
+    //    driver: a lookup in the ledger's keys replaces the reference's
+    //    per-file head_object loop. The landing archives are listed
     //    before any is read, and only those the ledger's `_archives`
-    //    record lacks are scanned, by path; when there are none the call
-    //    ends here, having started no Spark job. file_key = entry path
-    //    minus extension (dirs kept, so 2024/m1.json and 2025/m1.json
-    //    stay distinct); when one run sees the same key twice
-    //    (re-delivery in a second archive, or m1.json vs m1.txt), the
-    //    lexicographically-last (zip, entry) wins — the ordering includes
+    //    record lacks are opened, by path; when there are none the call
+    //    ends here. Selection needs only the entry names, read from each
+    //    archive's central directory: no entry is inflated. file_key =
+    //    entry path minus extension (dirs kept, so 2024/m1.json and
+    //    2025/m1.json stay distinct); when one run sees the same key
+    //    twice (re-delivery in a second archive, or m1.json vs m1.txt),
+    //    the last (zip, entry) in unsigned UTF-8 byte order wins, the
+    //    order Spark compares strings in — the ordering includes
     //    entry_name so same-archive collisions resolve deterministically
-    //    too. Selection needs only the entry names, read from each
-    //    archive's central directory: no entry is inflated. The join is a
-    //    shuffled hash join on file_key: the window after it shuffles on
-    //    the same key, and a broadcast ledger would pin a whole Tungsten
-    //    page in the block manager until the ContextCleaner gets to it.
-    //    One bounded collect brings the batch's triples to the driver: it
-    //    both selects the batch and sizes it.
+    //    too.
     val listed = ZipIngest.archiveFiles(spark, landingDir)
-    val fresh = listed.filterNot(loadState(spark, statePath, stagingDir))
+    val fresh = listed.filterNot(loadState(conf, statePath, stagingDir))
     if (fresh.isEmpty) return NoNewFiles
-    val fileKey = regexp_replace(col("entry_name"), ExtensionRe, "").as("file_key")
-    val entries = ZipIngest.entryNames(spark, fresh.map(a => ZipIngest.literal(a.path)): _*)
-      .select(col("zip_path"), col("entry_name"), fileKey)
-    // the ledger, read with its explicit schema (no footer-inference job)
-    val state =
-      if (fs.exists(new Path(statePath))) spark.read.schema(LedgerSchema).parquet(statePath)
-      else Seq.empty[LedgerRow].toDF()
-    val latestWins = Window.partitionBy(col("file_key"))
-      .orderBy(col("zip_path").desc, col("entry_name").desc)
-    val picked = StateMerge
-      .notYetPresent(entries, state.select("file_key").hint("shuffle_hash"))
-      .withColumn("_rn", row_number().over(latestWins))
-      .filter(col("_rn") === 1)
-      .select("zip_path", "entry_name", "file_key").as[(String, String, String)]
-      .limit(collectBound).collect().toSeq
+    val ledger = readRows(dataFiles(new Path(statePath), conf), conf, Int.MaxValue)
+      .map(g => ledgerRow(g, g.getLong("staged_rows", 0)))
+    val known = ledger.iterator.map(_.file_key).toSet
+    val latest = Ordering.Tuple2(Utf8Order, Utf8Order)
+    val picks = scala.collection.mutable.HashMap.empty[String, (String, String)]
+    for (archive <- fresh; name <- ZipIngest.entryNames(archive.path, conf)) {
+      val key = ExtensionPattern.matcher(name).replaceAll("")
+      if (!known(key) && picks.get(key).forall(latest.lt(_, (archive.path, name)))) {
+        picks(key) = (archive.path, name)
+        if (picks.size > maxDriverRows)
+          throw new IllegalStateException(
+            s"Pipeline.runOnce: more than maxDriverRows=$maxDriverRows new files — " +
+              "the run collects new-entry names and keys to the driver. Backfills this " +
+              "large should run in batches (ingest the landing dir in slices and call " +
+              "runOnce per slice), or raise maxDriverRows if the driver has headroom.")
+      }
+    }
     // fresh archives without a new entry (a re-delivery, a corrected
     // copy) leave the rows as they are and only extend the record
-    if (picked.isEmpty) {
-      swapState(state, statePath, listed)
+    if (picks.isEmpty) {
+      swapState(ledger, statePath, listed, conf)
       return NoNewFiles
     }
-    if (picked.length > maxDriverRows)
-      throw new IllegalStateException(
-        s"Pipeline.runOnce: more than maxDriverRows=$maxDriverRows new files — " +
-          "the run collects new-entry names and keys to the driver. Backfills this " +
-          "large should run in batches (ingest the landing dir in slices and call " +
-          "runOnce per slice), or raise maxDriverRows if the driver has headroom.")
+    val picked = picks.toSeq.map { case (key, (zip, name)) => (zip, name, key) }
 
     // 2. the batch: re-read ONLY the archives that hold new entries (the
     //    reference scopes its crawler to new prefixes the same way) and
@@ -352,7 +376,8 @@ object Pipeline {
     //    the batch once; nothing is written to disk. The picked names
     //    (at most maxDriverRows) ride in the tasks' closure.
     val batch = ZipIngest.readEntries(spark, picked.groupMap(_._1)(_._2))
-      .select(fileKey, col("content").cast("string").as("content"))
+      .select(regexp_replace(col("entry_name"), ExtensionRe, "").as("file_key"),
+        col("content").cast("string").as("content"))
 
     // 3. drift check = the reference's crawler + compare_schema stage:
     //    INFER the schema of the new matches (the explicit matchSchema
@@ -430,20 +455,14 @@ object Pipeline {
           "archive in the landing dir changed during the run. The ledger is unchanged; " +
           "the next run picks the new entries again.")
 
-    // 5. state update (S8). New keys are disjoint from the ledger by
-    //    construction (notYetPresent), so the merge is a union; the
-    //    cumulative staged total is summed over the ledger as it is
-    //    written.
+    // 5. state update (S8), on the driver. New keys are disjoint from
+    //    the ledger by construction, so the merge is an append, and the
+    //    cumulative staged total is the sum of the rows written.
     val keys = picked.map(_._3)
-    val rowsOf = stagedRowsOf(spark, stagingDir, keys)
-    val added = keys.map(k => LedgerRow(k, true, true, true, true, rowsOf(k))).toDF()
-    val total = Observation()
-    swapState(
-      state.unionByName(added)
-        .observe(total, coalesce(sum(col("staged_rows")), lit(0L)).as("staged_rows")),
-      statePath, listed)
+    val rowsOf = stagedRowsOf(conf, stagingDir, keys)
+    val rows = ledger ++ keys.map(k => LedgerRow(k, true, true, true, true, rowsOf(k)))
+    swapState(rows, statePath, listed, conf)
 
-    RunResult(picked.length, total.get("staged_rows").asInstanceOf[Long],
-      driftMsg, hadDrift, nTotal - nValid)
+    RunResult(picked.length, rows.iterator.map(_.staged_rows).sum, driftMsg, hadDrift, nTotal - nValid)
   }
 }

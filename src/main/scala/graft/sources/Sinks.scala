@@ -12,16 +12,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Sinks {
 
-  /** Overwrite Parquet staging — the reference's staging write, plus
-    * optional partition columns (at 100 TB, partitioning by e.g.
-    * ingest date is what makes downstream pruning possible; the
-    * reference writes a single unpartitioned dir).
-    */
-  def stageParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
   /** Register as a managed table (the Glue-catalog analog: queryable
     * by name via spark.table / SQL).
     */

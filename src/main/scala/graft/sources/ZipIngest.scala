@@ -1,9 +1,13 @@
 package graft.sources
 
+import java.nio.ByteBuffer
+import java.nio.channels.{NonWritableChannelException, SeekableByteChannel}
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipFile}
 import org.apache.commons.compress.utils.SeekableInMemoryByteChannel
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -15,10 +19,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * each executor unpacks its own zips, so a directory of thousands of
   * archives fans out in parallel instead of through one Lambda.
   *
-  * An archive is opened in memory through its central directory, so
-  * listing its entries inflates nothing and reading a few entries
-  * inflates only those: the cost of a daily read of a large cumulative
-  * archive follows the entries read, not the archive.
+  * An archive is opened through its central directory, so listing its
+  * entries inflates nothing and reading a few entries inflates only
+  * those: the cost of a daily read of a large cumulative archive
+  * follows the entries read, not the archive. The scans open each
+  * archive in memory on the executors; [[entryNames]] reads one
+  * archive's directory on the driver.
   */
 object ZipIngest {
 
@@ -34,7 +40,7 @@ object ZipIngest {
   /** `path` as a Spark path that names exactly it: glob characters are
     * escaped, so any archive name reads back as the same archive.
     */
-  def literal(path: String): String = path.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
+  private def literal(path: String): String = path.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
 
   /** The archives the readers of this object scan under `paths`, from
     * the `binaryFile` relation's own file index (same listing, globs,
@@ -48,10 +54,16 @@ object ZipIngest {
       .flatMap(_.files.map(_.fileStatus))
       .map(f => Archive(f.getPath.toString, f.getLen, f.getModificationTime))
 
+  /** Whether `head` starts with a local entry header, as every archive
+    * a streaming zip reader reads does: a stray non-zip `.zip` or an
+    * empty archive does not.
+    */
+  private def isZip(head: Array[Byte]): Boolean =
+    head.length >= 4 && head(0) == 'P' && head(1) == 'K' && head(2) == 3 && head(3) == 4
+
   /** The rows `read` makes of every `*.zip` under `paths` (Spark paths:
     * directories, archives or globs). Bytes that do not start with a
-    * local entry header (a stray non-zip `.zip`, an empty archive) make
-    * no rows, as a streaming zip reader would.
+    * local entry header make no rows.
     */
   private def archives[T: Encoder](spark: SparkSession, paths: Seq[String])(
       read: (String, ZipFile) => Seq[T]): Dataset[T] = {
@@ -60,7 +72,7 @@ object ZipIngest {
       .select("path", "content")
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        if (bytes.length < 4 || bytes(0) != 'P' || bytes(1) != 'K' || bytes(2) != 3 || bytes(3) != 4) Nil
+        if (!isZip(bytes)) Nil
         else {
           val zip = ZipFile.builder().setSeekableByteChannel(new SeekableInMemoryByteChannel(bytes)).get()
           try read(path, zip)
@@ -87,13 +99,54 @@ object ZipIngest {
       .toDF("zip_path", "entry_name", "content")
   }
 
-  /** One row per entry of every `*.zip` under `paths`, without content:
-    * (zip_path, entry_name). No entry is inflated.
+  /** A read-only channel over the first `length` bytes of an open
+    * Hadoop stream. Each read is a positioned read, so only the bytes
+    * asked for are fetched.
     */
-  def entryNames(spark: SparkSession, paths: String*): DataFrame = {
-    import spark.implicits._
-    archives(spark, paths)((path, zip) => files(zip).map(e => (path, e.getName)))
-      .toDF("zip_path", "entry_name")
+  private final class StreamChannel(in: FSDataInputStream, length: Long) extends SeekableByteChannel {
+    private var pos = 0L
+    private var open = true
+
+    def read(dst: ByteBuffer): Int =
+      if (pos >= length) -1
+      else {
+        val bytes = new Array[Byte](math.min(dst.remaining.toLong, length - pos).toInt)
+        in.readFully(pos, bytes)
+        dst.put(bytes)
+        pos += bytes.length
+        bytes.length
+      }
+    def position(): Long = pos
+    def position(p: Long): SeekableByteChannel = { pos = p; this }
+    def size(): Long = length
+    def write(src: ByteBuffer): Int = throw new NonWritableChannelException
+    def truncate(s: Long): SeekableByteChannel = throw new NonWritableChannelException
+    def isOpen: Boolean = open
+    def close(): Unit = open = false
+  }
+
+  /** The entry names of the archive at `path` (a `zip_path` of this
+    * object), read on the driver through the Hadoop FileSystem from the
+    * archive's central directory: only its first bytes and that
+    * directory are read, no entry is inflated and no Spark job runs. An archive that does
+    * not start with a local entry header has no entries, as for
+    * [[unzipEntries]].
+    */
+  def entryNames(path: String, conf: Configuration): Seq[String] = {
+    val file = new Path(path)
+    val fs = file.getFileSystem(conf)
+    val length = fs.getFileStatus(file).getLen
+    val in = fs.open(file)
+    try {
+      val head = new Array[Byte](4)
+      if (length < head.length || { in.readFully(0, head); !isZip(head) }) Nil
+      else {
+        val zip = ZipFile.builder().setSeekableByteChannel(new StreamChannel(in, length))
+          .setIgnoreLocalFileHeader(true).get()
+        try files(zip).map(_.getName)
+        finally zip.close()
+      }
+    } finally in.close()
   }
 
   /** The named entries of the named archives, (zip_path, entry_name,

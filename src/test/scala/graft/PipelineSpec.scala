@@ -697,6 +697,61 @@ class PipelineSpec extends SparkSpecBase {
     assert(jobs == 0 && executions == 0, s"$jobs jobs, $executions SQL executions")
   }
 
+  test("a new-data run starts 2 Spark jobs, one each in the SQL executions of inference and the staging write") {
+    val landing = tmpDir("shape_landing")
+    val work = tmpDir("shape_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    zipOf(landing, "day1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+    assert(runChecked(landing, work).newFiles == 2)
+    zipOf(landing, "day2.zip", Map("m3.json" -> full, "m1.json" -> tiny, "2024/m4.json" -> tiny))
+    val (r, jobs, executions) = jobsAndExecutions(Pipeline.runOnce(spark, landing, work))
+    assert(r.newFiles == 2 && !r.hadDrift && r.stagedRows == stagedNow(work))
+    // selection and the ledger swap run on the driver; `spark.read.json`
+    // runs its inference job inside an SQL execution of its own
+    assert(jobs == 2 && executions == 2, s"$jobs jobs, $executions SQL executions")
+  }
+
+  test("the bound counts distinct new keys, and the run past it starts no Spark job") {
+    val landing = tmpDir("keycap_landing")
+    val work = tmpDir("keycap_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    // 5 entries, 3 distinct keys: m1 twice, and m2 as .json and .txt
+    zipOf(landing, "a.zip", Map("m1.json" -> tiny, "m2.json" -> tiny))
+    zipOf(landing, "b.zip", Map("m1.json" -> tiny, "m2.txt" -> tiny))
+    zipOf(landing, "c.zip", Map("m3.json" -> tiny))
+    val (e, jobs, executions) = jobsAndExecutions(intercept[IllegalStateException] {
+      Pipeline.runOnce(spark, landing, work, maxDriverRows = 2)
+    })
+    assert(e.getMessage.contains("more than maxDriverRows=2 new files"))
+    assert(e.getMessage.contains("batches"))
+    assert(jobs == 0 && executions == 0, s"$jobs jobs, $executions SQL executions before the failure")
+    assert(!Files.exists(Paths.get(work, "staging")) && !Files.exists(Paths.get(work, "state")))
+    // at the bound: 3 distinct keys in 5 entries pass under maxDriverRows = 3
+    val r = Pipeline.runOnce(spark, landing, work, maxDriverRows = 3)
+    assert(r.newFiles == 3 && r.stagedRows == 12)
+  }
+
+  test("latest-wins compares names as UTF-8 bytes, as Spark does, not as UTF-16 units") {
+    val landing = tmpDir("utf8_landing")
+    val work = tmpDir("utf8_work")
+    val tiny = new String(Files.readAllBytes(Paths.get(fixture("match_tiny.json"))), "UTF-8")
+    def venue(v: String): Array[Byte] = tiny.replace("Wankhede Stadium", v).getBytes("UTF-8")
+    // U+FF21 is one UTF-16 unit above the surrogates of U+1F600, but its
+    // UTF-8 lead byte (EF) is below U+1F600's (F0): UTF-16 order puts the
+    // emoji copy first, byte order last. Archive names stay ASCII (under
+    // a POSIX locale the JVM cannot name such files); the later archive
+    // holds both copies, so the entry names decide within it.
+    zipOf(landing, "a.zip", Map("m1.json" -> venue("Venue A")))
+    zipOf(landing, "b.zip", Map("m1.\uFF21" -> venue("Venue Fullwidth"), "m1.\uD83D\uDE00" -> venue("Venue Emoji")))
+    val r = runChecked(landing, work)
+    assert(r.newFiles == 1 && r.stagedRows == 4 && r.corruptFiles == 0)
+    import spark.implicits._
+    val venues = spark.read.parquet(s"$work/staging").select($"file_key", $"info_venue").distinct()
+      .as[(String, String)].collect()
+    assert(venues.toSeq == Seq("m1" -> "Venue Emoji"))
+  }
+
   test("a new archive beside 5 or 40 recorded ones is the only archive a run reads") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}

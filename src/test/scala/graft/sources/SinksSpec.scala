@@ -6,20 +6,6 @@ import org.apache.spark.sql.functions._
 class SinksSpec extends SparkSpecBase {
   import spark.implicits._
 
-  test("stageParquet round-trips with partition pruning available") {
-    val out = tmpDir("stage") + "/orders"
-    val o = Tables.orders(spark, "/root/testdata/sf0.001")
-      .withColumn("y", year($"o_orderdate"))
-    Sinks.stageParquet(o, out, partitionBy = Seq("y"))
-    val back = spark.read.parquet(out)
-    assert(back.count() == o.count())
-    // partition pruning visible in the plan for a partition filter
-    val pruned = back.filter($"y" === 1997)
-    pruned.collect()
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("(y"), plan.take(1500))
-  }
-
   test("bucketed tables join without shuffling either side") {
     val sf = "/root/testdata/sf0.001"
     Seq("li_b", "o_b").foreach { t =>

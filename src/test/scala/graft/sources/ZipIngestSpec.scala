@@ -44,7 +44,8 @@ class ZipIngestSpec extends SparkSpecBase {
     makeZip(dir, "b.zip", Map("z.json" -> """{"v":3}"""))
     // not a zip: no rows, as from an empty archive
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "junk.zip"), "<html>")
-    val names = ZipIngest.entryNames(spark, dir).as[(String, String)].collect()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val names = ZipIngest.archiveFiles(spark, dir).flatMap(a => ZipIngest.entryNames(a.path, conf).map(a.path -> _))
     assert(names.map(_._2).sorted.toSeq == Seq("x.json", "y.json", "z.json"))
     val a = names.collectFirst { case (zip, "x.json") => zip }.get
     val got = ZipIngest.readEntries(spark, Map(a -> Seq("y.json", "gone.json")))
@@ -53,7 +54,7 @@ class ZipIngestSpec extends SparkSpecBase {
       Seq((a, "y.json", """{"v":2}""")))
   }
 
-  test("archiveFiles lists exactly the archives entryNames scans") {
+  test("archiveFiles lists exactly the archives unzipEntries scans") {
     val dir = tmpDir("zips4")
     makeZip(dir, "a.zip", Map("x.json" -> "{}"))
     makeZip(dir, "b {1}.zip", Map("y.json" -> "{}", "z.json" -> "{}"))
@@ -62,7 +63,7 @@ class ZipIngestSpec extends SparkSpecBase {
     makeZip(dir, ".dot.zip", Map("d.json" -> "{}"))
     Seq(dir, s"$dir/*").foreach { path =>
       val listed = ZipIngest.archiveFiles(spark, path)
-      val scanned = ZipIngest.entryNames(spark, path).select($"zip_path").distinct().as[String].collect()
+      val scanned = ZipIngest.unzipEntries(spark, path).select($"zip_path").distinct().as[String].collect()
       assert(listed.map(_.path).sorted == scanned.toSeq.sorted, path)
       assert(listed.map(a => new org.apache.hadoop.fs.Path(a.path).getName).sorted ==
         Seq("a.zip", "b {1}.zip"), path)
