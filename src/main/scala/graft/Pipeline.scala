@@ -19,6 +19,7 @@ import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{GraftFromJsonBridge, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.json.GraftInferSchemaBridge
 import org.apache.spark.sql.functions._
 
 /** The reference's entire daily DAG (SURVEY.md §3.1: ingest → unzip
@@ -28,20 +29,20 @@ import org.apache.spark.sql.functions._
   * XCom, DynamoDB and S3 head-object checks collapses into one keyed
   * state table.
   *
-  * The data work is distributed and the bookkeeping is not. Drift
-  * inference and staging parse the new entries straight from their
-  * archives' bytes on the executors (only the picked entries are
-  * inflated, nothing is unpacked to disk); flatten is one generator
-  * planned on the schema; staging is parquet partitioned by file_key.
+  * The data work is distributed and the bookkeeping is not. Staging
+  * parses the new entries straight from their archives' bytes on the
+  * executors (only the picked entries are inflated, nothing is
+  * unpacked to disk), and the same scan infers their JSON schema for
+  * the drift check; flatten is one generator planned on the schema;
+  * staging is parquet partitioned by file_key.
   * Selection and the ledger, about a kilobyte of metadata a day, stay
   * on the driver, as the reference's driver loop over S3 objects and
   * DynamoDB lookups does: the fresh archives' entry names come from
   * their central directories, the ledger rows are read and written and
   * the schema log is read with parquet-hadoop, and no Spark job or SQL
-  * execution is spent on them. A new-data run starts two Spark jobs,
-  * drift inference and the staging write (three on a run that writes
-  * the schema log). Running again with no new input is a no-op that
-  * runs no Spark job.
+  * execution is spent on them. A new-data run starts one Spark job,
+  * the staging write (two on a run that writes the schema log).
+  * Running again with no new input is a no-op that runs no Spark job.
   *
   * Selection opens only the archives the ledger has not seen, as the
   * reference looks each S3 object up in its ProcessedFiles table
@@ -72,7 +73,9 @@ import org.apache.spark.sql.functions._
   * instead of appending a duplicate. A crash between the staging write
   * and the ledger update therefore costs a re-run, never a
   * double-count; a crash between the two moves of the ledger swap is
-  * finished by the next run's `loadState`.
+  * finished by the next run's `loadState`. The schema log is swapped
+  * in the same way, before the ledger, so a crash while it is written
+  * leaves the last complete log for the rerun to diff against.
   *
   * The ledger (`workDir/state`) holds one [[LedgerRow]] per processed
   * file_key: the reference's four flags plus `staged_rows`, the rows
@@ -199,38 +202,58 @@ object Pipeline {
     if (!fs.rename(from, to))
       throw new java.io.IOException(s"Pipeline: could not move $from to $to")
 
-  /** Write the ledger via temp + swap (the ledger is input and output
+  /** Replace the directory `path` with the one `write` makes at
+    * `path.tmp`: the old one moves to `path.old`, then the new one into
+    * place, so a crash never leaves `path` half written. A crash
+    * between the two moves is finished by [[finishSwap]].
+    */
+  private def swapDir(path: String, conf: Configuration)(write: Path => Unit): Unit = {
+    val dir = new Path(path)
+    val tmp = new Path(s"$path.tmp")
+    val fs = dir.getFileSystem(conf)
+    fs.delete(tmp, true)
+    write(tmp)
+    if (fs.exists(dir)) {
+      val old = new Path(s"$path.old")
+      fs.delete(old, true)
+      move(fs, dir, old)
+    }
+    move(fs, tmp, dir)
+  }
+
+  /** Finish a [[swapDir]] a crash interrupted: `path` missing while
+    * `path.old` exists means the run died between the two moves, after
+    * `path.tmp` was fully written — move it into place instead of
+    * treating the directory as never written.
+    */
+  private def finishSwap(path: String, conf: Configuration): Unit = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir) && fs.exists(new Path(s"$path.old")))
+      move(fs, new Path(s"$path.tmp"), dir)
+  }
+
+  /** Write the ledger via [[swapDir]] (the ledger is input and output
     * of a run), on the driver: its rows as one parquet file, then the
     * record of the `archives` it covers, so the record moves with the
     * rows it describes.
     */
-  private def swapState(rows: Seq[LedgerRow], statePath: String, archives: Seq[Archive], conf: Configuration): Unit = {
-    val tmp = new Path(s"$statePath.tmp")
-    val state = new Path(statePath)
-    val fs = state.getFileSystem(conf)
-    fs.delete(tmp, true)
-    writeRows(new Path(tmp, LedgerFile), LedgerType, conf) { row =>
-      rows.map(r => row.newGroup().append("file_key", r.file_key).append("ingested", r.ingested)
-        .append("crawled", r.crawled).append("transformed", r.transformed).append("loaded", r.loaded)
-        .append("staged_rows", r.staged_rows))
+  private def swapState(rows: Seq[LedgerRow], statePath: String, archives: Seq[Archive], conf: Configuration): Unit =
+    swapDir(statePath, conf) { tmp =>
+      writeRows(new Path(tmp, LedgerFile), LedgerType, conf) { row =>
+        rows.map(r => row.newGroup().append("file_key", r.file_key).append("ingested", r.ingested)
+          .append("crawled", r.crawled).append("transformed", r.transformed).append("loaded", r.loaded)
+          .append("staged_rows", r.staged_rows))
+      }
+      writeRows(new Path(tmp, ArchivesFile), ArchivesType, conf) { row =>
+        archives.map(a => row.newGroup().append("path", a.path).append("length", a.length)
+          .append("modificationTime", a.modificationTime))
+      }
     }
-    writeRows(new Path(tmp, ArchivesFile), ArchivesType, conf) { row =>
-      archives.map(a => row.newGroup().append("path", a.path).append("length", a.length)
-        .append("modificationTime", a.modificationTime))
-    }
-    if (fs.exists(state)) {
-      val old = new Path(s"$statePath.old")
-      fs.delete(old, true)
-      move(fs, state, old)
-    }
-    move(fs, tmp, state)
-  }
 
   /** The archives the ledger version covers (none when it has no
     * record), read on the driver after two repairs of the ledger:
-    *  - a swap a crash interrupted is finished first: `state` missing
-    *    while `state.old` exists means the run died between its two
-    *    moves, after `state.tmp` was fully written — move it into place
+    *  - a swap a crash interrupted is finished first ([[finishSwap]]),
     *    instead of treating all history as new;
     *  - a ledger whose footer schema lacks `staged_rows` (written before
     *    the column existed) would read it as null and undercount, so it
@@ -241,8 +264,7 @@ object Pipeline {
   private def loadState(conf: Configuration, statePath: String, stagingDir: String): Set[Archive] = {
     val state = new Path(statePath)
     val fs = state.getFileSystem(conf)
-    if (!fs.exists(state) && fs.exists(new Path(s"$statePath.old")))
-      move(fs, new Path(s"$statePath.tmp"), state)
+    finishSwap(statePath, conf)
     val files = dataFiles(state, conf)
     files.headOption.foreach { f =>
       if (!footer(f, conf)(_.getFooter.getFileMetaData.getSchema.containsField("staged_rows"))) {
@@ -300,16 +322,20 @@ object Pipeline {
     *   `maxDriverRows + 1`-th distinct new key the run fails LOUDLY with
     *   the batching remedy instead of slowly OOMing the driver. It fails
     *   before any entry is inflated or staged and before the ledger
-    *   gains a row.
+    *   gains a row; a schema log past the bound fails the run at the
+    *   same point, before any Spark job.
     * @param notifyDrift drift-notification transport — the reference emails
     *   the same report via SNS (`notifyChanges`,
     *   /root/reference/airflow-setup/Scripts/compare_schema.py:106-124);
     *   here the transport is the caller's choice (email, chat webhook,
-    *   ticket). Invoked with the rendered report exactly when the run
-    *   detects drift; the default logs to stderr. A notifier failure
-    *   must not fail the run (the reference's publish is likewise
-    *   outside its DAG's critical path), so exceptions are caught and
-    *   logged.
+    *   ticket). Invoked with the rendered report when the run detects
+    *   drift, after staging and before the schema log and the ledger
+    *   are written; the default logs to stderr. Delivery is
+    *   at-least-once: a run that fails after notifying leaves the
+    *   ledger as it was, so its rerun lands the day again and notifies
+    *   again. A notifier failure must not fail the run (the
+    *   reference's publish is likewise outside its DAG's critical
+    *   path), so exceptions are caught and logged.
     */
   def runOnce(
       spark: SparkSession,
@@ -368,29 +394,13 @@ object Pipeline {
     }
     val picked = picks.toSeq.map { case (key, (zip, name)) => (zip, name, key) }
 
-    // 2. the batch: re-read ONLY the archives that hold new entries (the
-    //    reference scopes its crawler to new prefixes the same way) and
-    //    inflate exactly the picked entries, keyed as selection keyed
-    //    them — an archive that lands mid-run is not in the batch, so
-    //    staging matches the ledger. Inference and staging each read
-    //    the batch once; nothing is written to disk. The picked names
-    //    (at most maxDriverRows) ride in the tasks' closure.
-    val batch = ZipIngest.readEntries(spark, picked.groupMap(_._1)(_._2))
-      .select(regexp_replace(col("entry_name"), ExtensionRe, "").as("file_key"),
-        col("content").cast("string").as("content"))
-
-    // 3. drift check = the reference's crawler + compare_schema stage:
-    //    INFER the schema of the new matches (the explicit matchSchema
-    //    is a constant and can never drift) and diff its leaves against
-    //    the recorded log. Scoped inference cannot see columns that
-    //    merely don't occur in this batch, so 'dropped' is expected
-    //    noise — drift is added/retyped only, and the log records the
-    //    union (new type wins) like a crawler's catalog.
-    val inferred = spark.read.json(batch.select("content").as[String]).schema
-    val newCols = SchemaDiff.leafColumns(inferred).filterNot(_.name.startsWith("_corrupt_record"))
-    val logged = fs.exists(new Path(schemaPath))
-    val oldCols =
-      if (logged) {
+    // 2. the recorded schema, read on the driver before any Spark work
+    //    (finishing a log swap a crash interrupted), so a log past the
+    //    bound fails the run before anything is staged
+    finishSwap(schemaPath, conf)
+    val logged =
+      if (!fs.exists(new Path(schemaPath))) None
+      else {
         val log = readRows(dataFiles(new Path(schemaPath), conf), conf, collectBound)
           .map(g => ColumnMeta(g.getString("name", 0), g.getString("dataType", 0)))
         if (log.length > maxDriverRows)
@@ -400,35 +410,35 @@ object Pipeline {
               "count this size means runaway schema inference (e.g. map-typed data " +
               "inferred as per-key struct fields); fix the input schema, or raise " +
               "maxDriverRows if the driver has headroom.")
-        log
-      } else newCols
-    // both sides are on the driver already: diff and render there
-    val (hadDrift, driftMsg) = DriftReport.render(
-      SchemaDiff.diffCols(oldCols, newCols).filter(_.change != "dropped"), "ipl_matches")
-    if (hadDrift) {
-      try notifyDrift(driftMsg)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[pipeline] drift notifier failed: ${e.getMessage}")
+        Some(log)
       }
-    }
-    // the union changes exactly when a column was added or retyped
-    if (!logged || hadDrift) {
-      val newNames = newCols.map(_.name).toSet
-      val unionCols = newCols ++ oldCols.filterNot(c => newNames.contains(c.name))
-      unionCols.toDF().coalesce(1).write.mode("overwrite").parquet(schemaPath)
-    }
 
-    // 4. parse (explicit schema fast path), flatten + stage (S5),
+    // 3. the batch, in the run's one Spark job: re-read ONLY the
+    //    archives that hold new entries (the reference scopes its
+    //    crawler to new prefixes the same way) and inflate exactly the
+    //    picked entries, keyed as selection keyed them — an archive that
+    //    lands mid-run is not in the batch, so staging matches the
+    //    ledger. The picked names (at most maxDriverRows) ride in the
+    //    tasks' closure; nothing is written to disk but staging. The one
+    //    scan also feeds the two checks:
+    //     - the reference's crawler: each task that inflates an entry
+    //       INFERS its JSON type into `inferred` (the explicit
+    //       matchSchema is a constant and can never drift);
+    //     - validity: corrupt matches parse to null rows (PERMISSIVE),
+    //       are filtered out of staging and counted instead of failing
+    //       the run; both counters ride the scan via observe
+    //       (CollectMetrics).
+    //    Parse (explicit schema fast path), flatten + stage (S5),
     //    partitioned by file_key with dynamic partition overwrite: each
     //    file replaces exactly its own partition, making the write
     //    idempotent under re-runs (and partition-prunable downstream).
-    //    Corrupt matches parse to null rows (PERMISSIVE) — they are
-    //    filtered out of staging and counted instead of failing the run.
-    //    Both counters ride the write's scan via observe (CollectMetrics):
-    //    a count of their own would unzip the batch once more. When every
-    //    new file is corrupt the write stages no partition, so existing
-    //    staging is untouched; a staging dir it had to create is removed.
+    //    When every new file is corrupt the write stages no partition,
+    //    so existing staging is untouched; a staging dir it had to
+    //    create is removed.
+    val inferred = GraftInferSchemaBridge(spark)
+    val batch = ZipIngest.readEntries(spark, picked.groupMap(_._1)(_._2), Some(inferred))
+      .select(regexp_replace(col("entry_name"), ExtensionRe, "").as("file_key"),
+        col("content").cast("string").as("content"))
     val allMatches = batch
       .select(GraftFromJsonBridge.fromJson(col("content"), Cricsheet.matchSchema).as("m"), col("file_key"))
       .select(col("m.*"), col("file_key"))
@@ -446,16 +456,43 @@ object Pipeline {
     val nValid = validity.get("n_valid").asInstanceOf[Long]
     val nTotal = validity.get("n_total").asInstanceOf[Long]
     if (nValid == 0 && !stagingExisted) fs.delete(stagingPath, true)
-    // selection and staging read the archives apart: a picked entry the
-    // staging read did not see (its archive was replaced or removed in
-    // between) must not reach the ledger as staged
+
+    // 4. selection and staging read the archives apart: a picked entry
+    //    the staging read did not see (its archive was replaced or
+    //    removed in between) must not reach the ledger as staged
     if (nTotal != picked.length)
       throw new IllegalStateException(
         s"Pipeline.runOnce: staged $nTotal of the ${picked.length} new entries — an " +
           "archive in the landing dir changed during the run. The ledger is unchanged; " +
           "the next run picks the new entries again.")
 
-    // 5. state update (S8), on the driver. New keys are disjoint from
+    // 5. drift check = the reference's compare_schema stage: diff the
+    //    inferred leaves against the recorded log, on the driver.
+    //    Scoped inference cannot see columns that merely don't occur in
+    //    this batch, so 'dropped' is expected noise — drift is
+    //    added/retyped only, and the log records the union (new type
+    //    wins) like a crawler's catalog. The log is swapped in before
+    //    the ledger: a crash in between re-runs the day, which reports
+    //    the drift again.
+    val newCols = SchemaDiff.leafColumns(inferred.value).filterNot(_.name.startsWith("_corrupt_record"))
+    val oldCols = logged.getOrElse(newCols)
+    val (hadDrift, driftMsg) = DriftReport.render(
+      SchemaDiff.diffCols(oldCols, newCols).filter(_.change != "dropped"), "ipl_matches")
+    if (hadDrift) {
+      try notifyDrift(driftMsg)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[pipeline] drift notifier failed: ${e.getMessage}")
+      }
+    }
+    // the union changes exactly when a column was added or retyped
+    if (logged.isEmpty || hadDrift) {
+      val newNames = newCols.map(_.name).toSet
+      val unionCols = newCols ++ oldCols.filterNot(c => newNames.contains(c.name))
+      swapDir(schemaPath, conf)(tmp => unionCols.toDF().coalesce(1).write.parquet(tmp.toString))
+    }
+
+    // 6. state update (S8), on the driver. New keys are disjoint from
     //    the ledger by construction, so the merge is an append, and the
     //    cumulative staged total is the sum of the rows written.
     val keys = picked.map(_._3)

@@ -9,6 +9,7 @@ import org.apache.commons.compress.utils.SeekableInMemoryByteChannel
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.json.GraftInferSchemaBridge
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Zip decompress + fan-out (SURVEY.md §2.1 S2): the reference's
@@ -155,13 +156,20 @@ object ZipIngest {
     * so a `zip_path` reads back as the same archive whatever its name
     * holds. Only the named entries are inflated. A name an archive holds
     * twice yields its first copy; a name it no longer holds yields no
-    * row. `picks` travels in the task closure.
+    * row. `picks` travels in the task closure. When `inferred` is
+    * given, the task that inflates an entry also adds its content to
+    * it, so the scan that reads the entries infers their JSON schema.
     */
-  def readEntries(spark: SparkSession, picks: Map[String, Seq[String]]): DataFrame = {
+  def readEntries(spark: SparkSession, picks: Map[String, Seq[String]],
+      inferred: Option[GraftInferSchemaBridge] = None): DataFrame = {
     import spark.implicits._
     archives(spark, picks.keys.toSeq.map(literal)) {
       (path, zip) =>
-        picks.getOrElse(path, Nil).flatMap(name => Option(zip.getEntry(name)).map(e => (path, name, content(zip, e))))
+        picks.getOrElse(path, Nil).flatMap(name => Option(zip.getEntry(name)).map { e =>
+          val bytes = content(zip, e)
+          inferred.foreach(_.add(bytes))
+          (path, name, bytes)
+        })
     }.toDF("zip_path", "entry_name", "content")
   }
 

@@ -287,31 +287,48 @@ class PipelineSpec extends SparkSpecBase {
     assert(venues.toSeq == Seq("Venue First"))
   }
 
+  /** The `graftfs:` scheme served by `fs` (a [[GraftfsLocalFileSystem]]). */
+  private def setGraftfs(fs: Class[_ <: GraftfsLocalFileSystem]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", fs.getName)
+    conf.setBoolean("fs.graftfs.impl.disable.cache", true)
+  }
+
+  private def unsetGraftfs(): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.unset("fs.graftfs.impl")
+    conf.unset("fs.graftfs.impl.disable.cache")
+  }
+
   test("an archive replaced during the run fails it before the ledger changes") {
-    val landing = tmpDir("swap_landing")
-    val work = tmpDir("swap_work")
-    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
-    zipOf(landing, "b1.zip", Map("m1.json" -> tiny))
-    assert(runChecked(landing, work).newFiles == 1)
-    def ledger(): Set[String] = {
-      import spark.implicits._
-      spark.read.parquet(s"$work/state").select($"file_key").as[String].collect().toSet
+    setGraftfs(classOf[SwappingGraftfs])
+    try {
+      val dir = tmpDir("swap_landing")
+      val landing = s"graftfs:$dir"
+      val work = tmpDir("swap_work")
+      val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+      zipOf(dir, "b1.zip", Map("m1.json" -> tiny))
+      assert(runChecked(landing, work).newFiles == 1)
+      def ledger(): Set[String] = {
+        import spark.implicits._
+        spark.read.parquet(s"$work/state").select($"file_key").as[String].collect().toSet
+      }
+      // once selection has read b2's central directory, and before
+      // staging reads b2, the landing filesystem replaces b2 with an
+      // archive that no longer holds m2
+      zipOf(dir, "b2.zip", Map("m2.json" -> tiny))
+      SwappingGraftfs.armed = Some("b2.zip" -> (() => zipOf(dir, "b2.zip", Map("m3.json" -> tiny))))
+      val e = intercept[IllegalStateException](Pipeline.runOnce(spark, landing, work))
+      assert(SwappingGraftfs.armed.isEmpty, "b2.zip never read")
+      assert(e.getMessage.contains("staged 0 of the 1 new entries"))
+      assert(ledger() == Set("m1"))
+      // the next run picks what the landing dir now holds
+      val r = runChecked(landing, work)
+      assert(r.newFiles == 1 && ledger() == Set("m1", "m3"))
+    } finally {
+      SwappingGraftfs.armed = None
+      unsetGraftfs()
     }
-    // m2 adds a column, so the drift notifier runs: after selection and
-    // inference, before staging. It replaces m2's archive with one that
-    // no longer holds m2.
-    val drifted = new String(tiny, "UTF-8").replace(
-      "\"balls_per_over\": 6,", "\"balls_per_over\": 6, \"forfeited_overs\": 2,")
-    zipOf(landing, "b2.zip", Map("m2.json" -> drifted.getBytes("UTF-8")))
-    val e = intercept[IllegalStateException] {
-      Pipeline.runOnce(spark, landing, work,
-        notifyDrift = _ => zipOf(landing, "b2.zip", Map("m3.json" -> tiny)))
-    }
-    assert(e.getMessage.contains("staged 0 of the 1 new entries"))
-    assert(ledger() == Set("m1"))
-    // the next run picks what the landing dir now holds
-    val r = runChecked(landing, work)
-    assert(r.newFiles == 1 && ledger() == Set("m1", "m3"))
   }
 
   test("maintain compacts staging while preserving partitions and exactly-once") {
@@ -697,7 +714,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(jobs == 0 && executions == 0, s"$jobs jobs, $executions SQL executions")
   }
 
-  test("a new-data run starts 2 Spark jobs, one each in the SQL executions of inference and the staging write") {
+  test("a new-data run starts 1 Spark job, in the SQL execution of the staging write") {
     val landing = tmpDir("shape_landing")
     val work = tmpDir("shape_work")
     val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
@@ -707,8 +724,22 @@ class PipelineSpec extends SparkSpecBase {
     zipOf(landing, "day2.zip", Map("m3.json" -> full, "m1.json" -> tiny, "2024/m4.json" -> tiny))
     val (r, jobs, executions) = jobsAndExecutions(Pipeline.runOnce(spark, landing, work))
     assert(r.newFiles == 2 && !r.hadDrift && r.stagedRows == stagedNow(work))
-    // selection and the ledger swap run on the driver; `spark.read.json`
-    // runs its inference job inside an SQL execution of its own
+    // selection and the ledger swap run on the driver, and the staging
+    // write's scan infers the schema the drift check diffs
+    assert(jobs == 1 && executions == 1, s"$jobs jobs, $executions SQL executions")
+  }
+
+  test("a drift run starts 2 Spark jobs: the staging write and the schema-log write") {
+    val landing = tmpDir("drift_shape_landing")
+    val work = tmpDir("drift_shape_work")
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    zipOf(landing, "day1.zip", Map("m1.json" -> tiny))
+    assert(runChecked(landing, work).newFiles == 1)
+    val drifted = new String(tiny, "UTF-8").replace(
+      "\"balls_per_over\": 6,", "\"balls_per_over\": 6, \"forfeited_overs\": 2,")
+    zipOf(landing, "day2.zip", Map("m2.json" -> drifted.getBytes("UTF-8")))
+    val (r, jobs, executions) = jobsAndExecutions(Pipeline.runOnce(spark, landing, work))
+    assert(r.newFiles == 1 && r.hadDrift && r.driftReport.contains("info.forfeited_overs"))
     assert(jobs == 2 && executions == 2, s"$jobs jobs, $executions SQL executions")
   }
 
@@ -831,8 +862,15 @@ class PipelineSpec extends SparkSpecBase {
     zipOf(landing, "b1.zip", Map("m1.json" -> tiny))
     assert(runChecked(landing, work).newFiles == 1)
     zipOf(landing, "b2.zip", Map("m2.json" -> tiny))
-    val e = intercept[IllegalStateException](Pipeline.runOnce(spark, landing, work, maxDriverRows = 3))
+    def stagingFiles(): Seq[(String, Long, Long)] =
+      Files.walk(Paths.get(work, "staging")).iterator().asScala.map(_.toFile).toSeq
+        .map(f => (f.getPath, f.length(), f.lastModified())).sorted
+    val stagingBefore = stagingFiles()
+    val (e, jobs, executions) = jobsAndExecutions(
+      intercept[IllegalStateException](Pipeline.runOnce(spark, landing, work, maxDriverRows = 3)))
     assert(e.getMessage.contains("schema log holds more than maxDriverRows=3"))
+    assert(jobs == 0 && executions == 0, s"$jobs jobs, $executions SQL executions before the failure")
+    assert(stagingFiles() == stagingBefore, "the failed run changed staging")
     assert(runChecked(landing, work).newFiles == 1)
   }
 
@@ -894,6 +932,64 @@ class PipelineSpec extends SparkSpecBase {
       conf.unset("fs.graftfs.impl.disable.cache")
     }
   }
+
+  test("a crash in the schema-log commit reruns the day and reports the drift again") {
+    import spark.implicits._
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    // day 2 drifts, and lacks columns of day 1's full match that only
+    // the log remembers
+    val drifted = new String(tiny, "UTF-8").replace(
+      "\"balls_per_over\": 6,", "\"balls_per_over\": 6, \"forfeited_overs\": 2,").getBytes("UTF-8")
+    def log(work: String): Seq[(String, String)] =
+      spark.read.parquet(s"$work/schema_log").as[(String, String)].collect().toSeq.sorted
+    def ledger(work: String): Set[Pipeline.LedgerRow] =
+      spark.read.parquet(s"$work/state").as[Pipeline.LedgerRow].collect().toSet
+
+    /** Day 1, then day 2 (crashing once at the schema-log commit, when
+      * `crash`, and run again); the work dir, day 2's last result and
+      * the reports sent for it.
+      */
+    def days(name: String, crash: Boolean): (String, Pipeline.RunResult, Seq[String]) = {
+      val landing = tmpDir(s"logcrash_${name}_landing")
+      val work = "graftfs:" + tmpDir(s"logcrash_${name}_work")
+      zipOf(landing, "day1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+      assert(runChecked(landing, work).newFiles == 2)
+      zipOf(landing, "day2.zip", Map("m3.json" -> drifted, "2024/m4.json" -> tiny))
+      val sent = scala.collection.mutable.ArrayBuffer.empty[String]
+      if (crash) {
+        CrashingGraftfs.armed = Some("schema_log commit")
+        val e = intercept[Exception](Pipeline.runOnce(spark, landing, work, notifyDrift = sent += _))
+        assert(CrashingGraftfs.armed.isEmpty, "the schema-log commit never reached")
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("injected crash: schema_log commit")), e.toString)
+      }
+      val r = Pipeline.runOnce(spark, landing, work, notifyDrift = sent += _)
+      assert(r.stagedRows == stagedNow(work))
+      (work, r, sent.toSeq)
+    }
+
+    setGraftfs(classOf[CrashingGraftfs])
+    try {
+      val (clean, want, _) = days("clean", crash = false)
+      val (work, r, sent) = days("crash", crash = true)
+      assert(r.newFiles == 2, "the rerun did not land the day again")
+      val (got, expected) = (spark.read.parquet(s"$work/staging"), spark.read.parquet(s"$clean/staging"))
+      assert(got.count() == expected.count() && got.exceptAll(expected).isEmpty &&
+        expected.exceptAll(got).isEmpty, "staging after the rerun")
+      assert(ledger(work) == ledger(clean))
+      assert(log(work) == log(clean) && log(work).distinct == log(work), "the schema log after the rerun")
+      val day2Cols = graft.operators.SchemaDiff.leafColumns(
+        spark.read.json(Seq(new String(drifted, "UTF-8"), new String(tiny, "UTF-8")).toDS()).schema).map(_.name)
+      assert(log(clean).exists { case (name, _) => !day2Cols.contains(name) }, "day 1 adds no column to the log")
+      assert(r.hadDrift && r.driftReport == want.driftReport, "the rerun's drift report")
+      // at-least-once: the crashed run and its rerun each notified
+      assert(sent == Seq(want.driftReport, want.driftReport))
+    } finally {
+      CrashingGraftfs.armed = None
+      unsetGraftfs()
+    }
+  }
 }
 
 /** The local filesystem under the scheme `graftfs:`, which only a
@@ -923,9 +1019,43 @@ class CrashingGraftfs extends GraftfsLocalFileSystem {
       dst.getParent.getName == "staging" && dst.getName.startsWith("file_key="))
     crashAt("state -> state.old", src.getName == "state" && dst.getName == "state.old")
     crashAt("state.tmp -> state", src.getName == "state.tmp" && dst.getName == "state")
+    crashAt("schema_log commit",
+      dst.getParent.getName == "schema_log.tmp" && dst.getName.startsWith("part-"))
     val moved = super.rename(src, dst)
     crashAt("after the swap", src.getName == "state.tmp" && dst.getName == "state")
     moved
+  }
+}
+
+/** [[GraftfsLocalFileSystem]] that runs the swap [[SwappingGraftfs.armed]]
+  * holds once, when the first stream opened on the archive it names is
+  * closed: after selection has read that archive's central directory,
+  * before staging reads the archive.
+  */
+class SwappingGraftfs extends GraftfsLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    SwappingGraftfs.take(f.getName) match {
+      case Some(swap) =>
+        new FSDataInputStream(in) {
+          override def close(): Unit = { super.close(); swap() }
+        }
+      case None => in
+    }
+  }
+}
+
+object SwappingGraftfs {
+
+  /** The archive name whose first read swaps it, and the swap. */
+  @volatile var armed: Option[(String, () => Unit)] = None
+
+  private def take(name: String): Option[() => Unit] = synchronized {
+    val swap = armed.collect { case (`name`, s) => s }
+    if (swap.isDefined) armed = None
+    swap
   }
 }
 
