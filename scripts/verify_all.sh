@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # One-command verification entry point (VERDICT r9 item 7 / r10 item 7):
-# the src/main line count, full oracle compare at sf0.01 AND sf0.1, the null-corpus
+# the src/main line count, a report of the src/main definitions only tests
+# reach (it never fails the run), full oracle compare at sf0.01 AND sf0.1, the null-corpus
 # oracle-equality sweep for the NTILE/running-sum family, the whole
 # ScalaTest suite (after the benchmark's own Python unit tests), one
 # checked etl_daily run of the benchmark, and the sf0.1 bench — single exit code, and the
@@ -19,6 +20,9 @@ step() { echo; echo "=== $* ==="; }
 
 step "src/main line count"
 git ls-files src/main | xargs wc -l | tail -1
+
+step "src/main definitions reached only from src/test (report only)"
+python3 scripts/test_only_defs.py
 
 step "oracle compare @ sf0.01"
 CHECK_JSON_OUT="CORRECTNESS_LOCAL_r${ROUND}.json" \

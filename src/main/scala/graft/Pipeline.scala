@@ -75,7 +75,9 @@ import org.apache.spark.sql.functions._
   * double-count; a crash between the two moves of the ledger swap is
   * finished by the next run's `loadState`. The schema log is swapped
   * in the same way, before the ledger, so a crash while it is written
-  * leaves the last complete log for the rerun to diff against.
+  * leaves the last complete log for the rerun to diff against. A
+  * [[maintain]] that crashed inside its compaction's directory swap is
+  * finished before the next run reads or writes staging.
   *
   * The ledger (`workDir/state`) holds one [[LedgerRow]] per processed
   * file_key: the reference's four flags plus `staged_rows`, the rows
@@ -100,8 +102,8 @@ object Pipeline {
     */
   private val ExtensionRe = "\\.[^./]*$"
 
-  /** One ledger row: the reference's per-file flags (the shape of
-    * [[operators.FileState]]) plus the rows the file left in staging.
+  /** One ledger row: the reference's per-file flags (its DynamoDB
+    * `ProcessedFiles` item) plus the rows the file left in staging.
     */
   case class LedgerRow(
       file_key: String,
@@ -294,12 +296,10 @@ object Pipeline {
       spark: SparkSession,
       workDir: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val stagingDir = s"$workDir/staging"
     // Unconditional: Sinks.compact no-ops when nothing is staged, and
-    // its recovery preamble restores a `.compact_old` left by a
-    // compaction that crashed between its two renames — a caller-side
-    // existence guard would skip exactly that recovery.
-    Sinks.compact(spark, stagingDir, targetBytes, partitionBy = Seq("file_key"))
+    // finishes a compaction that crashed between its two renames
+    // (as runOnce does before it reads or writes staging)
+    Sinks.compact(spark, s"$workDir/staging", targetBytes, partitionBy = Seq("file_key"))
   }
 
   /** One incremental run.
@@ -367,6 +367,7 @@ object Pipeline {
     //    entry_name so same-archive collisions resolve deterministically
     //    too.
     val listed = ZipIngest.archiveFiles(spark, landingDir)
+    Sinks.recoverCompaction(stagingDir, conf)
     val fresh = listed.filterNot(loadState(conf, statePath, stagingDir))
     if (fresh.isEmpty) return NoNewFiles
     val ledger = readRows(dataFiles(new Path(statePath), conf), conf, Int.MaxValue)

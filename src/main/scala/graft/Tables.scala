@@ -60,13 +60,4 @@ object Tables {
 
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Register every table as a temp view so the full surface is also
-    * reachable through `spark.sql(...)` — the engine's SQL front end.
-    */
-  def registerViews(s: SparkSession, d: String): Unit =
-    all.foreach { n =>
-      val df = if (n == "events") events(s, d) else t(s, d, n)
-      df.createOrReplaceTempView(n)
-    }
 }

@@ -21,23 +21,23 @@ import org.apache.spark.sql.expressions.Aggregator
 object WeightedMean
     extends Aggregator[(java.lang.Double, Long), (JBigDecimal, Long), java.lang.Double] {
 
-  def zero: (JBigDecimal, Long) = (JBigDecimal.ZERO.setScale(2), 0L)
+  override def zero: (JBigDecimal, Long) = (JBigDecimal.ZERO.setScale(2), 0L)
 
-  def reduce(b: (JBigDecimal, Long), in: (java.lang.Double, Long)): (JBigDecimal, Long) =
+  override def reduce(b: (JBigDecimal, Long), in: (java.lang.Double, Long)): (JBigDecimal, Long) =
     if (in._1 == null) b
     else {
       val x = new JBigDecimal(in._1.doubleValue).setScale(2, RoundingMode.HALF_UP)
       (b._1.add(x.multiply(JBigDecimal.valueOf(in._2))), b._2 + in._2)
     }
 
-  def merge(a: (JBigDecimal, Long), b: (JBigDecimal, Long)): (JBigDecimal, Long) =
+  override def merge(a: (JBigDecimal, Long), b: (JBigDecimal, Long)): (JBigDecimal, Long) =
     (a._1.add(b._1), a._2 + b._2)
 
-  def finish(r: (JBigDecimal, Long)): java.lang.Double =
+  override def finish(r: (JBigDecimal, Long)): java.lang.Double =
     if (r._2 == 0L) null else Double.box(r._1.doubleValue() / r._2.toDouble)
 
-  def bufferEncoder: Encoder[(JBigDecimal, Long)] =
+  override def bufferEncoder: Encoder[(JBigDecimal, Long)] =
     Encoders.tuple(Encoders.DECIMAL, Encoders.scalaLong)
 
-  def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
+  override def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
 }

@@ -108,8 +108,4 @@ object Flatten {
       generatorOutput = DataTypeUtils.toAttributes(program.schema), child = input)
     GraftOfRowsBridge.ofRows(df.sparkSession, generate)
   }
-
-  /** Names of columns that are still nested (diagnostic / guard). */
-  def nestedColumns(df: DataFrame): Seq[String] =
-    df.schema.fields.filter(f => isNested(f.dataType)).map(_.name).toSeq
 }

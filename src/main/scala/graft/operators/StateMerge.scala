@@ -3,18 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Per-file pipeline state, mirroring the reference's DynamoDB
-  * `ProcessedFiles` item shape
-  * (/root/reference/airflow-setup/dags/final_DAG.py:58-73,
-  *  /root/reference/airflow-setup/dags/src/lamda_function.py:40-47).
-  */
-case class FileState(
-    file_key: String,
-    ingested: Boolean,
-    crawled: Boolean,
-    transformed: Boolean,
-    loaded: Boolean)
-
 /** Incremental-processing state table as relational operators.
   *
   * The reference holds this state in DynamoDB and touches it with

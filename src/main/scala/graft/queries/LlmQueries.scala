@@ -211,8 +211,8 @@ object LlmQueries {
     * symbols once, merge (a,b)→ab, resume AFTER the merged symbol.
     * Since round 11 this routes to the codegen'd
     * [[graft.plans.BpeMergeAll]] expression: the prior HOF fold
-    * (kept below as [[bpeMergeStepHof]], equivalence-pinned in
-    * Round11BpeSpec) evaluated interpreted with a boxed accumulator
+    * (kept in Round11BpeSpec, which pins the two as equal)
+    * evaluated interpreted with a boxed accumulator
     * per symbol — chained ×5 over every corpus token it made
     * bpe_apply the bench's most expensive query. Mirrored in the
     * oracle via DuckDB list_reduce (duckBpeMerge) so both engines
@@ -221,21 +221,6 @@ object LlmQueries {
   private def bpeMergeStep(sym: Column, a: Column, b: Column): Column = {
     graft.plans.BpeFunctions.register(org.apache.spark.sql.SparkSession.active)
     graft.plans.BpeFunctions.bpeMerge(sym, a, b)
-  }
-
-  /** The pre-round-11 interpreted fold — retained ONLY as the
-    * executable specification for Round11BpeSpec's equivalence pin
-    * (the codegen expression must stay bit-identical to this
-    * construction on the real corpus).
-    */
-  private[graft] def bpeMergeStepHof(sym: Column, a: Column, b: Column): Column = {
-    val toks = filter(split(sym, " "), t => t =!= "")
-    val folded = aggregate(toks, lit(""), (acc, x) =>
-      when(acc === "", x)
-        .when(x === b && (acc === a || acc.endsWith(concat(lit(" "), a))),
-          concat(acc.substr(lit(1), length(acc) - length(a)), a, b))
-        .otherwise(concat(acc, lit(" "), x)))
-    concat(lit(" "), folded, lit(" "))
   }
 
   /** DuckDB twin of bpeMergeStep: greedy merge fold via list_reduce.
@@ -2001,9 +1986,8 @@ object LlmQueries {
     }),
 
     // Multimodal column plumbing: binary payload + typed metadata
-    // extraction (decode itself is stubbed deterministically — no
-    // image libs in this container; see graft.operators.Multimodal
-    // for the mapPartitions batch-decode shape).
+    // extraction (decode itself is stubbed deterministically here;
+    // image_decode_stats below runs a real decode).
     "multimodal_meta" -> ((s, d) => {
       import s.implicits._
       Tables.documents(s, d)
@@ -2021,8 +2005,8 @@ object LlmQueries {
     // REAL image codec round-trip, driver-oracled: each doc gets a
     // deterministic solid-color 8×6 PNG (channel values derived from
     // doc_id), ENCODED and then DECODED through javax.imageio on the
-    // executors in the mapPartitions batch shape Multimodal.scala
-    // documents — and because a solid-color image's channel means ARE
+    // executors in a mapPartitions batch (one ImageIO setup per
+    // partition) — and because a solid-color image's channel means ARE
     // its color, the oracle recomputes every output by arithmetic
     // alone. A broken reader (wrong dims, channel order, color
     // management) hash-mismatches in the driver's correctness file
@@ -2055,8 +2039,7 @@ object LlmQueries {
         .mapPartitions { it =>
           javax.imageio.ImageIO.setUseCache(false)
           it.map { case (id, bytes) =>
-            // the REAL decode under test — same reader path as
-            // Multimodal.decodeImage
+            // the REAL decode under test
             val img = javax.imageio.ImageIO.read(
               new java.io.ByteArrayInputStream(bytes))
             val (w, h) = (img.getWidth, img.getHeight)

@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 import Q._
 
 /** §2.10 streaming-shaped queries, run in batch mode (the event-time
-  * window expressions are identical in batch and Structured Streaming;
-  * the true streaming pipeline with `Trigger.AvailableNow`, watermarks
-  * and checkpointing lives in graft.streaming and is exercised by
-  * ScalaTest). Event times are exposed as epoch milliseconds: the
-  * parquet carries nanosecond timestamps, Spark truncates to µs, and
-  * both engines floor identically to ms (Q doc).
+  * window expressions are identical in batch and Structured Streaming).
+  * The pipeline's incremental path is `Pipeline.runOnce`, a daily batch
+  * with an exactly-once ledger, as the reference's is; StreamingSpec
+  * runs the stateful processors and `cdcLatestWins` here as real
+  * streams and checks them against these batch queries. Event times
+  * are exposed as epoch milliseconds: the parquet carries nanosecond
+  * timestamps, Spark truncates to µs, and both engines floor
+  * identically to ms (Q doc).
   */
 object StreamQueries {
 
@@ -143,9 +145,7 @@ object StreamQueries {
   val defs: Map[String, QueryFn] = Map(
     // The typed escape hatch of the streaming surface: per-user
     // session aggregation written as arbitrary Scala over
-    // KeyValueGroupedDataset (the batch twin of the
-    // flatMapGroupsWithState processor in
-    // graft.streaming.IncrementalPipeline). Semantically IDENTICAL to
+    // KeyValueGroupedDataset. Semantically IDENTICAL to
     // stream_session's relational session_window formulation — the
     // oracle is literally the same SQL — so the typed path is
     // cross-checked against the declarative one. Determinism inside
@@ -279,9 +279,7 @@ object StreamQueries {
     }),
 
     // Stream-stream interval join, batch analog: each purchase paired
-    // with the same user's signups in the preceding hour. The true
-    // streaming form (watermarks on both sides bounding join state) is
-    // IncrementalPipeline.purchaseAttribution + StreamingSpec.
+    // with the same user's signups in the preceding hour.
     "stream_join" -> ((s, d) => {
       import s.implicits._
       val ev = Tables.events(s, d)

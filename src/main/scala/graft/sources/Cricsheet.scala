@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.operators.Flatten
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -174,17 +173,6 @@ object Cricsheet {
         coalesce(col("del.runs.extras"), lit(0L)).as("runs_extras"),
         col("del.runs.total").as("runs_total"),
         (size(col("del.wickets")) > 0).as("is_wicket"))
-
-  /** Full flatten of the raw matches — the reference's staging shape
-    * (transformation_job.py intent), via the generic operator.
-    * Uses outer explode: with the explicit schema, optional arrays
-    * (officials, powerplays, wickets) are NULL on most matches, and
-    * the reference's plain-explode semantics would annihilate every
-    * row that misses any of them (the null-propagation case of
-    * SURVEY.md §7's cross-product risk).
-    */
-  def flattenMatches(matches: DataFrame): DataFrame =
-    Flatten.flatten(matches.drop("match_file"), outer = true)
 
   /** The warehouse analytics the pipeline exists to serve: batting
     * summary per batter (runs, balls, strike rate, dismissals).

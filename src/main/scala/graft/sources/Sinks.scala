@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.Properties
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.DataFrame
 
 /** Sink surface (SURVEY.md §2.1 S5/S6): columnar staging and JDBC
@@ -11,12 +13,6 @@ import org.apache.spark.sql.DataFrame
   * (/root/reference/airflow-setup/Scripts/etl_glue_job.py:17-43).
   */
 object Sinks {
-
-  /** Register as a managed table (the Glue-catalog analog: queryable
-    * by name via spark.table / SQL).
-    */
-  def saveAsTable(df: DataFrame, name: String): Unit =
-    df.write.mode("overwrite").saveAsTable(name)
 
   /** Bucketed managed table: pre-partitions rows by key into a fixed
     * bucket count so repeated joins/aggregations on that key plan with
@@ -55,9 +51,8 @@ object Sinks {
     * bytes-per-row, instead of funneling each oversized partition
     * through one task into one oversized file.
     *
-    * Crash safety: the swap is two renames with a recovery preamble —
-    * if a previous run died between them (path missing, `.compact_old`
-    * present) the old layout is restored before compacting, so a
+    * Crash safety: the swap is two renames, and a run that died
+    * between them is finished by [[recoverCompaction]] first, so a
     * re-run self-heals instead of failing on the missing directory.
     * Concurrency: single-writer, no-concurrent-reader by design — the
     * rename window (dir → .compact_old, tmp → dir) is not atomic for
@@ -71,21 +66,13 @@ object Sinks {
       path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       partitionBy: Seq[String] = Nil): (Int, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.sql.functions.{col, hash, pmod, lit}
+    val conf = spark.sessionState.newHadoopConf()
+    recoverCompaction(path, conf)
     val dir = new HPath(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = dir.getFileSystem(conf)
     val old = new HPath(path + ".compact_old")
-    def mv(from: HPath, to: HPath): Unit =
-      require(fs.rename(from, to), s"rename $from -> $to failed")
-    if (!fs.exists(dir) && fs.exists(old)) // crashed between the two renames
-      mv(old, dir)
-    // Nothing staged yet (and no crashed swap to recover): no-op, so
-    // callers can invoke compaction unconditionally instead of
-    // duplicating the existence/recovery probe — a caller-side
-    // fs.exists(dir) guard would SKIP the recovery above and let the
-    // next write recreate `dir`, after which this function's own
-    // cleanup would delete `old`, the only copy of the previous data.
+    // nothing written yet: a no-op, so callers compact unconditionally
     if (!fs.exists(dir)) return (0, 0)
     // (file path, bytes) of every parquet leaf under p, via the
     // recursive listing (one LIST round-trip per thousand entries on
@@ -124,53 +111,34 @@ object Sinks {
       } else df.repartition(nOut).write
     writer.mode("overwrite").parquet(tmp)
     if (fs.exists(old)) fs.delete(old, true)
-    mv(dir, old)
-    mv(new HPath(tmp), dir)
+    move(fs, dir, old)
+    move(fs, new HPath(tmp), dir)
     fs.delete(old, true)
     (before.size, parquetFiles(dir).size)
   }
 
-  /** Z-order clustered parquet write: rows sort by the Morton key of
-    * (xCol, yCol) before writing, so each output file covers a small
-    * square-ish region of the (x, y) plane and parquet min/max stats
-    * prune file reads on EITHER column — a plain sort clusters only
-    * its leading column. `nFiles` range-partitions the key so files
-    * are balanced; the key column itself is dropped from the output
-    * (it is derivable, not data).
-    *
-    * The key interleaves QUANTILE-BUCKET ids, not raw values: raw
-    * interleaving degrades badly on skewed columns (most of the curve
-    * covers empty value space, so file boxes stretch across the dense
-    * region — measured on the skewed events.value column, a 20%-mass
-    * slice pruned almost nothing). Bucket cuts come from one
-    * sampling-based `approxQuantile` pass over both columns (the
-    * scalable route — no global-sort window), and the per-row bucket
-    * index is a codegen'd comparison sum. 64 buckets per dimension is
-    * deliberately coarse: resolution finer than the file grid buys no
-    * pruning.
+  /** Finish a [[compact]] that died between its two renames: `path`
+    * missing while `path.compact_old` exists means the old layout was
+    * moved aside and the new one never moved in, so the old one moves
+    * back and the unused rewrite is deleted. Every writer of `path`
+    * calls this before it touches `path`:
+    * a write that recreated `path` first would hold only its own rows,
+    * and the next compaction would delete `.compact_old`, the only copy
+    * of everything written before. Costs one `exists` when there is
+    * nothing to finish.
     */
-  def writeZOrdered(
-      df: DataFrame,
-      path: String,
-      xCol: String,
-      yCol: String,
-      nFiles: Int,
-      buckets: Int = 64): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val Array(xCuts, yCuts) = df.na.drop(Seq(xCol, yCol)).stat
-      .approxQuantile(Array(xCol, yCol), probs, 0.001)
-    def bucketId(c: org.apache.spark.sql.Column, cuts: Array[Double]) =
-      cuts.distinct.map(cut => when(c >= lit(cut), 1L).otherwise(0L))
-        .reduceOption(_ + _).getOrElse(lit(0L))
-    df.withColumn("_zkey", graft.functions.ZOrder.zkey(
-        bucketId(col(xCol).cast("double"), xCuts),
-        bucketId(col(yCol).cast("double"), yCuts)))
-      .repartitionByRange(nFiles, col("_zkey"))
-      .sortWithinPartitions("_zkey")
-      .drop("_zkey") // projection after the sort: within-partition order survives
-      .write.mode("overwrite").parquet(path)
+  def recoverCompaction(path: String, conf: Configuration): Unit = {
+    val dir = new HPath(path)
+    val fs = dir.getFileSystem(conf)
+    val old = new HPath(path + ".compact_old")
+    if (fs.exists(old) && !fs.exists(dir)) {
+      move(fs, old, dir)
+      fs.delete(new HPath(path + ".compact_tmp"), true)
+    }
   }
+
+  private def move(fs: FileSystem, from: HPath, to: HPath): Unit =
+    require(fs.rename(from, to), s"rename $from -> $to failed")
 
   /** JDBC warehouse load. The reference hard-codes Redshift
     * credentials in source (etl_glue_job.py:20-22 — defect §4.4);

@@ -990,19 +990,79 @@ class PipelineSpec extends SparkSpecBase {
       unsetGraftfs()
     }
   }
+
+  test("a maintain that crashed inside its staging swap loses no match the next day") {
+    import spark.implicits._
+    val tiny = Files.readAllBytes(Paths.get(fixture("match_tiny.json")))
+    val full = Files.readAllBytes(Paths.get(fixture("match_full.json")))
+    def ledger(work: String): Set[Pipeline.LedgerRow] =
+      spark.read.parquet(s"$work/state").as[Pipeline.LedgerRow].collect().toSet
+
+    /** Two days and a maintain (crashing once between the two renames
+      * of its staging swap, when `crash`), then a third day and another
+      * maintain; the local dir under the work dir.
+      */
+    def days(name: String, crash: Boolean): String = {
+      val landing = tmpDir(s"mntcrash_${name}_landing")
+      val dir = tmpDir(s"mntcrash_${name}_work")
+      val work = s"graftfs:$dir"
+      zipOf(landing, "day1.zip", Map("m1.json" -> tiny, "m2.json" -> full))
+      assert(runChecked(landing, work).newFiles == 2)
+      zipOf(landing, "day2.zip", Map("m3.json" -> full))
+      assert(runChecked(landing, work).newFiles == 1)
+      if (crash) {
+        CrashingGraftfs.armed = Some("staging compaction swap")
+        val e = intercept[Exception](Pipeline.maintain(spark, work))
+        assert(CrashingGraftfs.armed.isEmpty, "the staging compaction swap never reached")
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("injected crash: staging compaction swap")), e.toString)
+      } else Pipeline.maintain(spark, work)
+      zipOf(landing, "day3.zip", Map("2024/m4.json" -> tiny))
+      assert(runChecked(landing, work).newFiles == 1)
+      assert(!Files.exists(Paths.get(s"$dir/staging.compact_tmp")), "the crashed rewrite left behind")
+      Pipeline.maintain(spark, work)
+      dir
+    }
+
+    setGraftfs(classOf[CrashingGraftfs])
+    try {
+      val clean = days("clean", crash = false)
+      val work = days("crash", crash = true)
+      val (got, want) = (spark.read.parquet(s"$work/staging"), spark.read.parquet(s"$clean/staging"))
+      assert(want.count() == 4 + 52 + 52 + 4)
+      assert(got.count() == want.count() && got.exceptAll(want).isEmpty &&
+        want.exceptAll(got).isEmpty, "staging after the crashed maintain")
+      assert(ledger(work) == ledger(clean))
+      val perKey = got.groupBy("file_key").count().as[(String, Long)].collect().toMap
+      assert(ledger(work).map(r => r.file_key -> r.staged_rows).toMap == perKey,
+        "ledger staged_rows vs staging")
+      assert(!Files.exists(Paths.get(s"$work/staging.compact_old")), "staging.compact_old left behind")
+    } finally {
+      CrashingGraftfs.armed = None
+      unsetGraftfs()
+    }
+  }
 }
 
 /** The local filesystem under the scheme `graftfs:`, which only a
   * Hadoop conf naming this class in `fs.graftfs.impl` can open.
+  * Listings hold plain statuses: the local ones load their permissions
+  * through `java.io.File`, which takes only `file:` URIs, so
+  * `FileSystem.listFiles` (compaction's listing) would fail here.
   */
 class GraftfsLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
   override def getScheme: String = "graftfs"
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(s => new FileStatus(s.getLen, s.isDirectory, s.getReplication,
+      s.getBlockSize, s.getModificationTime, s.getPath))
 }
 
 /** [[GraftfsLocalFileSystem]] that fails once, like a crash, at the
-  * stage boundary of `Pipeline.runOnce` that [[CrashingGraftfs.armed]]
-  * names. "after the swap" fails the ledger's last move after making it.
+  * stage boundary of `Pipeline.runOnce` (or `Pipeline.maintain`) that
+  * [[CrashingGraftfs.armed]] names. "after the swap" fails the ledger's
+  * last move after making it.
   */
 class CrashingGraftfs extends GraftfsLocalFileSystem {
   import CrashingGraftfs.crashAt
@@ -1021,6 +1081,7 @@ class CrashingGraftfs extends GraftfsLocalFileSystem {
     crashAt("state.tmp -> state", src.getName == "state.tmp" && dst.getName == "state")
     crashAt("schema_log commit",
       dst.getParent.getName == "schema_log.tmp" && dst.getName.startsWith("part-"))
+    crashAt("staging compaction swap", src.getName == "staging.compact_tmp" && dst.getName == "staging")
     val moved = super.rename(src, dst)
     crashAt("after the swap", src.getName == "state.tmp" && dst.getName == "state")
     moved

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM, built by
@@ -29,6 +30,12 @@ abstract class SparkSpecBase extends AnyFunSuite {
     */
   def aqeFinalSection(p: String): String =
     p.split("(?m)^\\+- == Initial Plan ==").head
+  /** Names of the columns of `df` that are still nested. */
+  def nestedColumns(df: DataFrame): Seq[String] =
+    df.schema.fields.toSeq.filter(_.dataType match {
+      case _: StructType | _: ArrayType | _: MapType => true
+      case _ => false
+    }).map(_.name)
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
   def tmpDir(prefix: String): String =

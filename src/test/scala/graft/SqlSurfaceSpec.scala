@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.VecFunctions
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The SQL front end: every table registered as a view, queries
@@ -12,8 +13,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Every table of `d` as a temp view of `s`. */
+  private def registerViews(s: SparkSession, d: String): Unit =
+    Tables.all.foreach { n =>
+      val df = if (n == "events") Tables.events(s, d) else Tables.t(s, d, n)
+      df.createOrReplaceTempView(n)
+    }
+
   test("SQL join+agg agrees with the DataFrame formulation") {
-    Tables.registerViews(spark, sf)
+    registerViews(spark, sf)
     val sql = spark.sql(
       """SELECT o_orderpriority, count(*) AS n,
         | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
@@ -31,7 +39,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("window + session SQL over the events view") {
-    Tables.registerViews(spark, sf)
+    registerViews(spark, sf)
     val n = spark.sql(
       """SELECT user_id, count(*) AS n,
         | rank() OVER (ORDER BY count(*) DESC, user_id) AS rnk
@@ -41,7 +49,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("vec_dot is callable from SQL after registration") {
     VecFunctions.register(spark)
-    Tables.registerViews(spark, sf)
+    registerViews(spark, sf)
     val d = spark.sql(
       "SELECT vec_dot(embedding, embedding) AS n2 FROM embeddings WHERE vec_id = 0")
       .head().getDouble(0)
@@ -54,7 +62,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
     // resolve vec_dot from bare SQL because injectFunction registered
     // it as a built-in at session build time
     val fresh = spark.newSession()
-    Tables.registerViews(fresh, sf)
+    registerViews(fresh, sf)
     val d = fresh.sql(
       "SELECT vec_dot(embedding, embedding) AS n2 FROM embeddings WHERE vec_id = 0")
       .head().getDouble(0)
@@ -63,7 +71,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("bloom_might_contain is callable from bare SQL and actually prunes") {
     val fresh = spark.newSession()
-    Tables.registerViews(fresh, sf)
+    registerViews(fresh, sf)
     val sel = fresh.table("orders")
       .filter($"o_totalprice" > 450000.0).select($"o_orderkey")
     val bloom = graft.plans.BloomFunctions.serialize(

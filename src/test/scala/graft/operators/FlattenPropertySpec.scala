@@ -96,7 +96,7 @@ class FlattenPropertySpec extends SparkSpecBase {
       val df = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       val flat = Flatten.flatten(df)
-      Flatten.nestedColumns(flat).isEmpty &&
+      nestedColumns(flat).isEmpty &&
         flat.columns.distinct.length == flat.columns.length
     }, 30)
   }

@@ -29,7 +29,7 @@ class FlattenSpec extends SparkSpecBase {
   test("flatten reaches fix-point on deep nesting (struct in array in struct)") {
     val df = Seq((1L, ("top", Seq((10, ("deep", 99)))))).toDF("id", "outer")
     val flat = Flatten.flatten(df)
-    assert(Flatten.nestedColumns(flat).isEmpty)
+    assert(nestedColumns(flat).isEmpty)
     assert(flat.count() == 1)
   }
 
@@ -94,7 +94,7 @@ class FlattenSpec extends SparkSpecBase {
     val df = spark.read.schema(schema).option("multiLine", "true").json(dir)
     val flat = Flatten.flatten(df)
     assert(flat.isEmpty)
-    assert(Flatten.nestedColumns(flat).isEmpty)
+    assert(nestedColumns(flat).isEmpty)
   }
 
   test("null and empty arrays, null struct elements and arrays of arrays match the model") {

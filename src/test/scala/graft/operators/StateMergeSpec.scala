@@ -2,6 +2,16 @@ package graft.operators
 
 import graft.SparkSpecBase
 
+/** Per-file pipeline state, the shape of the reference's DynamoDB
+  * `ProcessedFiles` item (final_DAG.py, lamda_function.py).
+  */
+case class FileState(
+    file_key: String,
+    ingested: Boolean,
+    crawled: Boolean,
+    transformed: Boolean,
+    loaded: Boolean)
+
 class StateMergeSpec extends SparkSpecBase {
   import spark.implicits._
 

@@ -2,11 +2,12 @@ package graft.queries
 
 import graft.{SparkSpecBase, Tables}
 import graft.functions.{TextFunctions => TF}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Round-11 BPE codegen rewrite: [[graft.plans.BpeMergeAll]] must be
   * BIT-IDENTICAL to the interpreted HOF fold it replaced
-  * ([[LlmQueries.bpeMergeStepHof]]) — on the real corpus through the
+  * ([[bpeMergeStepHof]]) — on the real corpus through the
   * full 5-rule trained chain, and on the constructed edge cases the
   * greedy merge-all semantics exist for.
   */
@@ -14,6 +15,19 @@ class Round11BpeSpec extends SparkSpecBase {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** The pre-round-11 interpreted fold, the executable specification
+    * the codegen expression must stay bit-identical to.
+    */
+  private def bpeMergeStepHof(sym: Column, a: Column, b: Column): Column = {
+    val toks = filter(split(sym, " "), t => t =!= "")
+    val folded = aggregate(toks, lit(""), (acc, x) =>
+      when(acc === "", x)
+        .when(x === b && (acc === a || acc.endsWith(concat(lit(" "), a))),
+          concat(acc.substr(lit(1), length(acc) - length(a)), a, b))
+        .otherwise(concat(acc, lit(" "), x)))
+    concat(lit(" "), folded, lit(" "))
+  }
 
   test("codegen merge == HOF fold through the trained 5-rule chain on the corpus") {
     val rules = LlmQueries.defs("bpe_merges")(spark, sf)
@@ -28,7 +42,7 @@ class Round11BpeSpec extends SparkSpecBase {
       graft.plans.BpeFunctions.bpeMerge(sym, col(s"${i}_a"), col(s"${i}_b"))
     }
     val viaHof = (1 to 5).foldLeft(start) { (sym, i) =>
-      LlmQueries.bpeMergeStepHof(sym, col(s"${i}_a"), col(s"${i}_b"))
+      bpeMergeStepHof(sym, col(s"${i}_a"), col(s"${i}_b"))
     }
     val diff = toks.select(viaExpr.as("e"), viaHof.as("h"))
       .filter($"e" =!= $"h" || $"e".isNull =!= $"h".isNull)
@@ -56,7 +70,7 @@ class Round11BpeSpec extends SparkSpecBase {
       .toDF("sym", "a", "b")
     val out = cases.select(
       graft.plans.BpeFunctions.bpeMerge($"sym", $"a", $"b").as("e"),
-      LlmQueries.bpeMergeStepHof($"sym", $"a", $"b").as("h"),
+      bpeMergeStepHof($"sym", $"a", $"b").as("h"),
       $"sym")
       .collect()
     out.foreach { r =>

@@ -43,73 +43,6 @@ class SinksSpec extends SparkSpecBase {
     spark.sql("DROP TABLE li_b"); spark.sql("DROP TABLE o_b")
   }
 
-  test("saveAsTable makes the frame queryable by name") {
-    Sinks.saveAsTable(Tables.region(spark, "/root/testdata/sf0.001"), "region_tbl")
-    assert(spark.table("region_tbl").count() == 5)
-    assert(spark.sql("SELECT count(*) FROM region_tbl").head.getLong(0) == 5)
-    spark.sql("DROP TABLE region_tbl")
-  }
-
-  test("writeZOrdered clusters both dimensions: file stats prune x AND y predicates") {
-    val out = tmpDir("zorder") + "/t"
-    // sf0.01: 10k rows -> ~625/file, enough mass that per-file ranges
-    // reflect layout, not sampling noise (value is heavily skewed)
-    val ev = Tables.events(spark, "/root/testdata/sf0.01")
-      .select($"event_id", $"user_id", floor($"value").cast("long").as("fv"))
-    Sinks.writeZOrdered(ev, out, "user_id", "fv", nFiles = 16)
-    val back = spark.read.parquet(out)
-    assert(back.count() == ev.count())
-
-    // per-file min/max — what parquet footer stats give a scan planner
-    def fileRanges(path: String): Seq[(Long, Long, Long, Long)] =
-      new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-        .map { f =>
-          spark.read.parquet(f.getAbsolutePath)
-            .agg(min($"user_id"), max($"user_id"), min($"fv"), max($"fv"))
-            .as[(Long, Long, Long, Long)].head()
-        }
-    val zRanges = fileRanges(out)
-    assert(zRanges.size > 8, s"expected ~16 files, got ${zRanges.size}")
-    def touched(ranges: Seq[(Long, Long, Long, Long)],
-        xr: Option[(Long, Long)], yr: Option[(Long, Long)]): Int =
-      ranges.count { case (xlo, xhi, ylo, yhi) =>
-        xr.forall { case (a, b) => xhi >= a && xlo <= b } &&
-          yr.forall { case (a, b) => yhi >= a && ylo <= b } }
-
-    // Pruning metric robust to curve-boundary alignment: MEAN touched
-    // fraction over the five quintile slices of each dimension
-    // (quantile-derived, since value is heavily skewed).
-    def quintiles(colName: String): Seq[(Long, Long)] = {
-      val qs = ev.stat.approxQuantile(colName, (0 to 5).map(_ / 5.0).toArray, 0.0)
-      (0 until 5).map(i => (qs(i).toLong, qs(i + 1).toLong))
-    }
-    def meanTouched(ranges: Seq[(Long, Long, Long, Long)],
-        slices: Seq[(Long, Long)], onX: Boolean): Double =
-      slices.map(s => touched(ranges,
-        if (onX) Some(s) else None, if (onX) None else Some(s)).toDouble
-        / ranges.size).sum / slices.size
-    val xQ = quintiles("user_id")
-    val yQ = quintiles("fv")
-    val zX = meanTouched(zRanges, xQ, onX = true)
-    val zY = meanTouched(zRanges, yQ, onX = false)
-    info(f"z-order mean touched: x $zX%.2f, y $zY%.2f")
-    // both dimensions prune: a 20%-mass slice reads well under the
-    // whole file set on average
-    assert(zX <= 0.65, f"x quintiles touched $zX%.2f of files")
-    assert(zY <= 0.65, f"y quintiles touched $zY%.2f of files")
-
-    // contrast: a single-column sort clusters only its leading column —
-    // y predicates touch (almost) every file there
-    val sortedOut = tmpDir("xsorted") + "/t"
-    ev.repartitionByRange(16, $"user_id").sortWithinPartitions($"user_id")
-      .write.parquet(sortedOut)
-    val sRanges = fileRanges(sortedOut)
-    val sY = meanTouched(sRanges, yQ, onX = false)
-    info(f"x-sorted mean touched: y $sY%.2f")
-    assert(sY >= 0.9, f"x-sorted layout unexpectedly pruned y: $sY%.2f")
-    assert(zY < sY, f"z-order ($zY%.2f) did not beat single-sort ($sY%.2f) on y")
-  }
-
   test("compact rewrites many small files into few, preserving data") {
     val out = tmpDir("compact") + "/t"
     val df = Tables.orders(spark, "/root/testdata/sf0.001")
